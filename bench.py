@@ -137,8 +137,10 @@ def hw_parallel_ceiling(low: int, high: int) -> float:
 
 
 def main() -> int:
+    from img2table_spark.session import default_cores
+
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = default_cores()
     sf = float(sf_dir.rstrip("/").rsplit("sf", 1)[-1]) if "sf" in sf_dir else -1.0
 
     # Soft time budget: optional stages (noisy-window retry, full-size

@@ -10,7 +10,7 @@ semantics the reference relies on (rounding, borders, anchors):
     kernels for ksize ≤ 7, BORDER_REFLECT_101
   - in_range, convert_scale_abs
   - erode/dilate/morph open/close: rect kernels, cv2 anchor semantics for
-    even sizes, van Herk O(n) sliding min/max
+    even sizes, O(n log k) boolean doubling over binary masks
   - connected_components_with_stats: 8-connectivity run-based labeling
   - bilateral_filter3: cv2.bilateralFilter(d=3) — radius-1 disc (4-neigh),
     L1 color distance, reference lines.py:98
@@ -19,63 +19,14 @@ semantics the reference relies on (rounding, borders, anchors):
     (components enclosed in holes excluded)
   - adaptive_threshold_gaussian_inv: cv2.adaptiveThreshold GAUSSIAN_C +
     THRESH_BINARY_INV — reference common.py:158
+
+Every kernel is single-threaded NumPy: a page belongs to one Spark task,
+and pages run in parallel as tasks.
 """
 
 from __future__ import annotations
 
-import os
-
 import numpy as np
-
-
-# --------------------------------------------------------- intra-page bands
-#
-# The page-scale kernels below are elementwise / separable passes over a
-# single image held by ONE Spark task, and a heavy-tailed payload corpus
-# leaves the stage tail running a single such task while every other core
-# idles (q14: the wall is one 8 s PDF page). Row/column banding with the
-# halo already present in each kernel's padded input is BIT-EXACT — every
-# output element is produced by the identical op sequence on the identical
-# operands, only the outer iteration is split — so a small thread pool
-# (NumPy releases the GIL on large ufunc loops) turns the tail task into a
-# parallel one. Thread count derives from the task's cpu AFFINITY mask, so
-# taskset-pinned scaling runs (2/8 cores) stay single-threaded and the
-# measured scaling pair is unaffected; dense production corpora (millions
-# of rows per partition, no idle tail) should set IMG2TABLE_KERNEL_THREADS=1.
-
-_POOL = None
-
-
-def _kernel_threads() -> int:
-    env = os.environ.get("IMG2TABLE_KERNEL_THREADS")
-    if env:
-        return max(1, int(env))
-    try:
-        n = len(os.sched_getaffinity(0))
-    except AttributeError:  # non-Linux
-        n = os.cpu_count() or 1
-    return max(1, min(4, n // 8))
-
-
-def _run_banded(n: int, fn, min_rows: int = 512) -> None:
-    """Run ``fn(lo, hi)`` over [0, n) split into bands, threaded when the
-    pool is enabled and the image is big enough to pay for dispatch."""
-    nt = _kernel_threads()
-    if nt <= 1 or n < min_rows * 2:
-        fn(0, n)
-        return
-    global _POOL
-    if _POOL is None:
-        from concurrent.futures import ThreadPoolExecutor
-
-        _POOL = ThreadPoolExecutor(max_workers=8)
-    nb = min(nt, max(1, n // min_rows))
-    bounds = [n * i // nb for i in range(nb + 1)]
-    futs = [
-        _POOL.submit(fn, bounds[i], bounds[i + 1]) for i in range(nb)
-    ]
-    for f in futs:
-        f.result()
 
 
 # ----------------------------------------------------------------- grayscale
@@ -96,39 +47,19 @@ def _pad_replicate(a: np.ndarray, ry: int, rx: int) -> np.ndarray:
 
 
 def _box_sum(a: np.ndarray, ky: int, kx: int) -> np.ndarray:
-    """Sum over ky×kx windows centered (odd sizes), replicate border.
-
-    Banded (see _run_banded): the axis-0 cumsum is per-column and the
-    axis-1 cumsum per-row, so banding each pass along its independent axis
-    reorders nothing — per-element f64 op sequences are identical to the
-    single-thread chain."""
+    """Sum over ky×kx windows centered (odd sizes), replicate border."""
     ry, rx = ky // 2, kx // 2
     p = _pad_replicate(a, ry, rx).astype(np.float64)
     Hp, Wp = p.shape
     c = np.zeros((Hp + 1, Wp + 1), dtype=np.float64)
-
-    def cum0(x0: int, x1: int) -> None:
-        np.cumsum(p[:, x0:x1], axis=0, out=c[1:, 1 + x0 : 1 + x1])
-
-    def cum1(y0: int, y1: int) -> None:
-        np.cumsum(c[1 + y0 : 1 + y1, 1:], axis=1, out=c[1 + y0 : 1 + y1, 1:])
-
-    _run_banded(Wp, cum0)
-    _run_banded(Hp, cum1)
+    np.cumsum(p, axis=0, out=c[1:, 1:])
+    np.cumsum(c[1:, 1:], axis=1, out=c[1:, 1:])
     H, W = a.shape
-    out = np.empty((H, W), dtype=np.float64)
-
-    def diff(y0: int, y1: int) -> None:
-        # window rows [y, y+ky), cols [x, x+kx) in padded coords — contiguous
-        # ranges, so plain slices (views) instead of fancy-index gathers
-        np.subtract(
-            c[ky + y0 : ky + y1, kx : kx + W], c[y0:y1, kx : kx + W],
-            out=out[y0:y1],
-        )
-        out[y0:y1] -= c[ky + y0 : ky + y1, 0:W]
-        out[y0:y1] += c[y0:y1, 0:W]
-
-    _run_banded(H, diff)
+    # window rows [y, y+ky), cols [x, x+kx) in padded coords — contiguous
+    # ranges, so plain slices (views) instead of fancy-index gathers
+    out = np.subtract(c[ky : ky + H, kx : kx + W], c[0:H, kx : kx + W])
+    out -= c[ky : ky + H, 0:W]
+    out += c[0:H, 0:W]
     return out
 
 
@@ -186,27 +117,13 @@ def _sep_filter(a: np.ndarray, kernel: np.ndarray, axis: int) -> np.ndarray:
     idx = _reflect101_idx(n, r)
     padded = np.take(a, idx, axis=axis)
     out = np.zeros_like(a, dtype=np.float64)
-    # banded along the non-filter axis (rows/cols there are independent, so
-    # per-element f64 tap order is unchanged); same float64 op order as the
-    # naive chain, no per-tap temporary
-    b_ax = (1 - axis) if a.ndim == 2 else None
-
-    def band(lo: int, hi: int) -> None:
-        bsl = [slice(None)] * a.ndim
-        if b_ax is not None:
-            bsl[b_ax] = slice(lo, hi)
-        ob = out[tuple(bsl)]
-        tmp = np.empty_like(ob)
-        sl = list(bsl)
-        for i, w in enumerate(kernel):
-            sl[axis] = slice(i, i + n)
-            np.multiply(padded[tuple(sl)], w, out=tmp)
-            ob += tmp
-
-    if b_ax is None:
-        band(0, n)
-    else:
-        _run_banded(a.shape[b_ax], band)
+    # same float64 op order as the naive chain, no per-tap temporary
+    tmp = np.empty_like(out)
+    sl = [slice(None)] * a.ndim
+    for i, w in enumerate(kernel):
+        sl[axis] = slice(i, i + n)
+        np.multiply(padded[tuple(sl)], w, out=tmp)
+        out += tmp
     return out
 
 
@@ -228,68 +145,37 @@ def convert_scale_abs(a: np.ndarray) -> np.ndarray:
 
 # ------------------------------------------------------------- morphology
 
-def _sliding_extreme_1d(a: np.ndarray, lo_off: int, hi_off: int, axis: int, maximum: bool, pad_val) -> np.ndarray:
-    """min/max over window [i+lo_off, i+hi_off] along axis (constant pad).
-
-    van Herk/Gil–Werman: O(n) independent of window size — the naive
-    sliding-window reduce is O(n·k) and dominates profiles for the long
-    line-detection kernels."""
-    k = hi_off - lo_off + 1
-    n = a.shape[axis]
-    pad_before = max(0, -lo_off)
-    pad_after = max(0, hi_off)
-    pad_width = [(0, 0)] * a.ndim
-    pad_width[axis] = (pad_before, pad_after)
-    p = np.pad(a, pad_width, mode="constant", constant_values=pad_val)
-    start = lo_off + pad_before  # result[i] = extreme over p[i+start : i+start+k]
-
-    m = np.moveaxis(p, axis, -1)
-    length = m.shape[-1]
-    ufunc = np.maximum if maximum else np.minimum
-    nblocks = -(-length // k)
-    padded_len = nblocks * k
-    if padded_len != length:
-        extra = np.full(m.shape[:-1] + (padded_len - length,), pad_val, dtype=m.dtype)
-        m = np.concatenate([m, extra], axis=-1)
-    blocks = m.reshape(m.shape[:-1] + (nblocks, k))
-    fwd = ufunc.accumulate(blocks, axis=-1).reshape(m.shape[:-1] + (padded_len,))
-    bwd = ufunc.accumulate(blocks[..., ::-1], axis=-1)[..., ::-1].reshape(
-        m.shape[:-1] + (padded_len,)
-    )
-    # window [j, j+k-1] = extreme(bwd[j], fwd[j+k-1])
-    idx = np.arange(start, start + n)
-    out = ufunc(bwd[..., idx], fwd[..., idx + k - 1])
-    return np.moveaxis(out, -1, axis)
-
-
 def _binary_window_1d(a: np.ndarray, lo: int, hi: int, axis: int, dilate: bool) -> np.ndarray:
-    """Binary-mask morphology via windowed counts (cumsum; O(n), SIMD-fast):
-    dilate ⇔ any set pixel in window, erode ⇔ all set. Exact for the 0/255
-    masks this engine uses everywhere."""
+    """255 where any (dilate) or every (erode) pixel of the window
+    [i+lo, i+hi] along ``axis`` is set; outside the image counts as unset
+    for dilate and set for erode.
+
+    Doubling: after the step with span s, ``p[j]`` folds pixels
+    [j, j+s), so a window of k pixels is the fold of two spans of the
+    largest power of two s <= k, at offsets 0 and k-s — log2(k) boolean
+    passes over contiguous slices, no transpose. Exact for binary masks
+    (any non-zero pixel counts as set), which is all this engine feeds it."""
     k = hi - lo + 1
-    pad_before = max(0, -lo)
-    pad_after = max(0, hi)
-    # contiguous last axis: cumsum over a strided view (axis=0 callers) is
-    # several times slower than the copy it avoids
-    m = np.ascontiguousarray(np.moveaxis(a, axis, -1))
-    n = m.shape[-1]
-    # counts are bounded by the padded axis length, so int16 is exact for
-    # any axis < 32k pixels (every page this engine renders); the narrower
-    # accumulator halves the memory traffic of the cumsum + diff below.
-    total = n + pad_before + pad_after
-    dt = np.int16 if total < 32767 else np.int32
-    on = np.empty(m.shape[:-1] + (total + 1,), dtype=dt)
-    on[..., 0] = 0
-    fill = 0 if dilate else 1  # erode pads 'set' so borders don't erode
-    on[..., 1 : 1 + pad_before] = fill
-    on[..., 1 + pad_before : 1 + pad_before + n] = m != 0
-    on[..., 1 + pad_before + n :] = fill
-    # dtype= matters: without it numpy widens integer cumsums to int64
-    cs = np.cumsum(on, axis=-1, dtype=dt)
-    start = lo + pad_before  # window for i: [i+start, i+start+k-1]
-    wsum = cs[..., start + k : start + k + n] - cs[..., start : start + n]
-    out = (255 * ((wsum > 0) if dilate else (wsum == k))).astype(np.uint8)
-    return np.moveaxis(out, -1, axis)
+    n = a.shape[axis]
+    fill = not dilate
+
+    def along(s: slice) -> tuple:
+        return (slice(None),) * axis + (s,)
+
+    # p[j] = pixel j+lo, so window i is p[i : i+k]
+    shape = list(a.shape)
+    shape[axis] = n + k - 1
+    p = np.full(shape, fill, dtype=bool)
+    src = slice(max(0, lo), min(n, n + hi))
+    np.not_equal(a[along(src)], 0, out=p[along(slice(src.start - lo, src.stop - lo))])
+    op = np.logical_or if dilate else np.logical_and
+    span = 1
+    while 2 * span <= k:
+        m = p.shape[axis] - span
+        p = op(p[along(slice(0, m))], p[along(slice(span, span + m))])
+        span *= 2
+    out = op(p[along(slice(0, n))], p[along(slice(k - span, k - span + n))])
+    return out.view(np.uint8) * np.uint8(255)
 
 
 def _morph_1d(a: np.ndarray, k: int, axis: int, dilate: bool) -> np.ndarray:
@@ -447,53 +333,63 @@ def bilateral_filter3(img: np.ndarray, sigma_color: float = 40.0, sigma_space: f
     sw_side = float(np.exp(gs * 1.0))
 
     H, W, _ = img.shape
-    iy = _reflect101_idx(H, 1)
-    ix = _reflect101_idx(W, 1)
-    p8 = img[iy][:, ix]  # (H+2, W+2, 3)
+    # planar (3, H+2, W+2) reflect101 page: every per-channel pass below
+    # runs over contiguous planes. The border rows/cols copy the image
+    # rows/cols _reflect101_idx names (mod n: a 1-pixel axis reflects onto
+    # itself)
+    p8 = np.empty((3, H + 2, W + 2), dtype=np.uint8)
+    p8[:, 1 : H + 1, 1 : W + 1] = img.transpose(2, 0, 1)
+    ix = _reflect101_idx(W, 1) % W
+    iy = _reflect101_idx(H, 1) % H
+    p8[:, 1 : H + 1, 0] = p8[:, 1 : H + 1, 1 + ix[0]]
+    p8[:, 1 : H + 1, W + 1] = p8[:, 1 : H + 1, 1 + ix[-1]]
+    p8[:, 0] = p8[:, 1 + iy[0]]
+    p8[:, H + 1] = p8[:, 1 + iy[-1]]
     p16 = p8.astype(np.int16)
+    pf = p8.astype(np.float32)
 
     # L1 color distances are integers in [0, 765], so the per-pixel
-    # float32 exp chain collapses to a 766-entry lookup (~5× faster,
-    # bit-exact: same f32 ops as `sw * np.exp(gc * d * d)` on f32 d)
+    # float32 exp chain collapses to a 766-entry lookup (bit-exact: same
+    # f32 ops as `sw * np.exp(gc * d * d)` on f32 d)
     dr = np.arange(766, dtype=np.float32)
     lut_side = (sw_side * np.exp(gc * dr * dr)).astype(np.float32)
 
-    out8 = np.empty((H, W, 3), dtype=np.uint8)
+    def edge_weights(a: np.ndarray, b: np.ndarray) -> np.ndarray:
+        # L1 distance is symmetric, so one weight per pixel edge serves both
+        # of its endpoints
+        d = np.abs(a[0] - b[0])
+        d += np.abs(a[1] - b[1])
+        d += np.abs(a[2] - b[2])
+        return lut_side[d]
 
-    def band(y0: int, y1: int) -> None:
-        h = y1 - y0
-        c16 = p16[1 + y0 : 1 + y1, 1 : W + 1]
-        # center offset: d=0 → weight exactly 1 (uint8 → f32 is exact)
-        num = p8[1 + y0 : 1 + y1, 1 : W + 1].astype(np.float32)
-        den = np.ones((h, W), dtype=np.float32)
-        # scratch buffers: the same f32/int ops as the naive chain, but per
-        # channel with explicit out= targets and the uint8 page as the
-        # multiply operand — no (H+2, W+2, 3) float copy and no (H, W, 3)
-        # temporaries. Band rows read only their own halo rows of the
-        # shared padded page, so every output pixel sees the identical op
-        # sequence regardless of the band split.
-        t16 = np.empty((h, W), dtype=np.int16)
-        d = np.empty((h, W), dtype=np.int32)
-        t32 = np.empty((h, W), dtype=np.float32)
-        for dy, dx in ((-1, 0), (1, 0), (0, -1), (0, 1)):
-            nb8 = p8[1 + dy + y0 : 1 + dy + y1, 1 + dx : 1 + dx + W]
-            nb16 = p16[1 + dy + y0 : 1 + dy + y1, 1 + dx : 1 + dx + W]
-            d[:] = 0
-            for ch in range(3):
-                np.subtract(nb16[:, :, ch], c16[:, :, ch], out=t16)
-                np.abs(t16, out=t16)
-                d += t16
-            w = lut_side[d]
-            for ch in range(3):
-                np.multiply(w, nb8[:, :, ch], out=t32)
-                num[:, :, ch] += t32
-            den += w
-        out = num / den[:, :, None]
-        np.clip(np.rint(out, out=out), 0, 255, out=out)
-        out8[y0:y1] = out
+    # wv[y]: edge between padded rows y and y+1; wh[:, x]: between padded
+    # cols x and x+1 (interior rows/cols only — the others never touch an
+    # output pixel)
+    wv = edge_weights(p16[:, : H + 1, 1 : W + 1], p16[:, 1 : H + 2, 1 : W + 1])
+    wh = edge_weights(p16[:, 1 : H + 1, : W + 1], p16[:, 1 : H + 1, 1 : W + 2])
 
-    _run_banded(H, band)
-    return out8
+    # center weight is exactly 1; neighbors accumulate up, down, left,
+    # right. The output is pinned bit-exact, so this f32 operation order
+    # must not change
+    nbrs = (
+        (wv[:H], (slice(0, H), slice(1, W + 1))),
+        (wv[1:], (slice(2, H + 2), slice(1, W + 1))),
+        (wh[:, :W], (slice(1, H + 1), slice(0, W))),
+        (wh[:, 1:], (slice(1, H + 1), slice(2, W + 2))),
+    )
+    num = pf[:, 1 : H + 1, 1 : W + 1].copy()
+    den = np.ones((H, W), dtype=np.float32)
+    t32 = np.empty((H, W), dtype=np.float32)
+    for w, (ys, xs) in nbrs:
+        for ch in range(3):
+            np.multiply(w, pf[ch, ys, xs], out=t32)
+            num[ch] += t32
+        den += w
+    num /= den
+    np.clip(np.rint(num, out=num), 0, 255, out=num)
+    # an (H, W, 3) view of the channel planes: the caller's gray
+    # conversion reads one channel at a time
+    return num.astype(np.uint8).transpose(1, 2, 0)
 
 
 # -------------------------------------------------------------- laplacian

@@ -251,25 +251,32 @@ def recompute_contours(stats: np.ndarray, chars_array: np.ndarray) -> np.ndarray
     return np.array(out, dtype=np.int64) if out else np.empty((0, 4), dtype=np.int64)
 
 
+#: rows of the pairwise matrices get_row_separations holds at once, which
+#: bounds its extra memory to O(_SEP_BLOCK · n)
+_SEP_BLOCK = 512
+
+
 def get_row_separations(stats: np.ndarray, char_length: float) -> list[float]:
     """(reference: metrics.py:330-363 — note h_overlap uses HEIGHTS, a
-    reference quirk preserved verbatim)."""
-    seps = []
-    n = len(stats)
-    for i in range(n):
-        xi, yi, wi, hi = (float(v) for v in stats[i])
-        best = 10**6
-        for j in range(n):
-            if i == j:
-                continue
-            xj, yj, wj, hj = (float(v) for v in stats[j])
-            h_overlap = min(xi + hi, xj + hj) - max(xi, xj)
-            v_i, v_j = (2 * yi + hi) / 2, (2 * yj + hj) / 2
-            if h_overlap <= char_length // 2 or v_j <= v_i:
-                continue
-            best = min(best, v_j - v_i)
-        if best < 10**6:
-            seps.append(best)
+    reference quirk preserved verbatim).
+
+    For each contour i, the smallest vertical center distance to a contour
+    j below it whose [x, x+h) span overlaps i's by more than
+    char_length // 2; contours with no such j yield nothing. Computed in
+    float64 over blocks of rows of the pairwise matrices."""
+    s = np.asarray(stats, dtype=np.float64)
+    x, y, h = s[:, 0], s[:, 1], s[:, 3]
+    right = x + h
+    v = (2 * y + h) / 2
+    min_overlap = char_length // 2
+    seps: list[float] = []
+    for b0 in range(0, len(s), _SEP_BLOCK):
+        blk = slice(b0, b0 + _SEP_BLOCK)
+        h_overlap = np.minimum(right[blk, None], right) - np.maximum(x[blk, None], x)
+        dv = v - v[blk, None]
+        dv[(h_overlap <= min_overlap) | (dv <= 0)] = np.inf
+        best = dv.min(axis=1)
+        seps.extend(best[best < 10**6].tolist())
     return seps
 
 

@@ -98,9 +98,10 @@ def get_text_table(
         }
     )
     # T3: one line per (row, col, parent); word order within a line is input
-    # order (the reference's cross join is word-major).
+    # order (the reference's cross join is word-major). Words with no parent
+    # id form one line, as in the reference's polars group_by.
     lines = (
-        pairs.groupby(["row", "col", "parent"], sort=False)
+        pairs.groupby(["row", "col", "parent"], sort=False, dropna=False)
         .agg(x1=("x1", "min"), y1=("y1", "min"), value=("value", " ".join))
         .reset_index()
     )
@@ -138,7 +139,7 @@ def get_text_cell(
         }
     )
     lines = (
-        pairs.groupby("parent", sort=False)
+        pairs.groupby("parent", sort=False, dropna=False)
         .agg(x1=("x1", "min"), y1=("y1", "min"), value=("value", list))
         .reset_index()
         .sort_values(["y1", "x1"], kind="stable")

@@ -12,6 +12,18 @@ import os
 from pyspark.sql import SparkSession
 
 
+def default_cores() -> int:
+    """``SPARK_GRAFT_CPUS`` when set, else the CPUs this process may run on
+    (its affinity mask, which taskset and container CPU sets narrow)."""
+    env = os.environ.get("SPARK_GRAFT_CPUS")
+    if env:
+        return int(env)
+    try:
+        return len(os.sched_getaffinity(0))
+    except AttributeError:  # no affinity API off Linux
+        return os.cpu_count() or 1
+
+
 def get_spark(
     app_name: str = "img2table-spark",
     cores: int | None = None,
@@ -19,7 +31,7 @@ def get_spark(
     extra_conf: dict | None = None,
 ) -> SparkSession:
     if cores is None:
-        cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+        cores = default_cores()
     if shuffle_partitions is None:
         shuffle_partitions = max(cores, 8)
     builder = (

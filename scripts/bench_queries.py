@@ -51,10 +51,10 @@ def main() -> int:
             i += 1
 
     import __spark_entry__ as entrymod
-    from img2table_spark.session import get_spark
+    from img2table_spark.session import default_cores, get_spark
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = default_cores()
     spark = get_spark(app_name="bench-queries-extra", cores=cpus)
     qs = entrymod.queries()
     if not names:

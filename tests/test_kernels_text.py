@@ -78,3 +78,68 @@ def test_single_unique_collapse(ref_tests):
     t = table_get_content(Table(rows=table_rows), words)
     assert t.nb_rows == 1 and t.nb_columns == 1
     assert t.rows[0][0].content == "Number of Coils"
+
+
+# ------------------------------------------- hOCR lines without an id
+
+_HOCR_NO_LINE_IDS = (
+    '<div class="ocr_page" id="page_1" title="bbox 0 0 200 100">'
+    '<span class="ocr_line" title="bbox 10 10 90 30">'
+    '<span class="ocrx_word" id="w1" title="bbox 10 10 40 30; x_wconf 95">alpha</span>'
+    '<span class="ocrx_word" id="w2" title="bbox 50 10 90 30; x_wconf 95">beta</span>'
+    "</span>"
+    '<span class="ocr_line" id="line_2" title="bbox 10 50 90 70">'
+    '<span class="ocrx_word" id="w3" title="bbox 10 50 40 70; x_wconf 95">gamma</span>'
+    "</span>"
+    '<span class="ocr_line" title="bbox 110 10 190 30">'
+    '<span class="ocrx_word" id="w4" title="bbox 110 10 150 30; x_wconf 95">delta</span>'
+    "</span>"
+    "</div>"
+)
+
+
+def _words_without_line_ids():
+    from img2table_spark.kernels.hocr import parse_hocr_pages
+
+    words = parse_hocr_pages([_HOCR_NO_LINE_IDS])
+    assert words.loc[words["class"] == "ocrx_word", "parent"].isna().sum() == 3
+    return words
+
+
+def test_get_text_table_keeps_words_of_lines_without_id():
+    """Words whose ocr_line has no id are one null-parent line per cell
+    (polars group_by keeps nulls), never dropped."""
+    from img2table_spark.kernels.objects import Table
+
+    table = Table(
+        rows=[
+            [Cell(0, 0, 100, 40), Cell(100, 0, 200, 40)],
+            [Cell(0, 40, 100, 80), Cell(100, 40, 200, 80)],
+        ]
+    )
+    get_text_table(_words_without_line_ids(), table)
+    assert [[c.content for c in row] for row in table.rows] == [
+        ["alpha beta", "delta"],
+        ["gamma", None],
+    ]
+
+
+def test_get_text_cell_keeps_words_of_lines_without_id():
+    words = _words_without_line_ids()
+    assert get_text_cell(words, Cell(0, 0, 200, 100)) == "alpha beta delta\ngamma"
+
+
+def test_image_payload_without_line_ids_keeps_table():
+    import base64
+    import re
+
+    from img2table_spark.kernels.encoders import encode_png
+    from img2table_spark.operators.extract import extract_payload
+
+    from tests.conftest import render_table_page
+
+    img, hocr, grid = render_table_page()
+    hocr = re.sub(r'(class="ocr_line") id="[^"]*"', r"\1", hocr)
+    payload = json.dumps({"image": base64.b64encode(encode_png(img)).decode(), "hocr": hocr})
+    tables = extract_payload(payload, "image/png")
+    assert [[c.content for c in row] for row in tables[0].rows] == grid
