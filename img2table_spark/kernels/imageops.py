@@ -7,7 +7,9 @@ semantics the reference relies on (rounding, borders, anchors):
   - sauvola_threshold: cv2.ximgproc.niBlackThreshold BINARIZATION_SAUVOLA
     (boxFilter mean/var, r=128) — reference tables/__init__.py:25-27
   - gaussian_blur: cv2.GaussianBlur sigma-from-ksize incl. the small fixed
-    kernels for ksize ≤ 7, BORDER_REFLECT_101
+    kernels for ksize ≤ 7, BORDER_REFLECT_101; both separable passes run
+    over strips of ``_BLUR_STRIP`` rows so the float64 accumulator stays in
+    cache across taps, with each pixel's multiply-add sequence unchanged
   - in_range, convert_scale_abs
   - erode/dilate/morph open/close: rect kernels, cv2 anchor semantics for
     even sizes, O(n log k) boolean doubling over binary masks
@@ -111,19 +113,34 @@ def _reflect101_idx(n: int, radius: int) -> np.ndarray:
     return idx
 
 
+#: rows per strip of ``_sep_filter``: a strip's float64 accumulator and
+#: product stay in cache across all taps (measured on 750×917 and
+#: 1111×1444 pages, ksize 3–61)
+_BLUR_STRIP = 32
+
+
 def _sep_filter(a: np.ndarray, kernel: np.ndarray, axis: int) -> np.ndarray:
     r = len(kernel) // 2
     n = a.shape[axis]
     idx = _reflect101_idx(n, r)
     padded = np.take(a, idx, axis=axis)
     out = np.zeros_like(a, dtype=np.float64)
-    # same float64 op order as the naive chain, no per-tap temporary
-    tmp = np.empty_like(out)
+    tmp = np.empty((min(_BLUR_STRIP, len(a)),) + a.shape[1:], dtype=np.float64)
+    # per pixel the same float64 multiply-add sequence as one pass over
+    # the whole image (0 + tap 0 + tap 1 ...), strip by strip along axis 0
     sl = [slice(None)] * a.ndim
-    for i, w in enumerate(kernel):
-        sl[axis] = slice(i, i + n)
-        np.multiply(padded[tuple(sl)], w, out=tmp)
-        out += tmp
+    for y0 in range(0, len(a), _BLUR_STRIP):
+        y1 = min(y0 + _BLUR_STRIP, len(a))
+        acc = out[y0:y1]
+        t = tmp[: y1 - y0]
+        sl[0] = slice(y0, y1)
+        for i, w in enumerate(kernel):
+            if axis == 0:
+                sl[0] = slice(y0 + i, y1 + i)
+            else:
+                sl[axis] = slice(i, i + n)
+            np.multiply(padded[tuple(sl)], w, out=t)
+            acc += t
     return out
 
 

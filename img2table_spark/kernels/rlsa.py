@@ -42,6 +42,33 @@ def remove_noise(cc: np.ndarray, cc_stats: np.ndarray, average_height: float, me
     return cc
 
 
+def _third_label_in_window(shape, flat, labs, p, c, l0, q0) -> np.ndarray:
+    """For each gap between raster indices p < c of one row, with end
+    labels l0 != q0: whether rows -2..+2 around it, in the columns strictly
+    between, hold a pixel labelled neither 0, -1, l0 nor q0. ``flat`` and
+    ``labs`` are the raster indices and labels of the nonzero pixels.
+
+    Counts over sorted keys, no loop over gaps: a window row holds such a
+    pixel iff its count of labelled pixels exceeds its counts of l0 and of
+    q0 together. Labelled pixels (not 0, not -1) are counted by one
+    ``searchsorted`` over their raster keys row·W+col, each label by one
+    over the label-major keys label·H·W + row·W+col. A window row outside
+    the image holds no raster key, so it counts nothing."""
+    H, W = shape
+    labelled = labs != -1
+    raster = flat[labelled]
+    by_label = np.sort(labs[labelled].astype(np.int64) * (H * W) + raster)
+    ends = (l0.astype(np.int64) * (H * W), q0.astype(np.int64) * (H * W))
+    found = np.zeros(len(p), dtype=bool)
+    for dy in range(-2, 3):
+        lo, hi = p + dy * W + 1, c + dy * W
+        n = np.searchsorted(raster, hi) - np.searchsorted(raster, lo)
+        for e in ends:
+            n -= np.searchsorted(by_label, e + hi) - np.searchsorted(by_label, e + lo)
+        found |= n > 0
+    return found
+
+
 def adaptive_rlsa(cc: np.ndarray, cc_stats: np.ndarray, a: float, th: float, c: float) -> np.ndarray:
     """(reference: rlsa.py:54-114) — per row, bridge gaps between consecutive
     CC pixels when length/height/overlap conditions hold and no third CC
@@ -52,71 +79,58 @@ def adaptive_rlsa(cc: np.ndarray, cc_stats: np.ndarray, a: float, th: float, c: 
     rlsa_img — so every pair is independent and the reference's sequential
     walk computes exactly the union of per-pair fills. The length/height/
     overlap arithmetic runs as float64 array ops (identical IEEE results to
-    the scalar chain); only pairs passing it take the per-gap window
-    membership test. Fill ranges apply via a bincount delta + cumsum.
+    the scalar chain); the pairs passing it take the ±2-row window test
+    together (``_third_label_in_window``). A pair fills [p, c) of its row;
+    pairs of consecutive pixels never overlap, so the fill is one scatter
+    of the ranges' raster indices.
     Bit-equality is pinned by the RLSA BMP golden and the differential test
     in tests/test_rlsa_vectorized.py."""
     base = (cc > 0).astype(np.uint8)
-    H, W = cc.shape
-    rs, cs_ = np.nonzero(cc)
-    if len(rs) < 2:
+    flat = np.flatnonzero(cc)
+    if len(flat) < 2:
         return base
-    labs = cc[rs, cs_]
+    rs = flat // cc.shape[1]
+    labs = cc.reshape(-1)[flat]
     same_row = rs[1:] == rs[:-1]
     lp = labs[:-1]
     lc = labs[1:]
     valid = same_row & (lp != -1) & (lc != -1)
     same = valid & (lc == lp)
-    fill_rows = [rs[1:][same]]
-    fill_start = [cs_[:-1][same]]
-    fill_end = [cs_[1:][same]]
+    fill_start = [flat[:-1][same]]
+    fill_end = [flat[1:][same]]
 
     diff = np.nonzero(valid & (lc != lp))[0]
     if len(diff):
         pl = lp[diff]
         cl = lc[diff]
-        row_d = rs[1:][diff]
-        p_pos = cs_[:-1][diff]
-        c_pos = cs_[1:][diff]
+        p_flat = flat[:-1][diff]
+        c_flat = flat[1:][diff]
         y1 = cc_stats[:, 1].astype(np.int64)
         hh = cc_stats[:, 3].astype(np.int64)
         hc = hh[cl]
         hp = hh[pl]
         mn = np.minimum(hc, hp)
-        length = c_pos - p_pos - 1
+        length = c_flat - p_flat - 1
         ratio = np.maximum(hc, hp) / np.maximum(mn, 1)
         overlap = np.minimum(y1[cl] + hc, y1[pl] + hp) - np.maximum(y1[cl], y1[pl])
         ok = (length <= a * mn) & (ratio <= th) & (overlap >= c * mn)
         cand = np.nonzero(ok)[0]
         if len(cand):
-            keep_r: list = []
-            keep_s: list = []
-            keep_e: list = []
-            for r0, p0, c0, l0, q0 in zip(
-                row_d[cand].tolist(), p_pos[cand].tolist(), c_pos[cand].tolist(),
-                cl[cand].tolist(), pl[cand].tolist(),
-            ):
-                window = cc[max(0, r0 - 2) : min(r0 + 3, H), p0 + 1 : c0]
-                # membership test unrolled: np.isin costs ~70µs/call in sort
-                # setup on these tiny windows
-                if not (
-                    (window != -1) & (window != 0) & (window != l0) & (window != q0)
-                ).any():
-                    keep_r.append(r0)
-                    keep_s.append(p0)
-                    keep_e.append(c0)
-            if keep_r:
-                fill_rows.append(np.asarray(keep_r, dtype=np.int64))
-                fill_start.append(np.asarray(keep_s, dtype=np.int64))
-                fill_end.append(np.asarray(keep_e, dtype=np.int64))
+            third = _third_label_in_window(
+                cc.shape, flat, labs, p_flat[cand], c_flat[cand], cl[cand], pl[cand]
+            )
+            keep = cand[~third]
+            fill_start.append(p_flat[keep])
+            fill_end.append(c_flat[keep])
 
-    starts = np.concatenate(fill_rows) * W + np.concatenate(fill_start)
-    ends = np.concatenate(fill_rows) * W + np.concatenate(fill_end)
-    if len(starts) == 0:
-        return base
-    delta = np.bincount(starts, minlength=H * W) - np.bincount(ends, minlength=H * W)
-    covered = np.cumsum(delta[: H * W]).reshape(H, W) > 0
-    return base | covered.astype(np.uint8)
+    starts = np.concatenate(fill_start)
+    lengths = np.concatenate(fill_end) - starts
+    # raster index of every filled pixel: range k covers starts[k] + j for
+    # j < lengths[k]
+    offsets = np.cumsum(lengths) - lengths
+    covered = np.arange(int(lengths.sum())) + np.repeat(starts - offsets, lengths)
+    base.reshape(-1)[covered] = 1
+    return base
 
 
 def find_obstacles(img: np.ndarray, min_width: float) -> np.ndarray:

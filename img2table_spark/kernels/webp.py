@@ -14,6 +14,13 @@ Coverage:
   - Alpha is decoded but dropped on output (RGB), matching cv2.imdecode's
     IMREAD_COLOR behavior in the reference.
 
+Pixel decoding is table-driven: per Huffman group, one NumPy-built table
+indexed by the next k stream bits (k = min(16, sum of the four literal
+trees' longest codes)) gives a whole literal pixel and its bit count when
+all four codes fit in k bits, so a typical pixel costs one lookup instead
+of four tree decodes. LZ77 references, color-cache symbols, longer pixels
+and invalid codes fall back to the per-symbol tree path.
+
 An independent ENCODER (``encode_webp_vp8l``) lives here too, written only
 from the spec's writer perspective (literal-only entropy coding, no
 transforms) so round-trip tests are a real two-sided check — the same
@@ -28,6 +35,7 @@ LZ77 stream built by hand in tests/test_kernels_webp.py.
 from __future__ import annotations
 
 import struct
+from array import array
 
 import numpy as np
 
@@ -264,60 +272,137 @@ def _read_huffman_groups(br: _Br, w: int, h: int, cache_bits: int, level0: bool)
     return groups, meta, meta_bits
 
 
+def _pixel_table(trees) -> tuple[int, int, list[tuple[int, int]]]:
+    """Whole-pixel lookup for one Huffman group: ``(k, mask, entries)``.
+
+    ``entries`` is indexed by the next ``k`` stream bits, k = min(16, sum of
+    the four literal trees' ``max_len``). An entry is ``(argb, bits)`` when
+    a complete literal pixel (green < 256, then red, blue, alpha) is coded
+    in 0 < ``bits`` <= k bits, and ``(0, 0)`` otherwise: LZ77 and
+    color-cache symbols, pixels longer than k bits or of zero bits, and
+    invalid codes. A code of length l fills every slot that agrees with it
+    in the low l bits, so a lookup on bits the pixel does not use still
+    finds it. Equal entries share one tuple, so a table costs 8 bytes a
+    slot, like a tree's own table."""
+    lit = trees[:4]
+    k = min(16, sum(t.max_len for t in lit))
+    idx = np.arange(1 << k, dtype=np.int64)
+    used = np.zeros(1 << k, dtype=np.int64)
+    ok = np.ones(1 << k, dtype=bool)
+    syms = []
+    for t in lit:
+        if t.single is not None:
+            syms.append(np.int64(t.single))
+            continue
+        sym_len = np.array([e or (0, 0) for e in t.table], dtype=np.int64)
+        e = (idx >> used) & ((1 << t.max_len) - 1)
+        ln = sym_len[e, 1]
+        used += ln
+        ok &= (ln > 0) & (used <= k)
+        syms.append(sym_len[e, 0])
+    g, r, b, a = syms
+    ok &= (g < 256) & (used > 0)
+    argb = np.where(ok, (a << 24) | (r << 16) | (g << 8) | b, 0)
+    uniq, inv = np.unique((np.where(ok, used, 0) << 32) | argb, return_inverse=True)
+    objs = [(v & 0xFFFFFFFF, v >> 32) for v in uniq.tolist()]
+    return k, (1 << k) - 1, list(map(objs.__getitem__, inv.tolist()))
+
+
+def _decode_symbol(br: _Br, trees, out: array, pos: int, npix: int, w: int,
+                   cache, cache_shift: int) -> int:
+    """Decodes one green symbol and what it selects (a literal pixel, an
+    LZ77 copy or a color-cache pixel) into ``out``; returns the new pixel
+    position."""
+    g_tree, r_tree, b_tree, a_tree, d_tree = trees
+    s = g_tree.decode(br)
+    if s < 256:  # literal
+        red = r_tree.decode(br)
+        blue = b_tree.decode(br)
+        alpha = a_tree.decode(br)
+        argb = (alpha << 24) | (red << 16) | (s << 8) | blue
+        out.append(argb)
+        if cache is not None:
+            cache[(0x1E35A7BD * argb & 0xFFFFFFFF) >> cache_shift] = argb
+        return pos + 1
+    if s < 280:  # LZ77 backward reference
+        length = _prefix_value(s - 256, br)
+        dist_code = _prefix_value(d_tree.decode(br), br)
+        if dist_code > 120:
+            dist = dist_code - 120
+        else:
+            dx, dy = _DIST_MAP[dist_code - 1]
+            dist = dx + dy * w
+            if dist < 1:
+                dist = 1
+        src = pos - dist
+        if src < 0 or pos + length > npix:
+            raise WebPError("LZ77 reference out of bounds")
+        if dist >= length:
+            out.extend(out[src : src + length])
+        else:
+            for i in range(src, src + length):
+                out.append(out[i])
+        if cache is not None:
+            for a in out[pos : pos + length]:
+                cache[(0x1E35A7BD * a & 0xFFFFFFFF) >> cache_shift] = a
+        return pos + length
+    # color-cache hit
+    if cache is None:
+        raise WebPError("cache symbol without color cache")
+    out.append(cache[s - 280])
+    return pos + 1
+
+
 def _decode_pixels(br: _Br, w: int, h: int, cache_bits: int, groups, meta, meta_bits):
+    """Entropy-coded pixels → ARGB uint32 array of length w*h.
+
+    Each pixel first tries its group's whole-pixel table (``_pixel_table``,
+    built the first time the group is selected), with the bit buffer held
+    in locals and refilled 7 bytes at a time; bits past the end of the data
+    read as zero. A table miss hands the reader state to ``br`` and takes
+    the per-symbol path (``_decode_symbol``), which also raises on invalid
+    codes. The reader state is handed back to ``br`` on exit, since
+    sub-image streams keep reading after this one."""
     npix = w * h
-    out = np.empty(npix, dtype=np.uint32)
+    out = array("I")
+    append = out.append
     cache = [0] * (1 << cache_bits) if cache_bits else None
     cache_shift = 32 - cache_bits if cache_bits else 0
-    pos = 0
     single = len(groups) == 1
-    g_tree, r_tree, b_tree, a_tree, d_tree = groups[0]
     mw = (w + (1 << meta_bits) - 1) >> meta_bits if meta is not None else 0
-    row_group = None
+    tables: list = [None] * len(groups)
+    data = br.data
+    byte_pos, bitbuf, bitcnt = br.byte_pos, br.bitbuf, br.bitcnt
+    gi = 0
+    if single:
+        k, mask, entries = tables[0] = _pixel_table(groups[0])
+    pos = 0
     while pos < npix:
         if not single:
             x, y = pos % w, pos // w
             gi = int(meta[(y >> meta_bits) * mw + (x >> meta_bits)])
-            g_tree, r_tree, b_tree, a_tree, d_tree = groups[gi]
-        s = g_tree.decode(br)
-        if s < 256:  # literal
-            red = r_tree.decode(br)
-            blue = b_tree.decode(br)
-            alpha = a_tree.decode(br)
-            argb = (alpha << 24) | (red << 16) | (s << 8) | blue
-            out[pos] = argb
+            table = tables[gi]
+            if table is None:
+                table = tables[gi] = _pixel_table(groups[gi])
+            k, mask, entries = table
+        if bitcnt < k:
+            bitbuf |= int.from_bytes(data[byte_pos : byte_pos + 7], "little") << bitcnt
+            byte_pos += 7
+            bitcnt += 56
+        argb, nbits = entries[bitbuf & mask]
+        if nbits:
+            append(argb)
+            bitbuf >>= nbits
+            bitcnt -= nbits
             pos += 1
             if cache is not None:
                 cache[(0x1E35A7BD * argb & 0xFFFFFFFF) >> cache_shift] = argb
-        elif s < 280:  # LZ77 backward reference
-            length = _prefix_value(s - 256, br)
-            dist_code = _prefix_value(d_tree.decode(br), br)
-            if dist_code > 120:
-                dist = dist_code - 120
-            else:
-                dx, dy = _DIST_MAP[dist_code - 1]
-                dist = dx + dy * w
-                if dist < 1:
-                    dist = 1
-            src = pos - dist
-            if src < 0 or pos + length > npix:
-                raise WebPError("LZ77 reference out of bounds")
-            if dist >= length:
-                out[pos : pos + length] = out[src : src + length]
-            else:
-                for i in range(length):
-                    out[pos + i] = out[src + i]
-            if cache is not None:
-                for i in range(pos, pos + length):
-                    a = int(out[i])
-                    cache[(0x1E35A7BD * a & 0xFFFFFFFF) >> cache_shift] = a
-            pos += length
-        else:  # color-cache hit
-            if cache is None:
-                raise WebPError("cache symbol without color cache")
-            out[pos] = cache[s - 280]
-            pos += 1
-    return out
+            continue
+        br.byte_pos, br.bitbuf, br.bitcnt = byte_pos, bitbuf, bitcnt
+        pos = _decode_symbol(br, groups[gi], out, pos, npix, w, cache, cache_shift)
+        byte_pos, bitbuf, bitcnt = br.byte_pos, br.bitbuf, br.bitcnt
+    br.byte_pos, br.bitbuf, br.bitcnt = byte_pos, bitbuf, bitcnt
+    return np.frombuffer(out, dtype=np.uint32)
 
 
 # -------------------------------------------------------------- transforms

@@ -1,9 +1,11 @@
 """Page kernels pinned bit-exact to reference bodies kept here: the
-per-neighbor bilateral chain, the cumsum window-count morphology and the
-pairwise row-separation loop that the engine's vectorized kernels replaced,
-plus integer box sums and a np.pad Gaussian for the Sauvola and blur
-passes. Inputs are adversarial shapes (1-pixel axes, 2×2, windows longer
-than the axis, all-zero and all-set masks), random RGB and a rendered page.
+per-neighbor bilateral chain, the cumsum window-count morphology, the
+pairwise row-separation loop and the whole-image separable filter that the
+engine's vectorized and strip-blocked kernels replaced, plus integer box
+sums and a np.pad Gaussian for the Sauvola and blur passes. Inputs are
+adversarial shapes (1-pixel axes, 2×2, windows longer than the axis,
+heights around the blur strip, all-zero and all-set masks), random RGB and
+a rendered page.
 """
 
 import numpy as np
@@ -315,3 +317,87 @@ def test_sep_filter_1d_unaffected(rng):
     v = rng.random(1000)
     k = io_.gaussian_kernel_1d(7)
     assert np.array_equal(io_._sep_filter(v, k, 0), _sep_filter_ref(v, k, 0))
+
+
+# ------------------------------------------------------------- blur strips
+
+
+def _sep_filter_whole(a, kernel, axis):
+    """The separable pass over the whole image at once, on the engine's
+    reflect-101 index map (which wraps, unlike np.pad, once the radius
+    exceeds the axis)."""
+    r = len(kernel) // 2
+    n = a.shape[axis]
+    padded = np.take(a, io_._reflect101_idx(n, r), axis=axis)
+    out = np.zeros_like(a, dtype=np.float64)
+    tmp = np.empty_like(out)
+    sl = [slice(None)] * a.ndim
+    for i, w in enumerate(kernel):
+        sl[axis] = slice(i, i + n)
+        np.multiply(padded[tuple(sl)], w, out=tmp)
+        out += tmp
+    return out
+
+
+def _gaussian_whole(gray, ksize):
+    kern = io_.gaussian_kernel_1d(ksize)
+    f = _sep_filter_whole(gray.astype(np.float64), kern, axis=1)
+    f = _sep_filter_whole(f, kern, axis=0)
+    return np.clip(np.rint(f), 0, 255).astype(np.uint8)
+
+
+def _check_blur(gray, ksize):
+    # the reflect-101 index map covers radii up to 2·n − 1 on an axis of n
+    # pixels (it raises IndexError beyond), so every case stays inside that
+    assert ksize // 2 <= 2 * min(gray.shape) - 1
+    got = io_.gaussian_blur_u8(gray, ksize)
+    assert np.array_equal(got, _gaussian_whole(gray, ksize))
+    if ksize // 2 <= min(gray.shape) - 1:
+        # np.pad's reflect agrees with reflect-101 while one reflection
+        # covers the radius
+        assert np.array_equal(got, _gaussian_ref(gray, ksize))
+
+
+STRIP = io_._BLUR_STRIP
+
+
+@pytest.mark.parametrize("h", [STRIP - 1, STRIP, STRIP + 1, 3 * STRIP + 5])
+@pytest.mark.parametrize("ksize", [3, 5, 23, 61])
+def test_gaussian_strip_heights(rng, h, ksize):
+    _check_blur(rng.integers(0, 256, (h, 300)).astype(np.uint8), ksize)
+
+
+@pytest.mark.parametrize("h", [64, 127, 128, 2 * STRIP + 200])
+def test_gaussian_threshold_dark_areas_cap(rng, h):
+    # ksize 255 is threshold_dark_areas' cap
+    _check_blur(rng.integers(0, 256, (h, 260)).astype(np.uint8), 255)
+
+
+@pytest.mark.parametrize("shape", [(1, 1), (1, 40), (40, 1), (300, 1), (2, 300)])
+def test_gaussian_one_pixel_axes(rng, shape):
+    _check_blur(rng.integers(0, 256, shape).astype(np.uint8), 3)
+
+
+@pytest.mark.parametrize("h,ksize", [(20, 31), (20, 61), (STRIP + 1, 61), (40, 79)])
+def test_gaussian_kernel_longer_than_height(rng, h, ksize):
+    # ksize > H: the reflected border reaches past the middle of the axis,
+    # and wraps around it once the radius exceeds H - 1
+    _check_blur(rng.integers(0, 256, (h, 257)).astype(np.uint8), ksize)
+
+
+@pytest.mark.parametrize("h", [STRIP - 1, STRIP, STRIP + 1, 2 * STRIP])
+@pytest.mark.parametrize("axis", [0, 1])
+def test_sep_filter_strips_match_reference(rng, h, axis):
+    a = rng.random((h, 77)) * 255
+    for ksize in (3, 7, 21, 2 * h - 1, 4 * h - 1):
+        k = io_.gaussian_kernel_1d(ksize)
+        got = io_._sep_filter(a, k, axis)
+        assert np.array_equal(got, _sep_filter_whole(a, k, axis))
+        if ksize // 2 <= a.shape[axis] - 1:
+            assert np.array_equal(got, _sep_filter_ref(a, k, axis))
+
+
+def test_gaussian_page_strips_exact(page):
+    gray = io_.rgb2gray(page[1])
+    for ksize in (3, 23, 61, 255):
+        _check_blur(gray, ksize)

@@ -3,11 +3,15 @@ plus HAND-BUILT bitstreams for every advanced decoder feature the encoder
 does not emit (all four transforms, LZ77 linear + 2D-map distances, color
 cache, meta-Huffman partitioning). The reference accepts WebP opaquely via
 cv2.imdecode (document/image.py:25-32); pipeline parity is pinned by the
-golden-twin extraction test at the bottom."""
+golden-twin extraction test. The table-driven pixel decoder is pinned to
+the per-symbol decoder it replaced, kept here, on random hand-built
+streams (long codes, zero-bit trees, color cache, LZ77, two Huffman
+groups, truncation and invalid codes)."""
 
 import numpy as np
 import pytest
 
+import img2table_spark.kernels.webp as webp_
 from img2table_spark.kernels.image_doc import ImageDecodeError, decode_image_bytes
 from img2table_spark.kernels.png import decode_png
 from img2table_spark.kernels.webp import (
@@ -348,3 +352,303 @@ def test_fuzz_corrupt_streams_fail_cleanly():
             decode_webp(bytes(good[:cut]))
         except WebPError:
             pass
+
+
+# --------------------------- whole-pixel table vs the per-symbol reference
+
+
+def _decode_pixels_ref(br, w, h, cache_bits, groups, meta, meta_bits):
+    """The per-symbol pixel decoder: one tree lookup per green, red, blue
+    and alpha symbol."""
+    npix = w * h
+    out = np.empty(npix, dtype=np.uint32)
+    cache = [0] * (1 << cache_bits) if cache_bits else None
+    cache_shift = 32 - cache_bits if cache_bits else 0
+    pos = 0
+    single = len(groups) == 1
+    g_tree, r_tree, b_tree, a_tree, d_tree = groups[0]
+    mw = (w + (1 << meta_bits) - 1) >> meta_bits if meta is not None else 0
+    while pos < npix:
+        if not single:
+            x, y = pos % w, pos // w
+            gi = int(meta[(y >> meta_bits) * mw + (x >> meta_bits)])
+            g_tree, r_tree, b_tree, a_tree, d_tree = groups[gi]
+        s = g_tree.decode(br)
+        if s < 256:  # literal
+            red = r_tree.decode(br)
+            blue = b_tree.decode(br)
+            alpha = a_tree.decode(br)
+            argb = (alpha << 24) | (red << 16) | (s << 8) | blue
+            out[pos] = argb
+            pos += 1
+            if cache is not None:
+                cache[(0x1E35A7BD * argb & 0xFFFFFFFF) >> cache_shift] = argb
+        elif s < 280:  # LZ77 backward reference
+            length = webp_._prefix_value(s - 256, br)
+            dist_code = webp_._prefix_value(d_tree.decode(br), br)
+            if dist_code > 120:
+                dist = dist_code - 120
+            else:
+                dx, dy = webp_._DIST_MAP[dist_code - 1]
+                dist = dx + dy * w
+                if dist < 1:
+                    dist = 1
+            src = pos - dist
+            if src < 0 or pos + length > npix:
+                raise WebPError("LZ77 reference out of bounds")
+            if dist >= length:
+                out[pos : pos + length] = out[src : src + length]
+            else:
+                for i in range(length):
+                    out[pos + i] = out[src + i]
+            if cache is not None:
+                for i in range(pos, pos + length):
+                    a = int(out[i])
+                    cache[(0x1E35A7BD * a & 0xFFFFFFFF) >> cache_shift] = a
+            pos += length
+        else:  # color-cache hit
+            if cache is None:
+                raise WebPError("cache symbol without color cache")
+            out[pos] = cache[s - 280]
+            pos += 1
+    return out
+
+
+def _decode_argb(payload):
+    """ARGB pixels of a VP8L payload and the bit position the reader ends
+    at, or the WebPError message."""
+    br = webp_._Br(payload)
+    br.read(8)
+    w = br.read(14) + 1
+    h = br.read(14) + 1
+    br.read(4)
+    try:
+        argb = webp_._decode_image_stream(br, w, h, level0=True)
+    except WebPError as e:
+        return str(e)
+    return argb, 8 * br.byte_pos - br.bitcnt
+
+
+def _assert_matches_ref(payload, monkeypatch):
+    got = _decode_argb(payload)
+    with monkeypatch.context() as m:
+        m.setattr(webp_, "_decode_pixels", _decode_pixels_ref)
+        want = _decode_argb(payload)
+    if isinstance(want, str):
+        assert got == want
+        return want
+    assert not isinstance(got, str), got
+    assert np.array_equal(got[0], want[0]) and got[1] == want[1]
+    return want
+
+
+def _prefix_code(v):
+    """(prefix symbol, extra bit count, extra bits) of an LZ77 length or
+    distance code v >= 1 (the inverse of ``_prefix_value``)."""
+    if v <= 4:
+        return v - 1, 0, 0
+    d = v - 1
+    hb = d.bit_length() - 1
+    extra = hb - 1
+    return 2 * hb + ((d >> extra) & 1), extra, d & ((1 << extra) - 1)
+
+
+def _lengths(rng, n_symbols, used, max_len):
+    """A code over ``used`` symbols with lengths up to ``max_len``: Huffman
+    lengths of random, widely spread frequencies."""
+    freqs = [0] * n_symbols
+    for s in used:
+        freqs[s] = int(2 ** rng.uniform(0, max_len + 2))
+    return webp_._huff_lengths(freqs, max_len)
+
+
+def _vp8l_stream(w, h, group_lengths, ops, cache_bits=0, meta=None, meta_bits=2):
+    """A VP8L payload, no transforms, with one set of five trees per group
+    and pixel ops ``("lit", g, r, b, a)``, ``("cache", index)`` or
+    ``("copy", length, dist_code)``; ``meta`` is the per-block group index
+    image."""
+    bw = _Bw()
+    vp8l_header(bw, w, h)
+    bw.write(0, 1)  # no transforms
+    bw.write(1 if cache_bits else 0, 1)
+    if cache_bits:
+        bw.write(cache_bits, 4)
+    bw.write(meta is not None, 1)
+    if meta is not None:
+        bw.write(meta_bits - 2, 3)
+        write_literal_stream(bw, np.asarray(meta, dtype=np.uint32) << 8, level0=False)
+    codes = [[_write_tree(bw, lengths) for lengths in group] for group in group_lengths]
+    mw = (w + (1 << meta_bits) - 1) >> meta_bits
+    pos = 0
+    for op in ops:
+        gi = 0
+        if meta is not None:
+            y, x = divmod(pos, w)
+            gi = int(meta[(y >> meta_bits) * mw + (x >> meta_bits)])
+        g, r, b, a, d = codes[gi]
+        if op[0] == "lit":
+            for tree, sym in zip((g, r, b, a), op[1:]):
+                bw.write_code(*tree[sym])
+            pos += 1
+        elif op[0] == "cache":
+            bw.write_code(*g[280 + op[1]])
+            pos += 1
+        else:
+            _, length, dist_code = op
+            sym, nx, xv = _prefix_code(length)
+            bw.write_code(*g[256 + sym])
+            bw.write(xv, nx)
+            sym, nx, xv = _prefix_code(dist_code)
+            bw.write_code(*d[sym])
+            bw.write(xv, nx)
+            pos += length
+    return bw.finish()
+
+
+def _random_ops(rng, npix, palette, w, cache_bits=0, copy_frac=0.0):
+    """Random literals from ``palette`` (rows g, r, b, a), color-cache hits
+    and in-bounds LZ77 copies (overlapping ones included) filling npix
+    pixels."""
+    ops = []
+    pos = 0
+    while pos < npix:
+        u = rng.random()
+        if pos and u < copy_frac:
+            length = int(rng.integers(1, min(npix - pos, 40) + 1))
+            if rng.random() < 0.5:
+                dist_code = 120 + int(rng.integers(1, pos + 1))
+            else:  # 2D map entry: keep those whose distance is in bounds
+                cands = [
+                    c for c in range(1, 121)
+                    if max(1, webp_._DIST_MAP[c - 1][0] + webp_._DIST_MAP[c - 1][1] * w) <= pos
+                ]
+                if not cands:
+                    continue
+                dist_code = int(rng.choice(cands))
+            ops.append(("copy", length, dist_code))
+            pos += length
+        elif cache_bits and u < copy_frac + 0.3:
+            ops.append(("cache", int(rng.integers(0, 1 << cache_bits))))
+            pos += 1
+        else:
+            ops.append(("lit",) + tuple(int(v) for v in palette[int(rng.integers(len(palette)))]))
+            pos += 1
+    return ops
+
+
+def _group_lengths(rng, ops, max_len, cache_bits=0):
+    """One group's five code-length lists, covering every symbol ``ops``
+    uses."""
+    n_green = 280 + ((1 << cache_bits) if cache_bits else 0)
+    used = [set(), set(), set(), set(), set()]
+    for op in ops:
+        if op[0] == "lit":
+            for u, s in zip(used, op[1:]):
+                u.add(s)
+        elif op[0] == "cache":
+            used[0].add(280 + op[1])
+        else:
+            used[0].add(256 + _prefix_code(op[1])[0])
+            used[4].add(_prefix_code(op[2])[0])
+    if not used[4]:
+        used[4].add(0)
+    sizes = (n_green, 256, 256, 256, 40)
+    return [_lengths(rng, n, sorted(u), max_len) for n, u in zip(sizes, used)]
+
+
+def _palette(rng, n, alpha_values=(255,)):
+    g, r, b = (rng.integers(0, 256, n) for _ in range(3))
+    a = rng.choice(alpha_values, n)
+    return np.stack([g, r, b, a], axis=1)
+
+
+@pytest.mark.parametrize("seed", range(4))
+def test_pixel_table_long_codes_fall_back(seed, monkeypatch):
+    # 40-color palettes with codes up to 15 bits: many whole pixels exceed
+    # k = 16 bits and take the per-symbol path
+    rng = np.random.default_rng(seed)
+    w, h = 23, 17
+    ops = _random_ops(rng, w * h, _palette(rng, 40, (0, 7, 255)), w)
+    lengths = _group_lengths(rng, ops, 15)
+    assert max(max(L) for L in lengths[:4]) >= 12
+    argb, _ = _assert_matches_ref(_vp8l_stream(w, h, [lengths], ops), monkeypatch)
+    want = [(a << 24) | (r << 16) | (g << 8) | b for _, g, r, b, a in ops]
+    assert argb.tolist() == want
+
+
+@pytest.mark.parametrize("n_colors", [1, 2, 3])
+def test_pixel_table_zero_bit_trees(n_colors, monkeypatch):
+    # one color: all four trees single-symbol, every pixel costs 0 bits;
+    # two and three colors: single-symbol alpha (and maybe other channels)
+    rng = np.random.default_rng(n_colors)
+    w, h = 9, 7
+    pal = _palette(rng, n_colors)
+    pal[:, 1] = pal[0, 1]  # red is one symbol
+    ops = _random_ops(rng, w * h, pal, w)
+    lengths = _group_lengths(rng, ops, 15)
+    argb, _ = _assert_matches_ref(_vp8l_stream(w, h, [lengths], ops), monkeypatch)
+    assert len(argb) == w * h
+
+
+@pytest.mark.parametrize("cache_bits", [1, 4, 11])
+def test_pixel_table_color_cache_mixed(cache_bits, monkeypatch):
+    rng = np.random.default_rng(cache_bits)
+    w, h = 31, 9
+    ops = _random_ops(rng, w * h, _palette(rng, 12), w, cache_bits=cache_bits)
+    # short codes: most literals are table hits that update the cache
+    lengths = _group_lengths(rng, ops, 7, cache_bits)
+    stream = _vp8l_stream(w, h, [lengths], ops, cache_bits=cache_bits)
+    _assert_matches_ref(stream, monkeypatch)
+
+
+@pytest.mark.parametrize("seed", range(3))
+def test_pixel_table_lz77_copies(seed, monkeypatch):
+    rng = np.random.default_rng(100 + seed)
+    w, h = 16, 12
+    ops = _random_ops(rng, w * h, _palette(rng, 6), w, cache_bits=3, copy_frac=0.25)
+    assert any(op[0] == "copy" for op in ops)
+    lengths = _group_lengths(rng, ops, 15, cache_bits=3)
+    _assert_matches_ref(_vp8l_stream(w, h, [lengths], ops, cache_bits=3), monkeypatch)
+
+
+def test_pixel_table_two_groups(monkeypatch):
+    # the two groups get different codes for the same symbols (short and
+    # long), and group 1 is not selected until pixel 4
+    rng = np.random.default_rng(5)
+    w, h = 12, 10
+    meta = np.array([0, 1, 1, 1, 0, 0, 1, 0, 1], dtype=np.uint32)  # 3×3 blocks of 4×4
+    ops = _random_ops(rng, w * h, _palette(rng, 20, (9, 255)), w, copy_frac=0.1)
+    short = _group_lengths(rng, ops, 6)
+    long_ = _group_lengths(rng, ops, 15)
+    stream = _vp8l_stream(w, h, [short, long_], ops, meta=meta)
+    _assert_matches_ref(stream, monkeypatch)
+
+
+def test_pixel_table_truncated_stream_reads_zero_bits(monkeypatch):
+    rng = np.random.default_rng(8)
+    w, h = 40, 30
+    ops = _random_ops(rng, w * h, _palette(rng, 10), w)
+    stream = _vp8l_stream(w, h, [_group_lengths(rng, ops, 15)], ops)
+    decoded = 0
+    for cut in range(len(stream) // 2, len(stream), 7):
+        if not isinstance(_assert_matches_ref(stream[:cut], monkeypatch), str):
+            decoded += 1
+    assert decoded  # some cuts decode the missing tail from zero bits
+
+
+def test_pixel_table_incomplete_code_raises(monkeypatch):
+    # green code {0: "0", 1: "10", 256: "110"} leaves "111" unassigned
+    gl = [0] * 280
+    gl[0], gl[1], gl[256] = 1, 2, 3
+    one = [1] + [0] * 255
+    bw = _Bw()
+    vp8l_header(bw, 6, 1)
+    bw.write(0, 3)  # no transforms, no cache, no meta
+    g_codes = [_write_tree(bw, L) for L in (gl, one, one, one, [1] + [0] * 39)][0]
+    for sym in (0, 1, 0):
+        bw.write_code(*g_codes[sym])
+    bw.write(7, 3)  # the unassigned code
+    payload = bw.finish()
+    with pytest.raises(WebPError, match="invalid huffman code"):
+        decode_webp(wrap_vp8l_payload(payload))
+    assert "invalid huffman code" in _assert_matches_ref(payload, monkeypatch)

@@ -1,9 +1,13 @@
 """Differential pin: the vectorized adaptive_rlsa (r6) against the
 reference-shaped sequential walk it replaced, over adversarial synthetic
-component maps (obstacle -1 labels, touching runs, tall/short mixes)."""
+component maps (obstacle -1 labels, touching runs, tall/short mixes,
+gaps on the first and last rows), and against the per-gap window loop it
+replaced on rendered pages."""
 
 import numpy as np
+import pytest
 
+import img2table_spark.kernels.rlsa as rlsa_
 from img2table_spark.kernels.rlsa import adaptive_rlsa
 
 
@@ -125,3 +129,182 @@ def test_adaptive_rlsa_empty_and_single():
     stats2 = np.array([[0, 0, 1, 1, 0], [2, 2, 1, 1, 1]], dtype=np.int64)
     out = adaptive_rlsa(cc, stats2, 3.5, 2.5, 0.5)
     assert out[2, 2] == 1 and out.sum() == 1
+
+
+# ------------------------------------------------- gap windows, edge rows
+
+
+def _adaptive_rlsa_loop(cc, cc_stats, a, th, c):
+    """adaptive_rlsa with a Python loop over candidate gaps, each scanning
+    its ±2-row window for a third label."""
+    base = (cc > 0).astype(np.uint8)
+    H, W = cc.shape
+    rs, cs_ = np.nonzero(cc)
+    if len(rs) < 2:
+        return base
+    labs = cc[rs, cs_]
+    same_row = rs[1:] == rs[:-1]
+    lp = labs[:-1]
+    lc = labs[1:]
+    valid = same_row & (lp != -1) & (lc != -1)
+    same = valid & (lc == lp)
+    fill_rows = [rs[1:][same]]
+    fill_start = [cs_[:-1][same]]
+    fill_end = [cs_[1:][same]]
+    diff = np.nonzero(valid & (lc != lp))[0]
+    if len(diff):
+        pl = lp[diff]
+        cl = lc[diff]
+        row_d = rs[1:][diff]
+        p_pos = cs_[:-1][diff]
+        c_pos = cs_[1:][diff]
+        y1 = cc_stats[:, 1].astype(np.int64)
+        hh = cc_stats[:, 3].astype(np.int64)
+        hc = hh[cl]
+        hp = hh[pl]
+        mn = np.minimum(hc, hp)
+        length = c_pos - p_pos - 1
+        ratio = np.maximum(hc, hp) / np.maximum(mn, 1)
+        overlap = np.minimum(y1[cl] + hc, y1[pl] + hp) - np.maximum(y1[cl], y1[pl])
+        ok = (length <= a * mn) & (ratio <= th) & (overlap >= c * mn)
+        cand = np.nonzero(ok)[0]
+        if len(cand):
+            keep_r, keep_s, keep_e = [], [], []
+            for r0, p0, c0, l0, q0 in zip(
+                row_d[cand].tolist(), p_pos[cand].tolist(), c_pos[cand].tolist(),
+                cl[cand].tolist(), pl[cand].tolist(),
+            ):
+                window = cc[max(0, r0 - 2) : min(r0 + 3, H), p0 + 1 : c0]
+                if not (
+                    (window != -1) & (window != 0) & (window != l0) & (window != q0)
+                ).any():
+                    keep_r.append(r0)
+                    keep_s.append(p0)
+                    keep_e.append(c0)
+            if keep_r:
+                fill_rows.append(np.asarray(keep_r, dtype=np.int64))
+                fill_start.append(np.asarray(keep_s, dtype=np.int64))
+                fill_end.append(np.asarray(keep_e, dtype=np.int64))
+    starts = np.concatenate(fill_rows) * W + np.concatenate(fill_start)
+    ends = np.concatenate(fill_rows) * W + np.concatenate(fill_end)
+    if len(starts) == 0:
+        return base
+    delta = np.bincount(starts, minlength=H * W) - np.bincount(ends, minlength=H * W)
+    covered = np.cumsum(delta[: H * W]).reshape(H, W) > 0
+    return base | covered.astype(np.uint8)
+
+
+def _tight_stats(cc, n_labels):
+    stats = np.zeros((n_labels + 1, 5), dtype=np.int64)
+    for lab in range(1, n_labels + 1):
+        ys, xs = np.nonzero(cc == lab)
+        if len(ys) == 0:
+            stats[lab] = [0, 0, 1, 1, 0]
+            continue
+        stats[lab] = [xs.min(), ys.min(), xs.max() - xs.min() + 1, ys.max() - ys.min() + 1, len(ys)]
+    return stats
+
+
+def _gap_map(H, row, extras):
+    """Labels 1 (cols 2-5) and 2 (cols 9-12) on ``row``, a 3-pixel gap
+    between them, plus ``extras``: (label, row, col) pixels; rows outside
+    the image are dropped."""
+    cc = np.zeros((H, 16), dtype=np.int32)
+    cc[row, 2:6] = 1
+    cc[row, 9:13] = 2
+    for lab, r, c in extras:
+        if 0 <= r < H:
+            cc[r, c] = lab
+    return cc, _tight_stats(cc, 3)
+
+
+def _gap_filled(cc, stats, row):
+    got = adaptive_rlsa(cc, stats, 3.5, 3.5, 0.0)
+    assert np.array_equal(got, _sequential(cc, stats, 3.5, 3.5, 0.0))
+    assert np.array_equal(got, _adaptive_rlsa_loop(cc, stats, 3.5, 3.5, 0.0))
+    return bool(got[row, 6:9].all())
+
+
+EDGE_ROWS = [(9, 0), (9, 1), (9, 7), (9, 8), (1, 0), (2, 1), (3, 1)]
+
+
+@pytest.mark.parametrize("H,row", EDGE_ROWS)
+def test_gap_on_edge_rows_third_label(H, row):
+    assert _gap_filled(*_gap_map(H, row, []), row)
+    for dy in (-3, -2, -1, 1, 2, 3):
+        if not 0 <= row + dy < H:
+            continue
+        # a third label in the window (even one touching only a ±2 row)
+        # blocks the fill; one three rows away does not
+        for col in (6, 8):
+            cc, stats = _gap_map(H, row, [(3, row + dy, col)])
+            assert _gap_filled(cc, stats, row) == (abs(dy) == 3), (dy, col)
+        # at the gap's end columns it is outside the window
+        cc, stats = _gap_map(H, row, [(3, row + dy, 5), (3, row + dy, 9)])
+        assert _gap_filled(cc, stats, row)
+
+
+@pytest.mark.parametrize("H,row", EDGE_ROWS)
+def test_gap_window_with_end_labels_and_obstacles(H, row):
+    # extra pixels of the two end labels and -1 obstacles in the window
+    # rows never block the fill
+    for extras in (
+        [(1, row + 1, 7)],
+        [(2, row - 1, 6), (2, row - 2, 8)],
+        [(1, row + 2, 6), (2, row + 2, 7), (1, row - 1, 8)],
+        [(-1, row + 1, 7), (-1, row - 2, 6)],
+        [(-1, row - 1, 6), (1, row + 1, 6), (2, row + 2, 8), (-1, row + 2, 7)],
+    ):
+        cc, stats = _gap_map(H, row, extras)
+        assert _gap_filled(cc, stats, row), extras
+    # an obstacle on the gap row splits the gap: nothing to bridge
+    cc, stats = _gap_map(H, row, [(-1, row, 7)])
+    assert not _gap_filled(cc, stats, row)
+
+
+def test_adaptive_rlsa_short_maps_match_sequential():
+    # 1-6 rows, dense labels: most windows are clipped at the top or bottom
+    # and hold pixels of the end labels, third labels and obstacles
+    rng = np.random.default_rng(23)
+    for trial in range(300):
+        H = int(rng.integers(1, 7))
+        W = int(rng.integers(2, 40))
+        n = int(rng.integers(1, 6))
+        cc = rng.integers(0, n + 1, (H, W)).astype(np.int32)
+        cc[rng.random((H, W)) < 0.5] = 0
+        cc[rng.random((H, W)) < 0.05] = -1
+        stats = _tight_stats(cc, n)
+        for a, th, c in ((3.5, 2.5, 0.5), (8.0, 8.0, 0.0)):
+            got = adaptive_rlsa(cc, stats, a, th, c)
+            assert np.array_equal(got, _sequential(cc, stats, a, th, c)), trial
+
+
+def _pages():
+    from img2table_spark.kernels.encoders import build_borderless_text_pdf
+    from img2table_spark.kernels.pdf_doc import PdfDocument, render_pdf_text_page
+
+    from tests.conftest import render_table_page
+
+    doc = PdfDocument(build_borderless_text_pdf())
+    return {
+        "ruled": render_table_page()[0],
+        "borderless": render_pdf_text_page(doc, doc.pages()[0]),
+    }
+
+
+@pytest.mark.parametrize("name", ["ruled", "borderless"])
+def test_adaptive_rlsa_pages_match_loop(name, monkeypatch):
+    # every adaptive_rlsa call identify_text_mask makes on a rendered page
+    from img2table_spark.kernels.document import extract_image_tables
+
+    calls = []
+
+    def both(cc, cc_stats, a, th, c):
+        got = adaptive_rlsa(cc, cc_stats, a, th, c)
+        assert np.array_equal(got, _adaptive_rlsa_loop(cc, cc_stats, a, th, c))
+        calls.append(int(got.sum()))
+        return got
+
+    monkeypatch.setattr(rlsa_, "adaptive_rlsa", both)
+    extract_image_tables(_pages()[name], borderless_tables=True)
+    assert len(calls) == 3 and all(calls)
