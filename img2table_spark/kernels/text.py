@@ -180,45 +180,3 @@ def is_relevant_table(table: Table) -> bool:
         return table.nb_rows >= 2 and table.nb_columns >= 3
     return max(table.nb_rows, table.nb_columns) >= 2
 
-
-def table_to_record(table: Table) -> dict:
-    """Serialize a Table to the engine output row (FIXTURES.md §2)."""
-    cells = []
-    x1 = y1 = x2 = y2 = None
-    for r, row in enumerate(table.rows):
-        for c, cell in enumerate(row):
-            cx1, cy1, cx2, cy2 = cell.x1, cell.y1, cell.x2, cell.y2
-            cells.append(
-                {
-                    "row": r,
-                    "col": c,
-                    "x1": cx1,
-                    "y1": cy1,
-                    "x2": cx2,
-                    "y2": cy2,
-                    "value": cell.content,
-                }
-            )
-            if x1 is None:
-                x1, y1, x2, y2 = cx1, cy1, cx2, cy2
-            else:
-                if cx1 < x1:
-                    x1 = cx1
-                if cy1 < y1:
-                    y1 = cy1
-                if cx2 > x2:
-                    x2 = cx2
-                if cy2 > y2:
-                    y2 = cy2
-    if table.rows and not cells:  # rows of zero width: match min()'s error
-        raise ValueError("min() arg is an empty sequence")
-    return {
-        "x1": x1,
-        "y1": y1,
-        "x2": x2,
-        "y2": y2,
-        "title": table.title,
-        "cells": cells,
-        "n_rows": table.nb_rows,
-        "n_cols": table.nb_columns,
-    }

@@ -3,28 +3,28 @@
 When OCR runs as a separate system (any engine normalized to the 10-column
 word schema — SURVEY.md §2.1), words arrive as their OWN table keyed by
 (conv_id, turn_idx) rather than embedded in the payload. This operator joins
-geometry with words per turn using a cogrouped ``applyInPandas`` — the
+geometry with words per turn using a cogrouped ``applyInArrow`` — the
 corpus-scale version of T2–T6: one shuffle of each side on the turn key,
 then the reference's exact in-pandas assignment kernels per group.
 """
 
 from __future__ import annotations
 
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 
-from img2table_spark.kernels.html_io import table_to_html
 from img2table_spark.kernels.objects import Cell, Table
-from img2table_spark.kernels.text import table_get_content, table_to_record
+from img2table_spark.kernels.text import table_get_content
+from img2table_spark.operators.extract import _TableRows
 from img2table_spark.schema import EXTRACTED_SCHEMA
 
 
-def _assign(key, tables_pdf: pd.DataFrame, words_pdf: pd.DataFrame) -> pd.DataFrame:
-    conv_id, turn_idx = key
-    cols = EXTRACTED_SCHEMA.fieldNames()
-    rows: list[dict] = []
+def _assign(key, tables: pa.Table, words: pa.Table) -> pa.Table:
+    conv_id, turn_idx = (k.as_py() for k in key)
+    words_pdf = words.to_pandas()
+    out = _TableRows()
     out_idx = 0
-    for _, trow in tables_pdf.sort_values("table_idx").iterrows():
+    for trow in sorted(tables.to_pylist(), key=lambda t: t["table_idx"]):
         # rebuild the grid with merged-cell identity from (bbox, value) keys
         pool: dict[tuple, Cell] = {}
         grid: dict[int, dict[int, Cell]] = {}
@@ -42,16 +42,9 @@ def _assign(key, tables_pdf: pd.DataFrame, words_pdf: pd.DataFrame) -> pd.DataFr
         table_get_content(table, words_pdf, min_confidence=50)
         if max(table.nb_rows, table.nb_columns) < 2:
             continue
-        rec = table_to_record(table)
-        rec["conv_id"] = conv_id
-        rec["turn_idx"] = int(turn_idx)
-        rec["table_idx"] = out_idx
-        rec["html"] = table_to_html(table)
+        out.add(conv_id, turn_idx, out_idx, table)
         out_idx += 1
-        rows.append(rec)
-    return pd.DataFrame(rows, columns=cols) if rows else pd.DataFrame(
-        {c: pd.Series(dtype="object") for c in cols}
-    )
+    return pa.Table.from_batches([out.batch()])
 
 
 def assign_text(extracted: DataFrame, words: DataFrame) -> DataFrame:
@@ -62,5 +55,5 @@ def assign_text(extracted: DataFrame, words: DataFrame) -> DataFrame:
     return (
         extracted.groupBy("conv_id", "turn_idx")
         .cogroup(words.groupBy("conv_id", "turn_idx"))
-        .applyInPandas(_assign, EXTRACTED_SCHEMA)
+        .applyInArrow(_assign, EXTRACTED_SCHEMA)
     )

@@ -1,7 +1,7 @@
 """The extraction operator: transcript rows → extracted-table rows.
 
 Spark-first design (SURVEY.md §3.4): the whole reference pipeline is the body
-of ONE Arrow-batched ``mapInPandas`` UDF. Payloads are turn-local, so no
+of ONE Arrow-batched ``mapInArrow`` UDF. Payloads are turn-local, so no
 geometry ever crosses the Spark boundary; the only shuffle in the job is the
 optional salted repartition that defuses long-conversation skew.
 
@@ -20,17 +20,20 @@ from __future__ import annotations
 
 from collections.abc import Iterator
 
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from img2table_spark.kernels.html_io import parse_html_tables, table_to_html
 from img2table_spark.kernels.objects import Table
-from img2table_spark.kernels.text import is_relevant_table, table_to_record
+from img2table_spark.kernels.text import is_relevant_table
 from img2table_spark.schema import EXTRACTED_SCHEMA
 
 _HTML_TOOLS = {"text/html", "html"}
 _IMAGE_PREFIX = "image/"
 _PDF_TOOLS = {"application/pdf", "pdf"}
+# consecutive turns per salt key (with_salt)
+_TURN_BUCKET = 8
 
 
 class PayloadError(Exception):
@@ -56,228 +59,173 @@ def extract_payload(text: str | None, tool: str | None) -> list[Table]:
     return []
 
 
-def _make_batch_extract(emit_errors: bool = False):
-    def _batch_extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = EXTRACTED_SCHEMA.fieldNames()
-        for pdf in batches:
-            rows: list[dict] = []
-            # .tolist() once per batch: plain-python iteration is measurably
-            # cheaper than pandas Series iteration in this hot loop.
+_ARROW_SCHEMA = to_arrow_schema(EXTRACTED_SCHEMA)
+_CELLS_TYPE = _ARROW_SCHEMA.field("cells").type
+
+
+class _TableRows:
+    """Column builders for one output batch of EXTRACTED_SCHEMA rows: the one
+    place a ``Table`` becomes an extracted row, for the batch and streaming
+    extractor and for ``assign_text``. Values go into flat Python lists
+    converted once per batch into Arrow arrays (offsets + struct children
+    for ``cells``): per-cell dicts plus a pandas→Arrow conversion of the
+    nested column measured ~35% of the per-turn cost at full throughput."""
+
+    def __init__(self) -> None:
+        self.conv: list = []
+        self.turn: list = []
+        self.tidx: list = []
+        self.x1: list = []
+        self.y1: list = []
+        self.x2: list = []
+        self.y2: list = []
+        self.titles: list = []
+        self.htmls: list = []
+        self.nrows: list = []
+        self.ncols: list = []
+        self.offsets: list = [0]
+        self.c_row: list = []
+        self.c_col: list = []
+        self.c_x1: list = []
+        self.c_y1: list = []
+        self.c_x2: list = []
+        self.c_y2: list = []
+        self.c_val: list = []
+
+    def add(self, conv_id: str, turn_idx: int, table_idx: int, table: Table) -> None:
+        """Append one table row; its bbox is the union of its cells' boxes."""
+        # locals: the per-cell appends are the hot loop
+        c_row, c_col, c_val = self.c_row, self.c_col, self.c_val
+        c_x1, c_y1, c_x2, c_y2 = self.c_x1, self.c_y1, self.c_x2, self.c_y2
+        x1 = y1 = x2 = y2 = None
+        n_cells = 0
+        for r, row in enumerate(table.rows):
+            for c, cell in enumerate(row):
+                cx1, cy1, cx2, cy2 = cell.x1, cell.y1, cell.x2, cell.y2
+                c_row.append(r)
+                c_col.append(c)
+                c_x1.append(cx1)
+                c_y1.append(cy1)
+                c_x2.append(cx2)
+                c_y2.append(cy2)
+                c_val.append(cell.content)
+                n_cells += 1
+                if x1 is None:
+                    x1, y1, x2, y2 = cx1, cy1, cx2, cy2
+                else:
+                    if cx1 < x1:
+                        x1 = cx1
+                    if cy1 < y1:
+                        y1 = cy1
+                    if cx2 > x2:
+                        x2 = cx2
+                    if cy2 > y2:
+                        y2 = cy2
+        if table.rows and n_cells == 0:  # rows of zero width: match min()'s error
+            raise ValueError("min() arg is an empty sequence")
+        self.conv.append(conv_id)
+        self.turn.append(turn_idx)
+        self.tidx.append(table_idx)
+        self.x1.append(x1)
+        self.y1.append(y1)
+        self.x2.append(x2)
+        self.y2.append(y2)
+        self.titles.append(table.title)
+        self.htmls.append(table_to_html(table))
+        self.nrows.append(table.nb_rows)
+        self.ncols.append(table.nb_columns)
+        self.offsets.append(self.offsets[-1] + n_cells)
+
+    def add_error(self, conv_id: str, turn_idx: int, exc: Exception) -> None:
+        """Append an error-marker row (table_idx = -1) that the pipeline
+        counts into the partition manifest, then drops."""
+        self.conv.append(conv_id)
+        self.turn.append(turn_idx)
+        self.tidx.append(-1)
+        self.x1.append(None)
+        self.y1.append(None)
+        self.x2.append(None)
+        self.y2.append(None)
+        self.titles.append(repr(exc)[:200])
+        self.htmls.append(None)
+        self.nrows.append(0)
+        self.ncols.append(0)
+        self.offsets.append(self.offsets[-1])
+
+    def batch(self) -> pa.RecordBatch:
+        i32, s = pa.int32(), pa.string()
+        cells = pa.ListArray.from_arrays(
+            pa.array(self.offsets, i32),
+            pa.StructArray.from_arrays(
+                [
+                    pa.array(self.c_row, i32),
+                    pa.array(self.c_col, i32),
+                    pa.array(self.c_x1, i32),
+                    pa.array(self.c_y1, i32),
+                    pa.array(self.c_x2, i32),
+                    pa.array(self.c_y2, i32),
+                    pa.array(self.c_val, s),
+                ],
+                fields=list(_CELLS_TYPE.value_type),
+            ),
+            type=_CELLS_TYPE,
+        )
+        return pa.RecordBatch.from_arrays(
+            [
+                pa.array(self.conv, s),
+                pa.array(self.turn, i32),
+                pa.array(self.tidx, i32),
+                pa.array(self.x1, i32),
+                pa.array(self.y1, i32),
+                pa.array(self.x2, i32),
+                pa.array(self.y2, i32),
+                pa.array(self.titles, s),
+                cells,
+                pa.array(self.htmls, s),
+                pa.array(self.nrows, i32),
+                pa.array(self.ncols, i32),
+            ],
+            schema=_ARROW_SCHEMA,
+        )
+
+
+def _make_batch_extract_arrow(emit_errors: bool = False):
+    """The mapInArrow body: transcript batches → EXTRACTED_SCHEMA batches.
+    A malformed payload never fails the task: it yields zero rows, or with
+    ``emit_errors`` one error-marker row."""
+
+    def _batch_extract(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for b in batches:
+            out = _TableRows()
             for conv_id, turn_idx, text, tool in zip(
-                pdf["conv_id"].tolist(),
-                pdf["turn_idx"].tolist(),
-                pdf["text"].tolist(),
-                pdf["tool"].tolist(),
+                b.column("conv_id").to_pylist(),
+                b.column("turn_idx").to_pylist(),
+                b.column("text").to_pylist(),
+                b.column("tool").to_pylist(),
             ):
                 try:
                     tables = [t for t in extract_payload(text, tool) if is_relevant_table(t)]
                 except Exception as exc:
-                    # error-tolerant UDF: malformed payload → zero output rows;
-                    # optionally an error-marker row (table_idx = -1) that the
-                    # pipeline counts into the partition manifest then drops.
                     if emit_errors:
-                        rows.append(
-                            {
-                                "conv_id": conv_id,
-                                "turn_idx": int(turn_idx),
-                                "table_idx": -1,
-                                "x1": None, "y1": None, "x2": None, "y2": None,
-                                "title": repr(exc)[:200],
-                                "cells": [],
-                                "html": None,
-                                "n_rows": 0,
-                                "n_cols": 0,
-                            }
-                        )
+                        out.add_error(conv_id, turn_idx, exc)
                     continue
                 for i, t in enumerate(tables):
-                    rec = table_to_record(t)
-                    rec["conv_id"] = conv_id
-                    rec["turn_idx"] = int(turn_idx)
-                    rec["table_idx"] = i
-                    rec["html"] = table_to_html(t)
-                    rows.append(rec)
-            yield pd.DataFrame(rows, columns=cols) if rows else pd.DataFrame(
-                {c: pd.Series(dtype="object") for c in cols}
-            )
+                    out.add(conv_id, turn_idx, i, t)
+            yield out.batch()
 
     return _batch_extract
 
 
-def _make_batch_extract_arrow(emit_errors: bool = False):
-    """Arrow-native batch extractor (mapInArrow): identical row semantics to
-    _make_batch_extract, but the output batch is assembled as flat Python
-    lists converted once per batch into Arrow arrays (offsets + struct
-    children for ``cells``). The pandas path paid a per-cell dict build plus
-    pandas→Arrow conversion of the nested column — measured ~35% of the
-    per-turn cost at full throughput (guide §4.2: construct Arrow arrays
-    directly instead of row-by-row objects)."""
-    import pyarrow as pa
-
-    cell_t = pa.struct(
-        [
-            pa.field("row", pa.int32(), nullable=False),
-            pa.field("col", pa.int32(), nullable=False),
-            pa.field("x1", pa.int32()),
-            pa.field("y1", pa.int32()),
-            pa.field("x2", pa.int32()),
-            pa.field("y2", pa.int32()),
-            pa.field("value", pa.string()),
-        ]
-    )
-    out_schema = pa.schema(
-        [
-            pa.field("conv_id", pa.string(), nullable=False),
-            pa.field("turn_idx", pa.int32(), nullable=False),
-            pa.field("table_idx", pa.int32(), nullable=False),
-            pa.field("x1", pa.int32()),
-            pa.field("y1", pa.int32()),
-            pa.field("x2", pa.int32()),
-            pa.field("y2", pa.int32()),
-            pa.field("title", pa.string()),
-            pa.field("cells", pa.list_(cell_t)),
-            pa.field("html", pa.string()),
-            pa.field("n_rows", pa.int32()),
-            pa.field("n_cols", pa.int32()),
-        ]
-    )
-
-    def _batch_extract(batches):
-        for b in batches:
-            names = b.schema.names
-            conv_in = b.column(names.index("conv_id")).to_pylist()
-            turn_in = b.column(names.index("turn_idx")).to_pylist()
-            text_in = b.column(names.index("text")).to_pylist()
-            tool_in = b.column(names.index("tool")).to_pylist()
-            conv: list = []
-            turn: list = []
-            tidx: list = []
-            bx1: list = []
-            by1: list = []
-            bx2: list = []
-            by2: list = []
-            titles: list = []
-            htmls: list = []
-            nrows: list = []
-            ncols: list = []
-            offsets: list = [0]
-            c_row: list = []
-            c_col: list = []
-            c_x1: list = []
-            c_y1: list = []
-            c_x2: list = []
-            c_y2: list = []
-            c_val: list = []
-            for conv_id, turn_idx, text, tool in zip(
-                conv_in, turn_in, text_in, tool_in
-            ):
-                try:
-                    tables = [
-                        t for t in extract_payload(text, tool) if is_relevant_table(t)
-                    ]
-                except Exception as exc:
-                    if emit_errors:
-                        conv.append(conv_id)
-                        turn.append(turn_idx)
-                        tidx.append(-1)
-                        bx1.append(None)
-                        by1.append(None)
-                        bx2.append(None)
-                        by2.append(None)
-                        titles.append(repr(exc)[:200])
-                        htmls.append(None)
-                        nrows.append(0)
-                        ncols.append(0)
-                        offsets.append(offsets[-1])
-                    continue
-                for i, t in enumerate(tables):
-                    # inlined table_to_record, appending straight into the
-                    # column builders (same values, no per-cell dicts)
-                    x1 = y1 = x2 = y2 = None
-                    n_cells = 0
-                    for r, row in enumerate(t.rows):
-                        for c, cell in enumerate(row):
-                            cx1, cy1, cx2, cy2 = cell.x1, cell.y1, cell.x2, cell.y2
-                            c_row.append(r)
-                            c_col.append(c)
-                            c_x1.append(cx1)
-                            c_y1.append(cy1)
-                            c_x2.append(cx2)
-                            c_y2.append(cy2)
-                            c_val.append(cell.content)
-                            n_cells += 1
-                            if x1 is None:
-                                x1, y1, x2, y2 = cx1, cy1, cx2, cy2
-                            else:
-                                if cx1 < x1:
-                                    x1 = cx1
-                                if cy1 < y1:
-                                    y1 = cy1
-                                if cx2 > x2:
-                                    x2 = cx2
-                                if cy2 > y2:
-                                    y2 = cy2
-                    if t.rows and n_cells == 0:  # rows of zero width
-                        raise ValueError("min() arg is an empty sequence")
-                    conv.append(conv_id)
-                    turn.append(turn_idx)
-                    tidx.append(i)
-                    bx1.append(x1)
-                    by1.append(y1)
-                    bx2.append(x2)
-                    by2.append(y2)
-                    titles.append(t.title)
-                    htmls.append(table_to_html(t))
-                    nrows.append(t.nb_rows)
-                    ncols.append(t.nb_columns)
-                    offsets.append(offsets[-1] + n_cells)
-            cells_arr = pa.ListArray.from_arrays(
-                pa.array(offsets, pa.int32()),
-                pa.StructArray.from_arrays(
-                    [
-                        pa.array(c_row, pa.int32()),
-                        pa.array(c_col, pa.int32()),
-                        pa.array(c_x1, pa.int32()),
-                        pa.array(c_y1, pa.int32()),
-                        pa.array(c_x2, pa.int32()),
-                        pa.array(c_y2, pa.int32()),
-                        pa.array(c_val, pa.string()),
-                    ],
-                    fields=list(cell_t),
-                ),
-            )
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(conv, pa.string()),
-                    pa.array(turn, pa.int32()),
-                    pa.array(tidx, pa.int32()),
-                    pa.array(bx1, pa.int32()),
-                    pa.array(by1, pa.int32()),
-                    pa.array(bx2, pa.int32()),
-                    pa.array(by2, pa.int32()),
-                    pa.array(titles, pa.string()),
-                    cells_arr,
-                    pa.array(htmls, pa.string()),
-                    pa.array(nrows, pa.int32()),
-                    pa.array(ncols, pa.int32()),
-                ],
-                schema=out_schema,
-            )
-
-    return _batch_extract
-
-
-def with_salt(df: DataFrame, turn_bucket: int = 8) -> "F.Column":
-    """Skew-defusing salt: hash(conv_id, turn_idx // turn_bucket) so a single
+def with_salt(df: DataFrame) -> "F.Column":
+    """Skew-defusing salt: hash(conv_id, turn_idx // _TURN_BUCKET) so a single
     heavy conversation spreads over many partitions (north_rule)."""
-    return F.xxhash64(F.col("conv_id"), F.floor(F.col("turn_idx") / F.lit(turn_bucket)))
+    return F.xxhash64(F.col("conv_id"), F.floor(F.col("turn_idx") / F.lit(_TURN_BUCKET)))
 
 
 def extract_tables(
     df: DataFrame,
     salt: bool = True,
     num_partitions: int | None = None,
-    turn_bucket: int = 8,
     emit_errors: bool = False,
     balance: bool = False,
 ) -> DataFrame:
@@ -306,7 +254,7 @@ def extract_tables(
         if balance:
             slim = slim.repartition(num_partitions)
         else:
-            slim = slim.repartition(num_partitions, with_salt(slim, turn_bucket))
+            slim = slim.repartition(num_partitions, with_salt(slim))
     return slim.mapInArrow(_make_batch_extract_arrow(emit_errors), EXTRACTED_SCHEMA)
 
 

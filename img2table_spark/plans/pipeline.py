@@ -19,7 +19,12 @@ import time
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from img2table_spark.operators.extract import extract_tables
+from img2table_spark.operators.extract import (
+    _HTML_TOOLS,
+    _IMAGE_PREFIX,
+    _PDF_TOOLS,
+    extract_tables,
+)
 from img2table_spark.plans.checkpoints import read_committed, write_manifest
 
 
@@ -103,11 +108,11 @@ def run_pipeline(
             for r in sub.groupBy("bucket")
             .agg(
                 F.count("*").alias("n_turns"),
-                # lowercase first: extract_payload normalizes tool the same
-                # way, so 'TEXT/HTML' turns count as payload turns here too
+                # the tools extract_payload dispatches, lowercased first as
+                # it does, so 'TEXT/HTML' turns count as payload turns too
                 F.sum(
-                    (F.lower("tool").isin("text/html", "html", "application/pdf", "pdf")
-                     | F.lower("tool").startswith("image/")).cast("long")
+                    (F.lower("tool").isin(*sorted(_HTML_TOOLS | _PDF_TOOLS))
+                     | F.lower("tool").startswith(_IMAGE_PREFIX)).cast("long")
                 ).alias("n_payload_turns"),
             )
             .collect()

@@ -1,7 +1,7 @@
 """The FLAGSHIP extraction operator as a Structured Stream.
 
 The batch operator (operators/extract.py) is deliberately stateless — one
-salted exchange + one Arrow-batched mapInPandas — so it lifts onto
+salted exchange + one Arrow-batched mapInArrow — so it lifts onto
 ``readStream`` unchanged: same kernels, same salting, same error tolerance,
 exactly-once output via the parquet sink commit log. This is the
 near-line ingestion shape for the north rule's 10¹²-turn table: transcripts

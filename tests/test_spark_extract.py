@@ -155,3 +155,30 @@ def test_pipeline_rejects_foreign_checkpoint(spark, golden, tmp_path):
     run_pipeline(spark, inp1, out, ckpt, n_buckets=4, wave_size=4)
     with _pytest.raises(ValueError, match="different"):
         run_pipeline(spark, inp2, out, ckpt, n_buckets=4, wave_size=4)
+
+
+def test_pipeline_counts_payload_turns_by_tool(spark, tmp_path):
+    """n_payload_turns counts exactly the turns extract_payload dispatches to
+    a kernel (tool matched case-insensitively); malformed ones are errors."""
+    import datetime as dt
+
+    from img2table_spark.schema import TRANSCRIPT_SCHEMA
+
+    ts = dt.datetime(2026, 1, 1)
+    html = "<table><tr><td>a</td><td>b</td></tr><tr><td>c</td><td>d</td></tr></table>"
+    rows = [
+        ("p0", 0, "a", html, "TEXT/HTML", ts),
+        ("p0", 1, "a", html, "html", ts),
+        ("p1", 0, "a", "!!!corrupt!!!", "image/png", ts),
+        ("p1", 1, "a", "!!!corrupt!!!", "pdf", ts),
+        ("p2", 0, "a", html, "text/plain", ts),
+        ("p2", 1, "a", html, None, ts),
+    ]
+    df = spark.createDataFrame(rows, TRANSCRIPT_SCHEMA)
+    ckpt = str(tmp_path / "ckpt")
+    summary = run_pipeline(spark, df, str(tmp_path / "out"), ckpt, n_buckets=2, wave_size=2)
+    committed = read_committed(ckpt)
+    assert sum(m["n_turns"] for m in committed.values()) == 6
+    assert sum(m["n_payload_turns"] for m in committed.values()) == 4
+    assert sum(m["n_errors"] for m in committed.values()) == 2
+    assert summary["n_tables"] == 2
