@@ -106,11 +106,13 @@ def gaussian_kernel_1d(ksize: int, sigma: float = 0.0) -> np.ndarray:
 
 
 def _reflect101_idx(n: int, radius: int) -> np.ndarray:
-    idx = np.arange(-radius, n + radius)
-    idx = np.abs(idx)  # reflect at 0 without duplicating edge
-    over = idx > n - 1
-    idx[over] = 2 * (n - 1) - idx[over]
-    return idx
+    """Source indices of an axis of length n padded by radius on each side,
+    cv2's BORDER_REFLECT_101 (gfedcb|abcdefgh|gfedcba): the reflection
+    repeats with period 2n − 2 however far the pad reaches, and a 1-pixel
+    axis reflects onto itself."""
+    period = max(2 * n - 2, 1)
+    idx = np.abs(np.arange(-radius, n + radius)) % period
+    return np.where(idx > n - 1, period - idx, idx)
 
 
 #: rows per strip of ``_sep_filter``: a strip's float64 accumulator and
@@ -352,12 +354,11 @@ def bilateral_filter3(img: np.ndarray, sigma_color: float = 40.0, sigma_space: f
     H, W, _ = img.shape
     # planar (3, H+2, W+2) reflect101 page: every per-channel pass below
     # runs over contiguous planes. The border rows/cols copy the image
-    # rows/cols _reflect101_idx names (mod n: a 1-pixel axis reflects onto
-    # itself)
+    # rows/cols _reflect101_idx names
     p8 = np.empty((3, H + 2, W + 2), dtype=np.uint8)
     p8[:, 1 : H + 1, 1 : W + 1] = img.transpose(2, 0, 1)
-    ix = _reflect101_idx(W, 1) % W
-    iy = _reflect101_idx(H, 1) % H
+    ix = _reflect101_idx(W, 1)
+    iy = _reflect101_idx(H, 1)
     p8[:, 1 : H + 1, 0] = p8[:, 1 : H + 1, 1 + ix[0]]
     p8[:, 1 : H + 1, W + 1] = p8[:, 1 : H + 1, 1 + ix[-1]]
     p8[:, 0] = p8[:, 1 + iy[0]]

@@ -25,24 +25,8 @@ from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 from pyspark.storagelevel import StorageLevel
 
 from img2table_spark.operators.extract import extract_cells_flat
-from img2table_spark.sources.transcripts import transcripts_from_documents
-
-
-_T_MEMO: dict = {}
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Source-table reader with a per-(session, dir, table) PLAN memo: a
-    DataFrame is an immutable logical-plan handle, so reusing it skips the
-    driver-side file listing + parquet footer schema read every consumer
-    repaid per call. Nothing is persisted — every execution still scans
-    the parquet input."""
-    key = (spark.sparkContext.applicationId, sf_dir, name)
-    hit = _T_MEMO.get(key)
-    if hit is None:
-        hit = spark.read.parquet(f"{sf_dir.rstrip('/')}/{name}.parquet")
-        _T_MEMO[key] = hit
-    return hit
+from img2table_spark.session import session_artifact, staging_dir
+from img2table_spark.sources.transcripts import _t, transcripts_from_documents
 
 
 # --------------------------------------------------------------------------
@@ -423,49 +407,17 @@ def _shingles(
     return exploded.repartition("s" if cluster_by_s else "doc_id")
 
 
-_BANDS_MEMO: dict = {}
-
-
-def _memo_put(memo: dict, key: tuple, value, spark: SparkSession) -> None:
-    """Insert into an (applicationId, ...)-keyed DataFrame memo, first
-    evicting (and unpersisting, where the owning session still answers)
-    entries from OTHER SparkSessions — a long-lived driver that cycles
-    sessions must not accumulate dead persisted-DataFrame references
-    (ADVICE r4)."""
-    app_id = spark.sparkContext.applicationId
-    for stale in [k for k in memo if k[0] != app_id]:
-        old = memo.pop(stale)
-        # a memo value is either one DataFrame or a structure of them
-        # (the BPE chain stores [(vocab, top), ...])
-        dfs = [old] if hasattr(old, "unpersist") else [
-            d for step in old for d in step if hasattr(d, "unpersist")
-        ]
-        for d in dfs:
-            try:
-                d.unpersist()
-            except Exception:
-                pass  # owning session already gone — nothing to release
-    memo[key] = value
-
-
-_SHINGLES_MEMO: dict = {}
-
-
+@session_artifact
 def _shingles_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Persisted + memoized DEFAULT-width (3-gram) distinct shingle table —
     the base artifact underneath the band index. Built once per (session,
     sf_dir); consumers: the band-index build and q08's verification probe
     arms. Width/clustering variants (q17's cluster_by_s, q26's 13-gram)
     stay un-memoized — they are single-consumer."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _SHINGLES_MEMO.get(key)
-    if hit is not None:
-        return hit
-    out = _shingles(spark, sf_dir).persist(StorageLevel.MEMORY_AND_DISK)
-    _memo_put(_SHINGLES_MEMO, key, out, spark)
-    return out
+    return _shingles(spark, sf_dir).persist(StorageLevel.MEMORY_AND_DISK)
 
 
+@session_artifact
 def _bands_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Persisted + memoized (doc_id, band, sig) MinHash-LSH band index —
     the materialized dedup index, same discipline as the IVF assignment
@@ -475,15 +427,9 @@ def _bands_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-runs the shingle explode + 16-hash min-agg chain — the most
     expensive part of the whole dedup stack. At cluster scale this table
     is written once per corpus build and joined many times."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _BANDS_MEMO.get(key)
-    if hit is not None:
-        return hit
-    out = _minhash_bands(_shingles_table(spark, sf_dir)).persist(
+    return _minhash_bands(_shingles_table(spark, sf_dir)).persist(
         StorageLevel.MEMORY_AND_DISK
     )
-    _memo_put(_BANDS_MEMO, key, out, spark)
-    return out
 
 
 # Oversized-band-bucket guard (VERDICT r5 skew directive — the MinHash
@@ -561,9 +507,7 @@ small_{name} AS {mat}(
   WHERE s.bsz > {_BAND_CAP} AND b.doc_id > s.hub)"""
 
 
-_CAND_PAIRS_MEMO: dict = {}
-
-
+@session_artifact
 def _cand_pairs_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Persisted + memoized candidate-pair table from the corpus band
     index — the third materialized dedup artifact (bands → candidate
@@ -572,15 +516,9 @@ def _cand_pairs_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     of every consumer bounded: _band_pairs references the band table
     from four arms, and unpersisted that quadruples each consumer's plan
     tree. At cluster scale this is written once per corpus build."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _CAND_PAIRS_MEMO.get(key)
-    if hit is not None:
-        return hit
-    out = _band_pairs(_bands_table(spark, sf_dir)).persist(
+    return _band_pairs(_bands_table(spark, sf_dir)).persist(
         StorageLevel.MEMORY_AND_DISK
     )
-    _memo_put(_CAND_PAIRS_MEMO, key, out, spark)
-    return out
 
 
 def q08_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -866,8 +804,6 @@ _IVF_MAX_LEVELS = 3  # 1 coarse level + up to 2 split rounds
 
 _QUANT_EXPR = "transform(embedding, x -> cast(floor(cast(x AS DOUBLE) * 1000000D + 0.5D) AS bigint))"
 
-_IVF_MEMO: dict = {}
-
 
 def _quantized_emb(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _t(spark, sf_dir, "embeddings").select(
@@ -935,6 +871,7 @@ def _lloyd_fixed_point(pts, k: int):
     return cents
 
 
+@session_artifact
 def train_ivf_centroids(spark: SparkSession, sf_dir: str) -> list:
     """Deterministic fixed-point Lloyd's kmeans over a hash-chosen sample.
 
@@ -946,8 +883,6 @@ def train_ivf_centroids(spark: SparkSession, sf_dir: str) -> list:
     (int64 sums < 2^53), so numpy here and DuckDB's unrolled CTE replay in
     Q15/Q18's oracles produce identical centroids and buckets.
     """
-    if sf_dir in _IVF_MEMO:
-        return _IVF_MEMO[sf_dir]
     import numpy as np
 
     emb = _quantized_emb(spark, sf_dir)
@@ -961,16 +896,7 @@ def train_ivf_centroids(spark: SparkSession, sf_dir: str) -> list:
     )
     pts = np.array([r["qv"] for r in rows], dtype=np.int64)
     cents = _lloyd_fixed_point(pts, k)
-    out = [[int(x) for x in c] for c in cents]
-    _IVF_MEMO[sf_dir] = out
-    return out
-
-
-_IVF_SPLIT_MEMO: dict = {}
-# (applicationId, sf_dir) → persisted assigned-DataFrame (the materialized
-# IVF index); keyed by session so a stopped SparkSession never leaks a dead
-# cached plan into a new one.
-_IVF_ASSIGN_MEMO: dict = {}
+    return [[int(x) for x in c] for c in cents]
 
 
 def _sub_bucket_udf(bcb):
@@ -997,9 +923,7 @@ def _sub_bucket_udf(bcb):
     return sub_bucket
 
 
-def _ivf_split_oversized(
-    spark: SparkSession, sf_dir: str, df: DataFrame
-) -> DataFrame:
+def _ivf_split_oversized(spark: SparkSession, df: DataFrame) -> tuple[DataFrame, list]:
     """Re-split coarse buckets larger than _IVF_SPLIT_THRESHOLD with a
     second trained codebook (module-header comment has the full design).
 
@@ -1009,77 +933,71 @@ def _ivf_split_oversized(
     keep rank ≤ 64·k₂); (3) per-bucket Lloyd's via applyInPandas over the
     SAMPLE (task input ≤ 64·512 rows — never a whole bucket); (4) collect
     the codebooks (≤ Σk₂ rows ≈ MBs) and re-assign via a broadcast-codebook
-    Arrow UDF — a pure map, zero shuffle. Codebooks are memoized per sf_dir
-    so q15+q18 share one training pass."""
+    Arrow UDF — a pure map, zero shuffle. Returns the re-assigned frame and
+    the per-round codebooks ({parent bucket: sub-centroid matrix} each)."""
     import numpy as np
 
-    memo = _IVF_SPLIT_MEMO.get(sf_dir)
-    levels: list = [] if memo is None else memo
-    for lvl in range(_IVF_MAX_LEVELS - 1):
-        if memo is not None:
-            if lvl >= len(levels):
-                break
-            books = levels[lvl]
-        else:
-            sizes = (
-                df.groupBy("bucket")
-                .count()
-                .filter(F.col("count") > _IVF_SPLIT_THRESHOLD)
-                .collect()
-            )
-            over = {int(r["bucket"]): _ivf_sub_k(int(r["count"])) for r in sizes}
-            if not over:
-                break
-            k2_df = spark.createDataFrame(
-                sorted(over.items()), "bucket long, k2 int"
-            )
-            w = Window.partitionBy("bucket").orderBy(
-                F.md5(F.col("vec_id").cast("string")), "vec_id"
-            )
-            samp = (
-                df.join(F.broadcast(k2_df), "bucket")
-                .withColumn("rn", F.row_number().over(w))
-                .filter(F.col("rn") <= _IVF_SAMPLE_PER_K * F.col("k2"))
-                .select("bucket", "rn", "qv", "k2")
+    levels: list = []
+    for _ in range(_IVF_MAX_LEVELS - 1):
+        sizes = (
+            df.groupBy("bucket")
+            .count()
+            .filter(F.col("count") > _IVF_SPLIT_THRESHOLD)
+            .collect()
+        )
+        over = {int(r["bucket"]): _ivf_sub_k(int(r["count"])) for r in sizes}
+        if not over:
+            break
+        k2_df = spark.createDataFrame(sorted(over.items()), "bucket long, k2 int")
+        w = Window.partitionBy("bucket").orderBy(
+            F.md5(F.col("vec_id").cast("string")), "vec_id"
+        )
+        samp = (
+            df.join(F.broadcast(k2_df), "bucket")
+            .withColumn("rn", F.row_number().over(w))
+            .filter(F.col("rn") <= _IVF_SAMPLE_PER_K * F.col("k2"))
+            .select("bucket", "rn", "qv", "k2")
+        )
+
+        def _train(pdf: "pd.DataFrame") -> "pd.DataFrame":
+            pdf = pdf.sort_values("rn")
+            pts = np.array(pdf["qv"].tolist(), dtype=np.int64)
+            cents = _lloyd_fixed_point(pts, int(pdf["k2"].iloc[0]))
+            return pd.DataFrame(
+                {
+                    "bucket": int(pdf["bucket"].iloc[0]),
+                    "cid": range(len(cents)),
+                    "cv": [[int(x) for x in c] for c in cents],
+                }
             )
 
-            def _train(pdf: "pd.DataFrame") -> "pd.DataFrame":
-                pdf = pdf.sort_values("rn")
-                pts = np.array(pdf["qv"].tolist(), dtype=np.int64)
-                cents = _lloyd_fixed_point(pts, int(pdf["k2"].iloc[0]))
-                return pd.DataFrame(
-                    {
-                        "bucket": int(pdf["bucket"].iloc[0]),
-                        "cid": range(len(cents)),
-                        "cv": [[int(x) for x in c] for c in cents],
-                    }
-                )
-
-            rows = (
-                samp.groupBy("bucket")
-                .applyInPandas(_train, "bucket long, cid long, cv array<long>")
-                .collect()
-            )
-            grouped: dict = {}
-            for r in rows:
-                grouped.setdefault(int(r["bucket"]), []).append(
-                    (int(r["cid"]), r["cv"])
-                )
-            books = {
-                b: np.array([cv for _, cv in sorted(v)], dtype=np.int64)
-                for b, v in grouped.items()
-            }
-            levels.append(books)
+        rows = (
+            samp.groupBy("bucket")
+            .applyInPandas(_train, "bucket long, cid long, cv array<long>")
+            .collect()
+        )
+        grouped: dict = {}
+        for r in rows:
+            grouped.setdefault(int(r["bucket"]), []).append((int(r["cid"]), r["cv"]))
+        books = {
+            b: np.array([cv for _, cv in sorted(v)], dtype=np.int64)
+            for b, v in grouped.items()
+        }
+        levels.append(books)
         bcb = spark.sparkContext.broadcast(books)
         df = df.withColumn(
             "bucket", _sub_bucket_udf(bcb)(F.col("bucket"), F.col("qv"))
         )
-    if memo is None:
-        _IVF_SPLIT_MEMO[sf_dir] = levels
-    return df
+    return df, levels
 
 
 def _ivf_assigned(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The IVF index's (vec_id, v, vn, bucket) table (see _ivf_index)."""
+    return _ivf_index(spark, sf_dir)[0]
+
+
+@session_artifact
+def _ivf_index(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, list]:
     """embeddings → (vec_id, v, vn, bucket) via nearest-trained-centroid
     coarse quantization (see train_ivf_centroids) plus the oversized-bucket
     split rounds (_ivf_split_oversized).
@@ -1093,18 +1011,14 @@ def _ivf_assigned(spark: SparkSession, sf_dir: str) -> DataFrame:
     returns the first minimum) — bit-identical to the trainer and to the
     DuckDB CTE replay in the q15/q18 oracles.
 
-    The finished (vec_id, v, vn, bucket) table is persisted and memoized
-    per (session, sf_dir) — the materialized-index shape of IVF. Every
-    consumer (q15 probe join, q18's SELF-join, q45 SemDeDup) would
-    otherwise re-run the scan + assignment UDF chain per plan arm; q18
-    alone pays it twice. At cluster scale this table is written once per
-    index build (it IS the index) and read many times."""
+    The finished (vec_id, v, vn, bucket) table is persisted and cached
+    per (session, sf_dir) beside the split rounds' codebooks — together
+    the materialized-index shape of IVF. Every consumer (q15 probe join,
+    q18's SELF-join, q45 SemDeDup) would otherwise re-run the scan +
+    assignment UDF chain per plan arm; q18 alone pays it twice. At cluster
+    scale this table is written once per index build (it IS the index)
+    and read many times."""
     import numpy as np
-
-    memo_key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _IVF_ASSIGN_MEMO.get(memo_key)
-    if hit is not None:
-        return hit
 
     cents = train_ivf_centroids(spark, sf_dir)
     bc = spark.sparkContext.broadcast(np.array(cents, dtype=np.int64))
@@ -1118,8 +1032,9 @@ def _ivf_assigned(spark: SparkSession, sf_dir: str) -> DataFrame:
     assigned = _quantized_emb(spark, sf_dir).withColumn(
         "bucket", nearest_cid(F.col("qv"))
     )
+    split, levels = _ivf_split_oversized(spark, assigned)
     out = (
-        _ivf_split_oversized(spark, sf_dir, assigned)
+        split
         # pre-normalized vectors: downstream pairwise cosine becomes a plain
         # dot product — O(d) per pair instead of O(3d) (norms otherwise get
         # recomputed for every one of a vector's ~bucket-size partners)
@@ -1130,8 +1045,7 @@ def _ivf_assigned(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("vec_id", "v", "vn", "bucket")
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    _memo_put(_IVF_ASSIGN_MEMO, memo_key, out, spark)
-    return out
+    return out, levels
 
 
 def _ivf_sql_ctes() -> str:
@@ -1293,12 +1207,8 @@ SELECT query_id, CAST(rank AS BIGINT) AS rank, vec_id AS neighbor_id FROM (
 
 _MAX_LP_ROUNDS = 32  # safety backstop; convergence check is the real exit
 
-# (applicationId, sf_dir, reliable) → converged label DataFrame; see
-# _lp_labels. Keyed by session so a stopped SparkSession never leaks a
-# dead checkpointed plan into a new one.
-_LP_LABELS_MEMO: dict = {}
 
-
+@session_artifact
 def _lp_labels(spark: SparkSession, sf_dir: str, *, reliable: bool = False) -> DataFrame:
     """Connected-component labels (node, label) over the verified MinHash
     pairs via min-label propagation with per-round lineage truncation.
@@ -1321,15 +1231,10 @@ def _lp_labels(spark: SparkSession, sf_dir: str, *, reliable: bool = False) -> D
         )
 
     # The converged label table is the near-dup CLUSTER INDEX — q16/q23/q32
-    # all start from it. Memoized per session like the IVF index: the LP
+    # all start from it. Cached per session like the IVF index: the LP
     # rounds (the expensive iterative part) run once and every consumer
     # reads the checkpointed result. At cluster scale this table is written
     # once per dedup build and joined many times.
-    memo_key = (spark.sparkContext.applicationId, sf_dir, reliable)
-    hit = _LP_LABELS_MEMO.get(memo_key)
-    if hit is not None:
-        return hit
-
     def _ckpt(df: DataFrame) -> DataFrame:
         # interactive path: LAZY localCheckpoint — the convergence count
         # below is the round's one action and materializes it, so each LP
@@ -1378,7 +1283,6 @@ def _lp_labels(spark: SparkSession, sf_dir: str, *, reliable: bool = False) -> D
         labels = stepped.select("node", "label")
         if n_changed == 0:
             break
-    _memo_put(_LP_LABELS_MEMO, memo_key, labels, spark)
     return labels
 
 
@@ -1447,9 +1351,7 @@ FROM comp GROUP BY label
 _DF_CAP = 100
 
 
-_SHC_MEMO: dict = {}
-
-
+@session_artifact
 def _capped_shingles_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Persisted + memoized DF-capped (doc_id, s) shingle table — the
     exact-Jaccard reference's base artifact, built once per (session,
@@ -1457,21 +1359,15 @@ def _capped_shingles_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     arms) and q73's exact-reference arm, which re-runs the q17 chain —
     without the memo the explode + DF-cap window ran once per consumer.
     At cluster scale this table is written once per corpus build."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _SHC_MEMO.get(key)
-    if hit is not None:
-        return hit
     raw = _shingles(spark, sf_dir, cluster_by_s=True)
     # DF-cap via window on the shingle key: one shuffle on s covers both the
     # document-frequency count and the rare-filter (no groupBy+self-join).
-    out = (
+    return (
         raw.withColumn("df", F.count("*").over(Window.partitionBy("s")))
         .filter(F.col("df") <= _DF_CAP)
         .select("doc_id", "s")
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    _memo_put(_SHC_MEMO, key, out, spark)
-    return out
 
 
 def q17_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1654,34 +1550,23 @@ FROM read_parquet('{_Q14_GOLDEN}')
 """
 
 
-_Q14_DF_MEMO: dict = {}
-
-
+@session_artifact
 def _q14_corpus_df(spark: SparkSession) -> DataFrame:
     """The generated q14 corpus as a real parquet scan. createDataFrame on
     the local row list yields an RDD-backed plan that re-pickles and ships
     the ~8 MB of base64 payloads through the Python runner on EVERY action
     (measured: 2.4 s per run even column-pruned); staging the rows once per
-    session to a temp parquet makes every q14 invocation a plain FileScan —
-    input staging only, the extraction itself still runs in full each time."""
-    key = (spark.sparkContext.applicationId,)
-    hit = _Q14_DF_MEMO.get(key)
-    if hit is not None:
-        return hit
-    import tempfile
-
+    session to a parquet in the session's staging dir makes every q14
+    invocation a plain FileScan — input staging only, the extraction itself
+    still runs in full each time."""
     from img2table_spark.schema import TRANSCRIPT_SCHEMA
 
-    path = tempfile.mkdtemp(prefix="q14_corpus_") + "/corpus"
+    path = str(staging_dir(spark) / "q14_corpus")
     rows = list(_q14_corpus_rows())
     spark.createDataFrame(rows, TRANSCRIPT_SCHEMA).coalesce(1).write.mode(
         "overwrite"
     ).parquet(path)
-    out = spark.read.parquet(path)
-    _Q14_DF_MEMO[key] = out
-    for stale in [k for k in _Q14_DF_MEMO if k != key]:
-        del _Q14_DF_MEMO[stale]
-    return out
+    return spark.read.parquet(path)
 
 
 def q14_image_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4410,19 +4295,13 @@ _BM25_TERMS = [
 _BM25_K = 5
 
 
-_BM25_MEMO: dict = {}
-
-
+@session_artifact
 def _bm25_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(query_id, doc_id, score, n_terms, dl) BM25-scored candidate table —
     shared by q60 (top-k) and q81 (RRF fusion). Tiny by construction: only
     docs containing a query term survive the post-explode filter. dl rides
     the agg (constant per doc) so fusion re-ranks need no second corpus
     scan."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _BM25_MEMO.get(key)
-    if hit is not None:
-        return hit
     docs = _t(spark, sf_dir, "documents")
     stats = (
         docs.select(F.size(F.split("text", " ")).alias("dl"))
@@ -4446,7 +4325,9 @@ def _bm25_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("idf_pct", F.expr(f"(100 * {nd}) div df"))
     )
     qterms = spark.createDataFrame(_BM25_TERMS, "query_id INT, tok STRING")
-    scored = (
+    # cached per (session, sf_dir): q60 and q81 both consume this scored
+    # table; uncached each re-ran the scalar collect + tf chain
+    return (
         tf.join(F.broadcast(idf), "tok")
         .join(F.broadcast(qterms), "tok")
         .withColumn(
@@ -4465,10 +4346,6 @@ def _bm25_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    # memoized per (session, sf_dir): q60 and q81 both consume this scored
-    # table; without the memo each re-ran the scalar collect + tf chain
-    _memo_put(_BM25_MEMO, key, scored, spark)
-    return scored
 
 
 def q60_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5985,18 +5862,14 @@ FROM g GROUP BY 1, 2
 # final (tiny, per-label) aggregation by tests/test_plan_shapes.py.
 # --------------------------------------------------------------------------
 
-_BUCKETED_MEMO: dict = {}
 _N_BUCKETS = 8
 
 
+@session_artifact
 def _bucketed_tables(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     """Write documents + embeddings as bucketed/sorted catalog tables, once
     per (session, sf_dir); returns the two table names. The write is the
     one-time corpus-build cost the co-located join amortizes."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _BUCKETED_MEMO.get(key)
-    if hit is not None:
-        return hit
     tag = _hashlib.md5(sf_dir.encode()).hexdigest()[:8]
     t_docs, t_emb = f"b_docs_{tag}", f"b_emb_{tag}"
     # a fresh session's in-memory catalog has no record of a previous run's
@@ -6034,7 +5907,6 @@ def _bucketed_tables(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
         .format("parquet")
         .saveAsTable(t_emb)
     )
-    _BUCKETED_MEMO[key] = (t_docs, t_emb)
     return t_docs, t_emb
 
 
@@ -6253,9 +6125,8 @@ WHERE fused_rank <= {_RRF_K}
 
 _BPE_STEPS = 3
 
-_BPE_MEMO: dict = {}
 
-
+@session_artifact
 def _bpe_chain(
     spark: SparkSession, sf_dir: str, train_filter: str | None = None
 ) -> list:
@@ -6266,13 +6137,9 @@ def _bpe_chain(
     the corpus scan. The vocab is bounded (distinct words ≪ corpus), so
     this is the LP-labels iterative-persist discipline, not a cache of
     corpus-scale data. Shared by q82 (training output), q85 (encode) and
-    q105 (equity audit, which trains on `train_filter` only) and memoized
+    q105 (equity audit, which trains on `train_filter` only) and cached
     per (session, sf_dir, filter) like the band/IVF indexes — a tokenizer
     is trained once per corpus and applied many times."""
-    key = (spark.sparkContext.applicationId, sf_dir, train_filter)
-    hit = _BPE_MEMO.get(key)
-    if hit is not None:
-        return hit
     docs = _t(spark, sf_dir, "documents")
     if train_filter is not None:
         docs = docs.filter(F.expr(train_filter))
@@ -6317,7 +6184,6 @@ def _bpe_chain(
             ).alias("repr"),
         ).persist(StorageLevel.MEMORY_AND_DISK)
         steps.append((vocab, top))
-    _memo_put(_BPE_MEMO, key, steps, spark)
     return steps
 
 
@@ -6872,22 +6738,16 @@ GROUP BY ROLLUP(lang, source)
 _KM_K = 8
 _KM_ITERS = 2
 
-_KM_MEMO: dict = {}
 
-
+@session_artifact
 def _km_final(spark: SparkSession, sf_dir: str):
     """Full-corpus Lloyd's training (q87 header comment) → the persisted
     final assignment (vec_id, cid, d2) plus the trained centroid matrix,
-    memoized per (session, sf_dir) — the IVF-index discipline: q87's
+    cached per (session, sf_dir) — the IVF-index discipline: q87's
     stats and q93's purity audit share one training pass."""
     import math
 
     import numpy as np
-
-    memo_key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _KM_MEMO.get(memo_key)
-    if hit is not None:
-        return hit[0]
 
     emb = (
         _quantized_emb(spark, sf_dir)
@@ -6943,7 +6803,6 @@ def _km_final(spark: SparkSession, sf_dir: str):
         .select("vec_id", "cid", "d2")
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    _memo_put(_KM_MEMO, memo_key, [(final, cents)], spark)
     return final, cents
 
 
@@ -7947,10 +7806,9 @@ def _ivf_leaf_codebook(spark: SparkSession, sf_dir: str):
     (every row re-assigns to a child), so leaves partition the corpus."""
     import numpy as np
 
-    _ivf_assigned(spark, sf_dir)  # ensures training + split memos exist
     cents = train_ivf_centroids(spark, sf_dir)
     leaves = {cid: np.array(c, dtype=np.int64) for cid, c in enumerate(cents)}
-    for books in _IVF_SPLIT_MEMO.get(sf_dir, []):
+    for books in _ivf_index(spark, sf_dir)[1]:
         for parent, arr in books.items():
             leaves.pop(parent, None)
             for i in range(len(arr)):
@@ -8094,30 +7952,30 @@ mprobe AS MATERIALIZED (
 # doubles; ties broken by vec_id in both.
 # --------------------------------------------------------------------------
 
-_SQ8_STATS_MEMO: dict = {}
+
+@session_artifact
+def _sq8_stats(spark: SparkSession, sf_dir: str) -> tuple[list, list]:
+    """Per-dimension (min, max) of the quantized embeddings — the SQ8
+    codebook."""
+    rows = (
+        _quantized_emb(spark, sf_dir)
+        .select(F.posexplode("qv").alias("j", "x"))
+        .groupBy("j")
+        .agg(F.min("x").alias("mn"), F.max("x").alias("mx"))
+        .collect()  # bounded: d = dim(embedding) rows
+    )
+    by_j = {r["j"]: (r["mn"], r["mx"]) for r in rows}
+    return (
+        [int(by_j[j][0]) for j in sorted(by_j)],
+        [int(by_j[j][1]) for j in sorted(by_j)],
+    )
 
 
 def _sq8_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(vec_id, bucket, rv, nb): the IVF index with each vector replaced
     by its SQ8 round-nearest-midpoint reconstruction (q84's exact integer
     formula) + the reconstruction's squared norm."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    stats = _SQ8_STATS_MEMO.get(key)
-    if stats is None:
-        rows = (
-            _quantized_emb(spark, sf_dir)
-            .select(F.posexplode("qv").alias("j", "x"))
-            .groupBy("j")
-            .agg(F.min("x").alias("mn"), F.max("x").alias("mx"))
-            .collect()  # bounded: d = dim(embedding) rows
-        )
-        by_j = {r["j"]: (r["mn"], r["mx"]) for r in rows}
-        stats = (
-            [int(by_j[j][0]) for j in sorted(by_j)],
-            [int(by_j[j][1]) for j in sorted(by_j)],
-        )
-        _memo_put(_SQ8_STATS_MEMO, key, stats, spark)
-    mn, mx = stats
+    mn, mx = _sq8_stats(spark, sf_dir)
     # two d-element literal arrays (128 nodes — far below the k·d plan-
     # bloat class the IVF broadcast exists to avoid)
     recon = (
@@ -8891,22 +8749,16 @@ _PQ_M = 8
 _PQ_K = 16
 _PQ_ITERS = 2
 
-_PQ_MEMO: dict = {}
 
-
+@session_artifact
 def _pq_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(vec_id, bucket, rv, nb): the IVF index with each vector replaced
     by its PQ reconstruction (concatenated nearest sub-centroids) + the
     reconstruction's squared norm. Codebooks trained on the quantized
-    integer embeddings; memoized per (session, sf_dir)."""
+    integer embeddings; cached per (session, sf_dir)."""
     import math
 
     import numpy as np
-
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _PQ_MEMO.get(key)
-    if hit is not None:
-        return hit
 
     emb = (
         _quantized_emb(spark, sf_dir)
@@ -8984,7 +8836,7 @@ def _pq_store(spark: SparkSession, sf_dir: str) -> DataFrame:
             out[:, s * ds : (s + 1) * ds] = B[s][codes]
         return pd.Series(out.tolist())
 
-    store = (
+    return (
         _ivf_assigned(spark, sf_dir)
         .select(
             "vec_id",
@@ -9004,10 +8856,6 @@ def _pq_store(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("vec_id", "bucket", "rv", "nb")
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    # memoize the DataFrame itself: _memo_put's eviction unpersists a bare
-    # DataFrame value, while a flat [store] list defeated it (ADVICE r5)
-    _memo_put(_PQ_MEMO, key, store, spark)
-    return store
 
 
 def q102_pq_adc_recall(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -3,11 +3,18 @@
 Local sandbox runs on local[N]; on a real cluster the same config applies —
 AQE for runtime re-planning (skew joins, partition coalescing) and Arrow for
 the pandas-UDF boundary (no per-row Python, per BASELINE.json input_hint).
+
+Also home of the one session-artifact cache (``session_artifact``) and the
+session's staging dir (``staging_dir``).
 """
 
 from __future__ import annotations
 
+import functools
+import inspect
 import os
+import tempfile
+from pathlib import Path
 
 from pyspark.sql import SparkSession
 
@@ -52,3 +59,63 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+# ------------------------------------------------- session-artifact cache
+#
+# A materialized artifact (band index, IVF index, trained codebook, staged
+# corpus, ...) is built once per SparkSession and read by every consumer.
+# PySpark runs one active SparkContext per process, so a new applicationId
+# means the previous context was stopped and its cached blocks went with
+# it: the cache then drops the old session's entries (nothing left to
+# unpersist) and removes its staging dir.
+
+_cache: dict = {}
+_app_id: str | None = None
+_staging: tempfile.TemporaryDirectory | None = None
+
+
+def _enter(spark: SparkSession) -> str:
+    """The session's applicationId, first dropping a previous session's
+    entries and staging dir."""
+    global _app_id, _staging
+    app_id = spark.sparkContext.applicationId
+    if app_id != _app_id:
+        _cache.clear()
+        if _staging is not None:
+            _staging.cleanup()
+            _staging = None
+        _app_id = app_id
+    return app_id
+
+
+def staging_dir(spark: SparkSession) -> Path:
+    """A scratch directory owned by the current session: created on first
+    use, removed when a new session starts or, by the TemporaryDirectory
+    finalizer, when the interpreter exits."""
+    global _staging
+    _enter(spark)
+    if _staging is None:
+        _staging = tempfile.TemporaryDirectory(
+            prefix="img2table_spark_session_", ignore_cleanup_errors=True
+        )
+    return Path(_staging.name)
+
+
+def session_artifact(fn):
+    """Build ``fn(spark, ...)`` once per session and argument set; later
+    calls return the same object. The key is (applicationId, fn, the bound
+    arguments after ``spark`` with defaults applied), so positional,
+    keyword and defaulted spellings of one call share an entry."""
+    sig = inspect.signature(fn)
+
+    @functools.wraps(fn)
+    def wrapper(spark: SparkSession, *args, **kwargs):
+        bound = sig.bind(spark, *args, **kwargs)
+        bound.apply_defaults()
+        key = (_enter(spark), fn, tuple(bound.arguments.items())[1:])
+        if key not in _cache:
+            _cache[key] = fn(spark, *args, **kwargs)
+        return _cache[key]
+
+    return wrapper

@@ -20,6 +20,7 @@ from pathlib import Path
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from img2table_spark.schema import TRANSCRIPT_SCHEMA
+from img2table_spark.session import session_artifact
 
 REF_TESTS = Path("/root/reference/tests")
 
@@ -168,7 +169,14 @@ _VALUE_EXPR = (
 )
 
 
-_DOCS_MEMO: dict = {}
+@session_artifact
+def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """Source-table reader, one plan handle per (session, dir, table): a
+    DataFrame is an immutable logical-plan handle, so reusing it skips the
+    driver-side file listing + parquet footer schema read every consumer
+    repaid per call. Nothing is persisted — every execution still scans
+    the parquet input."""
+    return spark.read.parquet(f"{sf_dir.rstrip('/')}/{name}.parquet")
 
 
 def transcripts_from_documents(
@@ -177,13 +185,7 @@ def transcripts_from_documents(
     """documents.parquet → transcript table, entirely with JVM-side SQL
     expressions. doc_id % 11 == 3 rows become plain-text (negative) turns;
     doc_id % 5 == 0 rows carry a colspan-2 merged first cell."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    docs = _DOCS_MEMO.get(key)
-    if docs is None:
-        # plan-handle memo (no data caching): skips the repeated driver-side
-        # listing + footer schema read for the per-query synth consumers
-        docs = spark.read.parquet(f"{sf_dir.rstrip('/')}/documents.parquet")
-        _DOCS_MEMO[key] = docs
+    docs = _t(spark, sf_dir, "documents")
     # The source is a single small file (one input split): without an explicit
     # repartition the explode + HTML synthesis below would run in ONE task and
     # serialize the whole stage. The partition COUNT must be explicit — with

@@ -77,3 +77,30 @@ def render_table_page():
     ih, iw = img.shape[:2]
     hocr = f'<div class="ocr_page" id="page_1" title="bbox 0 0 {iw} {ih}">{spans}</div>'
     return img, hocr, grid
+
+
+#: Upper bound on skipped tests and the one reason a test may skip. The
+#: bound may only go down; partial runs stay under it.
+SKIP_BUDGET = 110
+SKIP_REASON = "reference test fixtures not available"
+
+
+def pytest_sessionfinish(session, exitstatus):
+    reporter = session.config.pluginmanager.get_plugin("terminalreporter")
+    if reporter is None:
+        return
+    skipped = reporter.stats.get("skipped", [])
+    reasons = {
+        (r.longrepr[2] if isinstance(r.longrepr, tuple) else str(r.longrepr))
+        .removeprefix("Skipped: ")
+        for r in skipped
+    }
+    problems = []
+    if len(skipped) > SKIP_BUDGET:
+        problems.append(f"{len(skipped)} tests skipped, budget is {SKIP_BUDGET}")
+    if reasons - {SKIP_REASON}:
+        problems.append(f"skip reasons besides {SKIP_REASON!r}: {sorted(reasons - {SKIP_REASON})}")
+    for p in problems:
+        reporter.write_line(f"skip budget: {p}", red=True)
+    if problems:
+        session.exitstatus = pytest.ExitCode.TESTS_FAILED

@@ -300,10 +300,6 @@ def test_sauvola_banded_exact(rng, shape, window, monkeypatch):
 @pytest.mark.parametrize("shape", SHAPES)
 @pytest.mark.parametrize("ksize", [3, 21, 255])
 def test_gaussian_banded_exact(rng, shape, ksize):
-    if ksize // 2 > min(shape) - 1:
-        # reflect101 domain: kernel radius must fit the axis (real callers
-        # cap ksize from char_length)
-        pytest.skip("kernel wider than axis")
     gray = rng.integers(0, 256, shape).astype(np.uint8)
     assert np.array_equal(io_.gaussian_blur_u8(gray, ksize), _gaussian_ref(gray, ksize))
 
@@ -324,8 +320,7 @@ def test_sep_filter_1d_unaffected(rng):
 
 def _sep_filter_whole(a, kernel, axis):
     """The separable pass over the whole image at once, on the engine's
-    reflect-101 index map (which wraps, unlike np.pad, once the radius
-    exceeds the axis)."""
+    reflect-101 index map."""
     r = len(kernel) // 2
     n = a.shape[axis]
     padded = np.take(a, io_._reflect101_idx(n, r), axis=axis)
@@ -347,15 +342,9 @@ def _gaussian_whole(gray, ksize):
 
 
 def _check_blur(gray, ksize):
-    # the reflect-101 index map covers radii up to 2·n − 1 on an axis of n
-    # pixels (it raises IndexError beyond), so every case stays inside that
-    assert ksize // 2 <= 2 * min(gray.shape) - 1
     got = io_.gaussian_blur_u8(gray, ksize)
     assert np.array_equal(got, _gaussian_whole(gray, ksize))
-    if ksize // 2 <= min(gray.shape) - 1:
-        # np.pad's reflect agrees with reflect-101 while one reflection
-        # covers the radius
-        assert np.array_equal(got, _gaussian_ref(gray, ksize))
+    assert np.array_equal(got, _gaussian_ref(gray, ksize))
 
 
 STRIP = io_._BLUR_STRIP
@@ -381,7 +370,7 @@ def test_gaussian_one_pixel_axes(rng, shape):
 @pytest.mark.parametrize("h,ksize", [(20, 31), (20, 61), (STRIP + 1, 61), (40, 79)])
 def test_gaussian_kernel_longer_than_height(rng, h, ksize):
     # ksize > H: the reflected border reaches past the middle of the axis,
-    # and wraps around it once the radius exceeds H - 1
+    # and reflects again once the radius exceeds H - 1
     _check_blur(rng.integers(0, 256, (h, 257)).astype(np.uint8), ksize)
 
 
@@ -393,8 +382,35 @@ def test_sep_filter_strips_match_reference(rng, h, axis):
         k = io_.gaussian_kernel_1d(ksize)
         got = io_._sep_filter(a, k, axis)
         assert np.array_equal(got, _sep_filter_whole(a, k, axis))
-        if ksize // 2 <= a.shape[axis] - 1:
-            assert np.array_equal(got, _sep_filter_ref(a, k, axis))
+        assert np.array_equal(got, _sep_filter_ref(a, k, axis))
+
+
+def _reflect101_idx_one_fold(n, radius):
+    """The index map before it folded with period 2n − 2: exact while
+    radius ≤ n − 1, negative indices beyond."""
+    idx = np.abs(np.arange(-radius, n + radius))
+    over = idx > n - 1
+    idx[over] = 2 * (n - 1) - idx[over]
+    return idx
+
+
+@pytest.mark.parametrize("n", range(1, 9))
+def test_reflect101_idx_matches_np_pad(n):
+    for radius in range(3 * n + 1):
+        idx = io_._reflect101_idx(n, radius)
+        # np.pad's "reflect" is reflect-101, repeated past one reflection
+        assert np.array_equal(idx, np.pad(np.arange(n), radius, mode="reflect"))
+        if radius <= n - 1:
+            old = _reflect101_idx_one_fold(n, radius)
+            assert idx.dtype == old.dtype and np.array_equal(idx, old)
+
+
+@pytest.mark.parametrize("h", [1, 2])
+@pytest.mark.parametrize("ksize", [5, 23, 255])
+def test_gaussian_short_axes_past_two_reflections(rng, h, ksize):
+    # a 1- or 2-row crop (contours.py blurs any crop) at a kernel whose
+    # radius exceeds 2·h − 1 once used to raise IndexError
+    _check_blur(rng.integers(0, 256, (h, 40)).astype(np.uint8), ksize)
 
 
 def test_gaussian_page_strips_exact(page):

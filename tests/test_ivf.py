@@ -39,10 +39,9 @@ def test_k_scales_with_corpus():
 
 
 def test_trainer_deterministic_and_sized(spark):
-    Q._IVF_MEMO.clear()
-    c1 = Q.train_ivf_centroids(spark, SF001)
-    Q._IVF_MEMO.clear()
-    c2 = Q.train_ivf_centroids(spark, SF001)
+    # __wrapped__ bypasses the session cache: two real trainings
+    c1 = Q.train_ivf_centroids.__wrapped__(spark, SF001)
+    c2 = Q.train_ivf_centroids.__wrapped__(spark, SF001)
     assert c1 == c2  # bit-equal across runs (fixed-point arithmetic)
     n = Q._t(spark, SF001, "embeddings").count()
     assert len(c1) == Q.ivf_k_for(n)
@@ -97,8 +96,6 @@ def test_split_bounds_bucket_size_and_oracle_replays(spark, tmp_path):
     import duckdb
 
     sf_dir = _write_skewed_corpus(tmp_path)
-    Q._IVF_MEMO.pop(sf_dir, None)
-    Q._IVF_SPLIT_MEMO.pop(sf_dir, None)
     rows = Q._ivf_assigned(spark, sf_dir).select("vec_id", "bucket").collect()
     got = {r["vec_id"]: r["bucket"] for r in rows}
     sizes: dict = {}
@@ -136,8 +133,6 @@ def test_split_keeps_buckets_bounded_past_k_cap(spark, tmp_path):
         }
     ).to_parquet(tmp_path / "embeddings.parquet", index=False)
     sf_dir = str(tmp_path)
-    Q._IVF_MEMO.pop(sf_dir, None)
-    Q._IVF_SPLIT_MEMO.pop(sf_dir, None)
     assert Q.ivf_k_for(n) == Q._IVF_KMAX  # we really are past the cap
     sizes = (
         Q._ivf_assigned(spark, sf_dir)
