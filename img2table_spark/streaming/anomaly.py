@@ -18,12 +18,10 @@ mergeable state (counts from different streams or restarts fold with a
 SUM — ``anomalies_from_counts`` pre-folds exactly that way) and the
 detector re-reads the bounded count table at whatever cadence ops wants.
 
-events.ts is TIMESTAMP_NTZ (repo NTZ discipline): event time is rebuilt
-tz-free via the anchored integer-micros round-trip shared with the
-funnel, burst, CMS, LogLog and histogram streams; the emitted
-hour_bucket is the SAME integer hour index batch q103 derives
-(micros-since-anchor div 3600000000), so streamed counts join/compare
-against batch tables directly.
+Event time: ``io.with_event_time``. The emitted hour_bucket is the SAME
+integer hour index batch q103 derives (micros-since-anchor div
+3600000000), so streamed counts join/compare against batch tables
+directly.
 """
 
 from __future__ import annotations
@@ -31,10 +29,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from img2table_spark.streaming.funnel import (
+from img2table_spark.streaming.io import (
     _ANCHOR_EPOCH_MS,
-    _EV_US,
     EVENTS_STREAM_SCHEMA,
+    read_files,
+    start_sink,
+    with_event_time,
 )
 
 
@@ -59,33 +59,16 @@ def stream_hour_counts(
     output_dir: str,
     checkpoint_dir: str,
     watermark: str = "30 minutes",
-    available_now: bool = True,
     max_files_per_trigger: int | None = None,
 ) -> StreamingQuery:
     """Emit (hb, event_type, n) finalized hourly count rows — append mode,
     parquet sink, exactly-once via the sink commit log; state per live
     hour is one row per active event type."""
-    reader = spark.readStream.schema(EVENTS_STREAM_SCHEMA)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    ev = (
-        reader.parquet(input_dir)
-        .select("event_type", F.expr(_EV_US).alias("us"))
-        .withColumn(
-            "wm_ts", F.expr(f"timestamp_micros(us + {_ANCHOR_EPOCH_MS} * 1000)")
-        )
-        .withWatermark("wm_ts", watermark)
-    )
-    writer = (
-        _windowed_counts(ev)
-        .writeStream.format("parquet")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    ev = with_event_time(
+        read_files(spark, EVENTS_STREAM_SCHEMA, input_dir, max_files_per_trigger),
+        "event_type",
+    ).withWatermark("wm_ts", watermark)
+    return start_sink(_windowed_counts(ev), output_dir, checkpoint_dir)
 
 
 def anomalies_from_counts(counts: DataFrame) -> DataFrame:

@@ -11,21 +11,34 @@ seen within them), and the watermark retires windows as event time
 advances — the production shape for abuse/rate-limit detection at any
 ingest rate.
 
-events.ts is TIMESTAMP_NTZ (repo NTZ discipline): event time is rebuilt
-tz-free via the anchored integer-micros round-trip shared with the funnel
-stream (pinned equal to queries' anchor in tests).
+Event time: ``io.with_event_time``.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from img2table_spark.streaming.funnel import (
-    _ANCHOR_EPOCH_MS,
-    _EV_US,
+from img2table_spark.streaming.io import (
     EVENTS_STREAM_SCHEMA,
+    read_files,
+    start_sink,
+    with_event_time,
 )
+
+
+def _breaches(ev: DataFrame, window: str, slide: str, threshold: int) -> DataFrame:
+    return (
+        ev.groupBy("user_id", F.window("wm_ts", window, slide).alias("w"))
+        .agg(F.count("*").alias("n_events"))
+        .filter(F.col("n_events") >= threshold)
+        .select(
+            "user_id",
+            F.col("w.start").alias("w_start"),
+            F.col("w.end").alias("w_end"),
+            "n_events",
+        )
+    )
 
 
 def stream_burst(
@@ -37,43 +50,16 @@ def stream_burst(
     slide: str = "30 minutes",
     threshold: int = 5,
     watermark: str = "30 minutes",
-    available_now: bool = True,
     max_files_per_trigger: int | None = None,
 ) -> StreamingQuery:
     """Emit (user_id, w_start, w_end, n_events) for every sliding window in
     which a user's event count reached ``threshold`` — append mode, parquet
     sink, exactly-once via the sink commit log."""
-    reader = spark.readStream.schema(EVENTS_STREAM_SCHEMA)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    ev = (
-        reader.parquet(input_dir)
-        .select("user_id", F.expr(_EV_US).alias("us"))
-        .withColumn(
-            "wm_ts", F.expr(f"timestamp_micros(us + {_ANCHOR_EPOCH_MS} * 1000)")
-        )
-        .withWatermark("wm_ts", watermark)
-    )
-    breaches = (
-        ev.groupBy("user_id", F.window("wm_ts", window, slide).alias("w"))
-        .agg(F.count("*").alias("n_events"))
-        .filter(F.col("n_events") >= threshold)
-        .select(
-            "user_id",
-            F.col("w.start").alias("w_start"),
-            F.col("w.end").alias("w_end"),
-            "n_events",
-        )
-    )
-    writer = (
-        breaches.writeStream.format("parquet")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    ev = with_event_time(
+        read_files(spark, EVENTS_STREAM_SCHEMA, input_dir, max_files_per_trigger),
+        "user_id",
+    ).withWatermark("wm_ts", watermark)
+    return start_sink(_breaches(ev, window, slide, threshold), output_dir, checkpoint_dir)
 
 
 def batch_burst_twin(
@@ -82,23 +68,10 @@ def batch_burst_twin(
     window: str = "1 hour",
     slide: str = "30 minutes",
     threshold: int = 5,
-):
+) -> DataFrame:
     """The identical aggregation on the static table — the stream must
     equal this on finalized windows (equality pinned in tests)."""
-    return (
-        spark.read.schema(EVENTS_STREAM_SCHEMA)
-        .parquet(input_dir)
-        .select("user_id", F.expr(_EV_US).alias("us"))
-        .withColumn(
-            "wm_ts", F.expr(f"timestamp_micros(us + {_ANCHOR_EPOCH_MS} * 1000)")
-        )
-        .groupBy("user_id", F.window("wm_ts", window, slide).alias("w"))
-        .agg(F.count("*").alias("n_events"))
-        .filter(F.col("n_events") >= threshold)
-        .select(
-            "user_id",
-            F.col("w.start").alias("w_start"),
-            F.col("w.end").alias("w_end"),
-            "n_events",
-        )
+    ev = with_event_time(
+        spark.read.schema(EVENTS_STREAM_SCHEMA).parquet(input_dir), "user_id"
     )
+    return _breaches(ev, window, slide, threshold)

@@ -23,6 +23,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.streaming import StreamingQuery
 
+from img2table_spark.streaming.io import read_files, start_sink
+
 DOCS_STREAM_SCHEMA = "doc_id LONG, ts TIMESTAMP, lang STRING, text STRING"
 
 
@@ -54,26 +56,15 @@ def stream_classify_langs(
     profiles: DataFrame,
     window: str = "10 minutes",
     watermark: str = "5 minutes",
-    available_now: bool = True,
     max_files_per_trigger: int | None = None,
 ) -> StreamingQuery:
     """Classify a document stream against the batch-trained profile table;
     emit (w_start, w_end, doc_id, true_lang, pred_lang) rows append-mode,
     exactly-once via the parquet sink commit log."""
-    reader = spark.readStream.schema(DOCS_STREAM_SCHEMA)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    docs = reader.parquet(input_dir).withWatermark("ts", watermark)
-    writer = (
-        _classified(docs, profiles, window)
-        .writeStream.format("parquet")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    docs = read_files(
+        spark, DOCS_STREAM_SCHEMA, input_dir, max_files_per_trigger
+    ).withWatermark("ts", watermark)
+    return start_sink(_classified(docs, profiles, window), output_dir, checkpoint_dir)
 
 
 def batch_classify_twin(

@@ -12,9 +12,7 @@ production "sketch now, query heavy hitters later" shape, and the streaming
 replacement for a per-user COUNT(*) GROUP BY (whose state grows with the
 number of distinct users; the sketch's does not).
 
-events.ts is TIMESTAMP_NTZ (repo NTZ discipline): event time is rebuilt
-tz-free via the anchored integer-micros round-trip shared with the funnel,
-burst, and LogLog streams.
+Event time: ``io.with_event_time``.
 """
 
 from __future__ import annotations
@@ -22,10 +20,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from img2table_spark.streaming.funnel import (
-    _ANCHOR_EPOCH_MS,
-    _EV_US,
+from img2table_spark.streaming.io import (
     EVENTS_STREAM_SCHEMA,
+    read_files,
+    start_sink,
+    with_event_time,
 )
 
 _CMS_KEY = "cast(user_id as string)"
@@ -74,33 +73,16 @@ def stream_cms_cells(
     checkpoint_dir: str,
     window: str = "1 hour",
     watermark: str = "30 minutes",
-    available_now: bool = True,
     max_files_per_trigger: int | None = None,
 ) -> StreamingQuery:
     """Emit (w_start, w_end, r, bucket, cnt) finalized count-min cells —
     append mode, parquet sink, exactly-once via the sink commit log;
     state is ≤ d·w = 4096 cells per live window."""
-    reader = spark.readStream.schema(EVENTS_STREAM_SCHEMA)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    ev = (
-        reader.parquet(input_dir)
-        .select("user_id", F.expr(_EV_US).alias("us"))
-        .withColumn(
-            "wm_ts", F.expr(f"timestamp_micros(us + {_ANCHOR_EPOCH_MS} * 1000)")
-        )
-        .withWatermark("wm_ts", watermark)
-    )
-    cells = _windowed_cells(ev, window)
-    writer = (
-        cells.writeStream.format("parquet")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    ev = with_event_time(
+        read_files(spark, EVENTS_STREAM_SCHEMA, input_dir, max_files_per_trigger),
+        "user_id",
+    ).withWatermark("wm_ts", watermark)
+    return start_sink(_windowed_cells(ev, window), output_dir, checkpoint_dir)
 
 
 def batch_cells_twin(
@@ -108,13 +90,8 @@ def batch_cells_twin(
 ) -> DataFrame:
     """The identical cell derivation on the static table — the stream must
     equal this on finalized windows (pinned in tests)."""
-    ev = (
-        spark.read.schema(EVENTS_STREAM_SCHEMA)
-        .parquet(input_dir)
-        .select("user_id", F.expr(_EV_US).alias("us"))
-        .withColumn(
-            "wm_ts", F.expr(f"timestamp_micros(us + {_ANCHOR_EPOCH_MS} * 1000)")
-        )
+    ev = with_event_time(
+        spark.read.schema(EVENTS_STREAM_SCHEMA).parquet(input_dir), "user_id"
     )
     return _windowed_cells(ev, window)
 

@@ -17,10 +17,10 @@ Three shapes, matching the batch queries they mirror (q07/q19):
 
 from __future__ import annotations
 
-from typing import Any, Iterable, Iterator, Tuple
+from typing import Iterable, Iterator, Tuple
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import SparkSession, functions as F
 from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
@@ -32,10 +32,7 @@ from pyspark.sql.types import (
 )
 
 from img2table_spark.schema import TRANSCRIPT_SCHEMA
-
-
-def _read_stream(spark: SparkSession, input_dir: str) -> DataFrame:
-    return spark.readStream.schema(TRANSCRIPT_SCHEMA).parquet(input_dir)
+from img2table_spark.streaming.io import read_files, start_memory_sink, start_sink
 
 
 def stream_dedup_exact(
@@ -44,26 +41,17 @@ def stream_dedup_exact(
     output_dir: str,
     checkpoint_dir: str,
     watermark: str = "10 minutes",
-    available_now: bool = True,
 ) -> StreamingQuery:
     """Keep the first turn per exact payload hash within the watermark
     horizon; duplicates arriving later than the watermark are not tracked
     (bounded state by design)."""
-    tr = _read_stream(spark, input_dir)
+    tr = read_files(spark, TRANSCRIPT_SCHEMA, input_dir)
     deduped = (
         tr.withColumn("text_hash", F.md5(F.coalesce("text", F.lit(""))))
         .withWatermark("ts", watermark)
         .dropDuplicatesWithinWatermark(["text_hash"])
     )
-    writer = (
-        deduped.writeStream.format("parquet")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_sink(deduped, output_dir, checkpoint_dir)
 
 
 _FIRST_SEEN_SCHEMA = StructType(
@@ -108,13 +96,12 @@ def stream_first_seen(
     input_dir: str,
     output_dir: str,
     checkpoint_dir: str,
-    available_now: bool = True,
 ) -> StreamingQuery:
     """Custom stateful exact-dedup: applyInPandasWithState keyed by payload
     hash; per key the state records "seen" and only the first (ts, conv_id,
     turn_idx)-ordered row is emitted. Exact horizon, state grows with
     distinct keys — the trade the built-in watermark variant avoids."""
-    tr = _read_stream(spark, input_dir)
+    tr = read_files(spark, TRANSCRIPT_SCHEMA, input_dir)
     keyed = tr.withColumn("text_hash", F.md5(F.coalesce("text", F.lit("")))).select(
         "text_hash", "conv_id", F.col("turn_idx").cast("long").alias("turn_idx"), "ts"
     )
@@ -125,15 +112,7 @@ def stream_first_seen(
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    writer = (
-        firsts.writeStream.format("parquet")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_sink(firsts, output_dir, checkpoint_dir)
 
 
 def stream_token_window(
@@ -142,12 +121,11 @@ def stream_token_window(
     query_name: str,
     watermark: str = "10 minutes",
     window: str = "10 minutes",
-    available_now: bool = True,
 ) -> StreamingQuery:
     """Tumbling-window corpus telemetry (rows, whitespace tokens, chars) to
     an in-memory sink (update mode) — the windowed-agg + watermark shape for
     late data the north brief asks for."""
-    tr = _read_stream(spark, input_dir)
+    tr = read_files(spark, TRANSCRIPT_SCHEMA, input_dir)
     agg = (
         tr.withWatermark("ts", watermark)
         .groupBy(F.window("ts", window).alias("w"))
@@ -158,11 +136,4 @@ def stream_token_window(
         )
         .select(F.col("w.start").alias("w_start"), "n_turns", "n_ws_tokens", "n_chars")
     )
-    writer = (
-        agg.writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode("update")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_memory_sink(agg, query_name, "update")

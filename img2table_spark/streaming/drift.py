@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from img2table_spark.streaming.classify import DOCS_STREAM_SCHEMA
+from img2table_spark.streaming.io import read_files, start_sink
 
 
 def _windowed_bins(docs: DataFrame, window: str) -> DataFrame:
@@ -50,26 +51,15 @@ def stream_drift_bins(
     checkpoint_dir: str,
     window: str = "10 minutes",
     watermark: str = "5 minutes",
-    available_now: bool = True,
     max_files_per_trigger: int | None = None,
 ) -> StreamingQuery:
     """Emit (w_start, w_end, bkt, cnt) finalized token-bucket histogram
     rows — append mode, parquet sink, exactly-once via the sink commit
     log; state per live window is ≤ 256 small rows."""
-    reader = spark.readStream.schema(DOCS_STREAM_SCHEMA)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    docs = reader.parquet(input_dir).withWatermark("ts", watermark)
-    writer = (
-        _windowed_bins(docs, window)
-        .writeStream.format("parquet")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    docs = read_files(
+        spark, DOCS_STREAM_SCHEMA, input_dir, max_files_per_trigger
+    ).withWatermark("ts", watermark)
+    return start_sink(_windowed_bins(docs, window), output_dir, checkpoint_dir)
 
 
 def batch_bins_twin(

@@ -2,7 +2,7 @@
 
 The batch operator (operators/extract.py) is deliberately stateless — one
 salted exchange + one Arrow-batched mapInArrow — so it lifts onto
-``readStream`` unchanged: same kernels, same salting, same error tolerance,
+a file stream unchanged: same kernels, same salting, same error tolerance,
 exactly-once output via the parquet sink commit log. This is the
 near-line ingestion shape for the north rule's 10¹²-turn table: transcripts
 land as files, each micro-batch extracts its slice, ``maxFilesPerTrigger``
@@ -18,6 +18,7 @@ from pyspark.sql.streaming import StreamingQuery
 
 from img2table_spark.operators.extract import extract_tables
 from img2table_spark.schema import TRANSCRIPT_SCHEMA
+from img2table_spark.streaming.io import read_files, start_sink
 
 
 def stream_extract_tables(
@@ -27,21 +28,9 @@ def stream_extract_tables(
     checkpoint_dir: str,
     max_files_per_trigger: int | None = None,
     num_partitions: int | None = None,
-    available_now: bool = True,
 ) -> StreamingQuery:
     """transcript file stream → extracted-table rows (EXTRACTED_SCHEMA) in an
     exactly-once parquet sink. See module docstring."""
-    reader = spark.readStream.schema(TRANSCRIPT_SCHEMA)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    tr = reader.parquet(input_dir)
+    tr = read_files(spark, TRANSCRIPT_SCHEMA, input_dir, max_files_per_trigger)
     ext = extract_tables(tr, salt=True, num_partitions=num_partitions)
-    writer = (
-        ext.writeStream.format("parquet")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_sink(ext, output_dir, checkpoint_dir)

@@ -2,12 +2,12 @@
 showcase (``applyInPandasWithState``), streaming twin of batch q36.
 
 Keyed by user_id; state = the earliest (view, click-after-view,
-purchase-after-click) transition times in integer microseconds (the same
-anchor arithmetic as queries._EV_US_SPARK — events.ts is TIMESTAMP_NTZ, so
-epoch extraction is banned and an anchored timestampdiff is the portable
-form). A user's row is emitted EXACTLY ONCE, in the micro-batch where the
-purchase transition completes; transitions may span any number of
-micro-batches (that is the point of keeping state).
+purchase-after-click) transition times in integer microseconds. A user's
+row is emitted EXACTLY ONCE, in the micro-batch where the purchase
+transition completes; transitions may span any number of micro-batches
+(that is the point of keeping state).
+
+Event time: ``io.with_event_time``.
 
 In-order contract: each batch's rows replay sorted by event time, and
 cross-batch arrival is assumed per-user in-order — the standard incremental
@@ -31,15 +31,13 @@ from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import LongType, StructField, StructType
 
-EVENTS_STREAM_SCHEMA = (
-    "event_id LONG, ts TIMESTAMP_NTZ, user_id LONG, event_type STRING, "
-    "value DOUBLE, props STRING"
+from img2table_spark.streaming.io import (
+    _ANCHOR_EPOCH_MS,
+    EVENTS_STREAM_SCHEMA,
+    read_files,
+    start_sink,
+    with_event_time,
 )
-
-# same anchor as queries._EV_US_SPARK (duplicated to keep streaming modules
-# import-light; pinned equal in tests/test_streaming_funnel.py)
-_EV_US = "timestampdiff(MICROSECOND, TIMESTAMP_NTZ '2024-01-01 00:00:00', ts)"
-_ANCHOR_EPOCH_MS = 1_704_067_200_000  # 2024-01-01 00:00:00 UTC
 
 _FUNNEL_OUT = StructType(
     [
@@ -107,25 +105,12 @@ def stream_funnel(
     output_dir: str,
     checkpoint_dir: str,
     watermark: str = "1 hour",
-    available_now: bool = True,
 ) -> StreamingQuery:
     """view → click → purchase funnel over an event stream; one output row
     per user, at completion time. See module docstring for semantics."""
-    # events.ts is TIMESTAMP_NTZ, which Spark refuses as an event-time
-    # column; rebuild a real TIMESTAMP tz-free from the anchored integer
-    # micros (timestamp_micros is epoch-defined — no session-timezone
-    # dependence, unlike a cast).
     ev = (
-        spark.readStream.schema(EVENTS_STREAM_SCHEMA)
-        .parquet(input_dir)
-        .select(
-            "user_id",
-            "event_type",
-            F.expr(_EV_US).alias("us"),
-        )
-        .withColumn(
-            "wm_ts",
-            F.expr(f"timestamp_micros(us + {_ANCHOR_EPOCH_MS} * 1000)"),
+        with_event_time(
+            read_files(spark, EVENTS_STREAM_SCHEMA, input_dir), "user_id", "event_type"
         )
         .withWatermark("wm_ts", watermark)
         .filter(F.col("event_type").isin("view", "click", "purchase"))
@@ -137,12 +122,4 @@ def stream_funnel(
         outputMode="append",
         timeoutConf=GroupStateTimeout.EventTimeTimeout,
     )
-    writer = (
-        completed.writeStream.format("parquet")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_sink(completed, output_dir, checkpoint_dir)

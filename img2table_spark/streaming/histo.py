@@ -14,9 +14,7 @@ arithmetic ((p·n + 99) div 100) — so a quantile read over the stream's
 output equals batch q59 on the same closed window (pinned in tests), and
 histograms from different windows/streams merge by adding counts.
 
-events.ts is TIMESTAMP_NTZ (repo NTZ discipline): event time is rebuilt
-tz-free via the anchored integer-micros round-trip shared with the
-funnel, burst, CMS and LogLog streams.
+Event time: ``io.with_event_time``.
 """
 
 from __future__ import annotations
@@ -24,10 +22,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from img2table_spark.streaming.funnel import (
-    _ANCHOR_EPOCH_MS,
-    _EV_US,
+from img2table_spark.streaming.io import (
     EVENTS_STREAM_SCHEMA,
+    read_files,
+    start_sink,
+    with_event_time,
 )
 
 
@@ -57,33 +56,17 @@ def stream_histogram_bins(
     checkpoint_dir: str,
     window: str = "1 hour",
     watermark: str = "30 minutes",
-    available_now: bool = True,
     max_files_per_trigger: int | None = None,
 ) -> StreamingQuery:
     """Emit (w_start, w_end, event_type, bin, cnt) finalized unit-bin
     histogram rows — append mode, parquet sink, exactly-once via the sink
     commit log; state per live window is one small row per occupied bin."""
-    reader = spark.readStream.schema(EVENTS_STREAM_SCHEMA)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    ev = (
-        reader.parquet(input_dir)
-        .select("event_type", "value", F.expr(_EV_US).alias("us"))
-        .withColumn(
-            "wm_ts", F.expr(f"timestamp_micros(us + {_ANCHOR_EPOCH_MS} * 1000)")
-        )
-        .withWatermark("wm_ts", watermark)
-    )
-    bins = _windowed_bins(ev, window)
-    writer = (
-        bins.writeStream.format("parquet")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    ev = with_event_time(
+        read_files(spark, EVENTS_STREAM_SCHEMA, input_dir, max_files_per_trigger),
+        "event_type",
+        "value",
+    ).withWatermark("wm_ts", watermark)
+    return start_sink(_windowed_bins(ev, window), output_dir, checkpoint_dir)
 
 
 def batch_bins_twin(
@@ -91,13 +74,8 @@ def batch_bins_twin(
 ) -> DataFrame:
     """The identical bin derivation on the static table — the stream must
     equal this on finalized windows (pinned in tests)."""
-    ev = (
-        spark.read.schema(EVENTS_STREAM_SCHEMA)
-        .parquet(input_dir)
-        .select("event_type", "value", F.expr(_EV_US).alias("us"))
-        .withColumn(
-            "wm_ts", F.expr(f"timestamp_micros(us + {_ANCHOR_EPOCH_MS} * 1000)")
-        )
+    ev = with_event_time(
+        spark.read.schema(EVENTS_STREAM_SCHEMA).parquet(input_dir), "event_type", "value"
     )
     return _windowed_bins(ev, window)
 

@@ -14,9 +14,7 @@ streaming side leans on the state store's symmetric hash join instead —
 same answer, different engine strategy, equality pinned in tests on
 closed (watermark-finalized) intervals.
 
-events.ts is TIMESTAMP_NTZ (repo NTZ discipline): event time is rebuilt
-tz-free via the anchored integer-micros round-trip shared with the other
-event streams.
+Event time: ``io.with_event_time``.
 """
 
 from __future__ import annotations
@@ -24,21 +22,22 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from img2table_spark.streaming.funnel import (
-    _ANCHOR_EPOCH_MS,
-    _EV_US,
+from img2table_spark.streaming.io import (
     EVENTS_STREAM_SCHEMA,
+    read_files,
+    start_sink,
+    with_event_time,
 )
 
 
 def _sides(ev: DataFrame, watermark: str) -> tuple[DataFrame, DataFrame]:
-    ts = F.expr(f"timestamp_micros(({_EV_US}) + {_ANCHOR_EPOCH_MS} * 1000)")
+    ev = with_event_time(ev, "event_id", "user_id", "event_type")
     err = (
         ev.filter(F.col("event_type") == "error")
         .select(
             F.col("event_id").alias("error_id"),
             F.col("user_id").alias("err_user"),
-            ts.alias("err_ts"),
+            F.col("wm_ts").alias("err_ts"),
         )
         .withWatermark("err_ts", watermark)
     )
@@ -47,7 +46,7 @@ def _sides(ev: DataFrame, watermark: str) -> tuple[DataFrame, DataFrame]:
         .select(
             F.col("event_id").alias("click_id"),
             F.col("user_id").alias("clk_user"),
-            ts.alias("clk_ts"),
+            F.col("wm_ts").alias("clk_ts"),
         )
         .withWatermark("clk_ts", watermark)
     )
@@ -66,16 +65,12 @@ def stream_attribution_join(
     output_dir: str,
     checkpoint_dir: str,
     watermark: str = "30 minutes",
-    available_now: bool = True,
     max_files_per_trigger: int | None = None,
 ) -> StreamingQuery:
     """Emit (error_id, user_id, click_id, err_ts, clk_ts) for every click
     within one hour after an error by the same user — stream-stream inner
     join, append mode, parquet sink."""
-    reader = spark.readStream.schema(EVENTS_STREAM_SCHEMA)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    ev = reader.parquet(input_dir)
+    ev = read_files(spark, EVENTS_STREAM_SCHEMA, input_dir, max_files_per_trigger)
     err, clk = _sides(ev, watermark)
     pairs = err.join(clk, F.expr(_JOIN_COND), "inner").select(
         "error_id",
@@ -84,15 +79,7 @@ def stream_attribution_join(
         "err_ts",
         "clk_ts",
     )
-    writer = (
-        pairs.writeStream.format("parquet")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_sink(pairs, output_dir, checkpoint_dir)
 
 
 def batch_attribution_twin(spark: SparkSession, input_dir: str) -> DataFrame:

@@ -48,6 +48,7 @@ from img2table_spark.queries import (
     _N_HASHES,
     _mh_affine_long,
 )
+from img2table_spark.streaming.io import read_files, start_sink
 
 DOC_STREAM_SCHEMA = "doc_id LONG, ts TIMESTAMP, text STRING"
 
@@ -134,17 +135,13 @@ def stream_neardup_dedup(
     output_dir: str,
     checkpoint_dir: str,
     watermark: str = "1 hour",
-    available_now: bool = True,
     max_files_per_trigger: "int | None" = None,
 ) -> StreamingQuery:
     """Incremental near-dup verdicts over a document stream: probe the
     static corpus band index, then claim band signatures first-come
     within the stream. Per-sig rows land in parquet; fold per-doc
     verdicts with ``neardup_verdicts``. See module docstring."""
-    reader = spark.readStream.schema(DOC_STREAM_SCHEMA)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    docs = reader.parquet(input_dir)
+    docs = read_files(spark, DOC_STREAM_SCHEMA, input_dir, max_files_per_trigger)
     banded = _with_bands(docs).withColumn("us", F.unix_micros("ts"))
     corpus_keys = corpus_bands.select("band", "sig").distinct().withColumn(
         "in_corpus", F.lit(1)
@@ -169,15 +166,7 @@ def stream_neardup_dedup(
         outputMode="append",
         timeoutConf=GroupStateTimeout.EventTimeTimeout,
     )
-    writer = (
-        claimed.writeStream.format("parquet")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_sink(claimed, output_dir, checkpoint_dir)
 
 
 def neardup_verdicts(spark: SparkSession, output_dir: str) -> DataFrame:

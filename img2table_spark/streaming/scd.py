@@ -30,6 +30,8 @@ from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import LongType, StructField, StructType
 
+from img2table_spark.streaming.io import read_files, start_sink
+
 CHANGELOG_STREAM_SCHEMA = "doc_id LONG, ver LONG, val LONG"
 
 _SCD_OUT = StructType(
@@ -75,12 +77,11 @@ def stream_scd2(
     input_dir: str,
     output_dir: str,
     checkpoint_dir: str,
-    available_now: bool = True,
 ) -> StreamingQuery:
     """Compact a CDC changelog stream into closed SCD2 interval rows.
 
     See module docstring; open intervals live in the per-key state."""
-    log = spark.readStream.schema(CHANGELOG_STREAM_SCHEMA).parquet(input_dir)
+    log = read_files(spark, CHANGELOG_STREAM_SCHEMA, input_dir)
     closed = log.groupBy("doc_id").applyInPandasWithState(
         _scd_fn,
         outputStructType=_SCD_OUT,
@@ -88,12 +89,4 @@ def stream_scd2(
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    writer = (
-        closed.writeStream.format("parquet")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_sink(closed, output_dir, checkpoint_dir)

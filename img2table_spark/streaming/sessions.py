@@ -12,16 +12,11 @@
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import SparkSession, functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from img2table_spark.schema import TRANSCRIPT_SCHEMA
-
-_PII_EMAIL = "[a-z0-9._%+-]+@[a-z0-9.-]+\\.[a-z]{2,}"
-
-
-def _read_stream(spark: SparkSession, input_dir: str) -> DataFrame:
-    return spark.readStream.schema(TRANSCRIPT_SCHEMA).parquet(input_dir)
+from img2table_spark.streaming.io import read_files, start_memory_sink, start_sink
 
 
 def stream_sessionize(
@@ -30,7 +25,6 @@ def stream_sessionize(
     query_name: str,
     watermark: str = "30 minutes",
     gap: str = "30 minutes",
-    available_now: bool = True,
     output_dir: str | None = None,
     checkpoint_dir: str | None = None,
     max_files_per_trigger: int | None = None,
@@ -47,10 +41,7 @@ def stream_sessionize(
     ingest-rate control: with it set, state and per-batch work stay bounded
     no matter how large the backlog is — the 'runs at any ingest rate'
     claim demonstrated against a real sink (r3 verdict #7)."""
-    reader = spark.readStream.schema(TRANSCRIPT_SCHEMA)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    tr = reader.parquet(input_dir)
+    tr = read_files(spark, TRANSCRIPT_SCHEMA, input_dir, max_files_per_trigger)
     agg = (
         tr.withWatermark("ts", watermark)
         .groupBy("conv_id", F.session_window("ts", gap).alias("w"))
@@ -68,24 +59,11 @@ def stream_sessionize(
             "last_turn",
         )
     )
-    if output_dir is not None:
-        if checkpoint_dir is None:
-            raise ValueError("file sink requires checkpoint_dir")
-        writer = (
-            agg.writeStream.format("parquet")
-            .option("path", output_dir)
-            .option("checkpointLocation", checkpoint_dir)
-            .outputMode("append")
-        )
-    else:
-        writer = (
-            agg.writeStream.format("memory")
-            .queryName(query_name)
-            .outputMode("append")
-        )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    if output_dir is None:
+        return start_memory_sink(agg, query_name, "append")
+    if checkpoint_dir is None:
+        raise ValueError("file sink requires checkpoint_dir")
+    return start_sink(agg, output_dir, checkpoint_dir)
 
 
 def stream_quality_filter(
@@ -94,27 +72,20 @@ def stream_quality_filter(
     output_dir: str,
     checkpoint_dir: str,
     min_tokens: int = 5,
-    available_now: bool = True,
 ) -> StreamingQuery:
     """Redact emails and drop sub-quality turns (too few whitespace tokens)
     as the stream lands. Stateless: survives any throughput, no watermark
     needed, exactly-once via the file-sink commit log."""
-    tr = _read_stream(spark, input_dir)
+    from img2table_spark.queries import _PII_EMAIL
+
+    tr = read_files(spark, TRANSCRIPT_SCHEMA, input_dir)
     toks = F.size(F.split(F.coalesce("text", F.lit("")), " "))
     cleaned = (
         tr.filter(toks >= min_tokens)
         .withColumn("text", F.regexp_replace("text", _PII_EMAIL, "<EMAIL>"))
         .withColumn("n_tokens", toks.cast("long"))
     )
-    writer = (
-        cleaned.writeStream.format("parquet")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_sink(cleaned, output_dir, checkpoint_dir)
 
 
 # ------------------------------------------------------- multimodal streaming
@@ -128,7 +99,6 @@ def stream_image_dedup(
     output_dir: str,
     checkpoint_dir: str,
     watermark: str = "10 minutes",
-    available_now: bool = True,
 ) -> StreamingQuery:
     """Streaming perceptual MEDIA dedup: fingerprint each arriving payload
     (Arrow-batched mapInPandas) and keep the first arrival per fingerprint
@@ -155,9 +125,7 @@ def stream_image_dedup(
 
     import pandas as pd
 
-    stream = (
-        spark.readStream.schema(MEDIA_STREAM_SCHEMA).parquet(input_dir)
-    )
+    stream = read_files(spark, MEDIA_STREAM_SCHEMA, input_dir)
 
     def gen(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
         from img2table_spark.kernels.avi import video_fingerprint
@@ -198,12 +166,4 @@ def stream_image_dedup(
         .withWatermark("ts", watermark)
         .dropDuplicatesWithinWatermark(["dhash"])
     )
-    writer = (
-        deduped.writeStream.format("parquet")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_sink(deduped, output_dir, checkpoint_dir)

@@ -18,6 +18,8 @@ turns are dropped on append — exactly the batch window frame), and whole
 conversations are evicted by EventTimeTimeout once the stream watermark
 passes their last activity + horizon. State per key is O(ctx · turn size),
 independent of conversation length or stream duration.
+
+Event time: ``io.with_event_time``.
 """
 
 from __future__ import annotations
@@ -26,22 +28,24 @@ import json
 from typing import Iterable, Iterator, Tuple
 
 import pandas as pd
-from pyspark.sql import SparkSession, functions as F
+from pyspark.sql import SparkSession
 from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import LongType, StringType, StructField, StructType
+
+from img2table_spark.queries import _SFT_CTX  # context turns per prompt
+from img2table_spark.streaming.io import (
+    _ANCHOR_EPOCH_MS,
+    read_files,
+    start_sink,
+    with_event_time,
+)
 
 TRANSCRIPT_STREAM_SCHEMA = (
     "conv_id STRING, turn_idx INT, role STRING, text STRING, tool STRING, "
     "ts TIMESTAMP_NTZ"
 )
 
-# same anchored-micros trick as streaming/funnel.py: TIMESTAMP_NTZ is
-# rejected by withWatermark, so event time is rebuilt tz-free
-_TS_US = "timestampdiff(MICROSECOND, TIMESTAMP_NTZ '2024-01-01 00:00:00', ts)"
-_ANCHOR_EPOCH_MS = 1_704_067_200_000  # 2024-01-01 00:00:00 UTC
-
-_SFT_CTX = 3  # context turns per prompt — MUST match queries._SFT_CTX
 _HORIZON_US = 24 * 3_600 * 1_000_000  # conversation eviction horizon
 
 _SFT_OUT = StructType(
@@ -102,22 +106,17 @@ def stream_sft_pairs(
     output_dir: str,
     checkpoint_dir: str,
     watermark: str = "1 hour",
-    available_now: bool = True,
     max_files_per_trigger: int | None = None,
 ) -> StreamingQuery:
     """(prompt, response) SFT samples from a transcript stream; parquet
     sink, append mode. See module docstring for semantics."""
-    reader = spark.readStream.schema(TRANSCRIPT_STREAM_SCHEMA)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    tr = (
-        reader.parquet(input_dir)
-        .select("conv_id", "turn_idx", "role", "text", F.expr(_TS_US).alias("us"))
-        .withColumn(
-            "wm_ts", F.expr(f"timestamp_micros(us + {_ANCHOR_EPOCH_MS} * 1000)")
-        )
-        .withWatermark("wm_ts", watermark)
-    )
+    tr = with_event_time(
+        read_files(spark, TRANSCRIPT_STREAM_SCHEMA, input_dir, max_files_per_trigger),
+        "conv_id",
+        "turn_idx",
+        "role",
+        "text",
+    ).withWatermark("wm_ts", watermark)
     pairs = tr.groupBy("conv_id").applyInPandasWithState(
         _sft_fn,
         outputStructType=_SFT_OUT,
@@ -125,12 +124,4 @@ def stream_sft_pairs(
         outputMode="append",
         timeoutConf=GroupStateTimeout.EventTimeTimeout,
     )
-    writer = (
-        pairs.writeStream.format("parquet")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_sink(pairs, output_dir, checkpoint_dir)

@@ -13,9 +13,7 @@ estimate at query time" shape, and the streaming replacement for
 COUNT(DISTINCT) (which Structured Streaming cannot express incrementally
 without unbounded state).
 
-events.ts is TIMESTAMP_NTZ (repo NTZ discipline): event time is rebuilt
-tz-free via the anchored integer-micros round-trip shared with the funnel
-and burst streams.
+Event time: ``io.with_event_time``.
 """
 
 from __future__ import annotations
@@ -23,10 +21,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from img2table_spark.streaming.funnel import (
-    _ANCHOR_EPOCH_MS,
-    _EV_US,
+from img2table_spark.streaming.io import (
     EVENTS_STREAM_SCHEMA,
+    read_files,
+    start_sink,
+    with_event_time,
 )
 
 # Mirrors queries.q56 (imported lazily there to keep this module
@@ -42,11 +41,23 @@ _HLL_H = (
 )
 
 
-def _register_cols(df: DataFrame) -> DataFrame:
-    return df.withColumn("h", F.expr(_HLL_H)).select(
-        df["*"],
-        (F.col("h") % _HLL_M).alias("idx"),
-        F.expr(_HLL_RHO).alias("rho"),
+def _registers(ev: DataFrame, window: str) -> DataFrame:
+    return (
+        ev.withColumn("h", F.expr(_HLL_H))
+        .select(
+            ev["*"],
+            (F.col("h") % _HLL_M).alias("idx"),
+            F.expr(_HLL_RHO).alias("rho"),
+        )
+        .groupBy(F.window("wm_ts", window).alias("w"), "event_type", "idx")
+        .agg(F.max("rho").alias("m"))
+        .select(
+            F.col("w.start").alias("w_start"),
+            F.col("w.end").alias("w_end"),
+            "event_type",
+            "idx",
+            "m",
+        )
     )
 
 
@@ -57,44 +68,17 @@ def stream_distinct_sketch(
     checkpoint_dir: str,
     window: str = "1 hour",
     watermark: str = "30 minutes",
-    available_now: bool = True,
     max_files_per_trigger: int | None = None,
 ) -> StreamingQuery:
     """Emit (w_start, w_end, event_type, idx, m) finalized LogLog register
     rows — append mode, parquet sink, exactly-once via the sink commit
     log; state is ≤ 64 registers per live (window, event_type)."""
-    reader = spark.readStream.schema(EVENTS_STREAM_SCHEMA)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    ev = (
-        reader.parquet(input_dir)
-        .select("event_type", "user_id", F.expr(_EV_US).alias("us"))
-        .withColumn(
-            "wm_ts", F.expr(f"timestamp_micros(us + {_ANCHOR_EPOCH_MS} * 1000)")
-        )
-        .withWatermark("wm_ts", watermark)
-    )
-    regs = (
-        _register_cols(ev)
-        .groupBy(F.window("wm_ts", window).alias("w"), "event_type", "idx")
-        .agg(F.max("rho").alias("m"))
-        .select(
-            F.col("w.start").alias("w_start"),
-            F.col("w.end").alias("w_end"),
-            "event_type",
-            "idx",
-            "m",
-        )
-    )
-    writer = (
-        regs.writeStream.format("parquet")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    ev = with_event_time(
+        read_files(spark, EVENTS_STREAM_SCHEMA, input_dir, max_files_per_trigger),
+        "event_type",
+        "user_id",
+    ).withWatermark("wm_ts", watermark)
+    return start_sink(_registers(ev, window), output_dir, checkpoint_dir)
 
 
 def batch_registers_twin(
@@ -102,26 +86,12 @@ def batch_registers_twin(
 ) -> DataFrame:
     """The identical register derivation on the static table — the stream
     must equal this on finalized windows (pinned in tests)."""
-    ev = (
-        spark.read.schema(EVENTS_STREAM_SCHEMA)
-        .parquet(input_dir)
-        .select("event_type", "user_id", F.expr(_EV_US).alias("us"))
-        .withColumn(
-            "wm_ts", F.expr(f"timestamp_micros(us + {_ANCHOR_EPOCH_MS} * 1000)")
-        )
+    ev = with_event_time(
+        spark.read.schema(EVENTS_STREAM_SCHEMA).parquet(input_dir),
+        "event_type",
+        "user_id",
     )
-    return (
-        _register_cols(ev)
-        .groupBy(F.window("wm_ts", window).alias("w"), "event_type", "idx")
-        .agg(F.max("rho").alias("m"))
-        .select(
-            F.col("w.start").alias("w_start"),
-            F.col("w.end").alias("w_end"),
-            "event_type",
-            "idx",
-            "m",
-        )
-    )
+    return _registers(ev, window)
 
 
 def fold_registers(regs: DataFrame) -> DataFrame:

@@ -1,4 +1,5 @@
 import json
+import sys
 from pathlib import Path
 
 import pandas as pd
@@ -35,6 +36,37 @@ def spark():
 
     s = get_spark(app_name="img2table-spark-tests")
     yield s
+
+
+def _stop_active_streams() -> list[str]:
+    """Stop every streaming query still running in this process's Spark
+    session and name them. Never starts Spark: without a live session
+    there is nothing to stop."""
+    if "pyspark.sql" not in sys.modules:
+        return []
+    from pyspark.sql import SparkSession
+
+    s = SparkSession.getActiveSession()
+    if s is None:
+        return []
+    active = s.streams.active
+    for q in active:
+        q.stop()
+    return [q.name or str(q.id) for q in active]
+
+
+@pytest.hookimpl(wrapper=True)
+def pytest_runtest_call(item):
+    """Fail a test that leaves a streaming query running (e.g. one whose
+    ``awaitTermination`` timed out), and stop it so later tests start
+    clean."""
+    try:
+        result = yield
+    finally:
+        leaked = _stop_active_streams()
+    if leaked:
+        pytest.fail(f"streaming queries left running: {leaked}", pytrace=False)
+    return result
 
 
 def render_table_page():

@@ -20,7 +20,7 @@ def test_stream_extract_matches_batch(spark, tmp_path):
     ckpt = str(tmp_path / "ckpt")
     df.write.parquet(inp)
 
-    q = stream_extract_tables(spark, inp, out, ckpt, available_now=True)
+    q = stream_extract_tables(spark, inp, out, ckpt)
     q.awaitTermination(300)
 
     got = spark.read.parquet(out)
@@ -31,7 +31,7 @@ def test_stream_extract_matches_batch(spark, tmp_path):
     assert _rows(got) == _rows(extract_tables(spark.read.parquet(inp)))
 
     # restart with no new files → nothing reprocessed
-    q2 = stream_extract_tables(spark, inp, out, ckpt, available_now=True)
+    q2 = stream_extract_tables(spark, inp, out, ckpt)
     q2.awaitTermination(300)
     assert spark.read.parquet(out).count() == n_expected
 
@@ -41,7 +41,7 @@ def test_stream_extract_matches_batch(spark, tmp_path):
         "concat('late_', conv_id) AS conv_id", "turn_idx", "role", "text", "tool", "ts"
     )
     late.write.mode("append").parquet(inp)
-    q3 = stream_extract_tables(spark, inp, out, ckpt, available_now=True)
+    q3 = stream_extract_tables(spark, inp, out, ckpt)
     q3.awaitTermination(300)
     assert sum(json.loads(p.json)["numInputRows"] for p in q3.recentProgress) == late.count()
     n_expected2 = sum(1 for v in expected2.values() if v)

@@ -11,7 +11,8 @@ import json
 import time
 
 from img2table_spark.queries import _EV_US_SPARK, q36_funnel
-from img2table_spark.streaming.funnel import _EV_US, stream_funnel
+from img2table_spark.streaming.funnel import stream_funnel
+from img2table_spark.streaming.io import _EV_US
 
 BASE = dt.datetime(2024, 1, 1)
 
