@@ -13,11 +13,8 @@ Payload forms (FIXTURES.md §1):
 
 from __future__ import annotations
 
-import base64
-import binascii
-import json
-
 from img2table_spark.kernels.objects import Table
+from img2table_spark.kernels.payload import PayloadError, parse_envelope
 
 
 class ImageDecodeError(ValueError):
@@ -75,37 +72,10 @@ def decode_image_bytes(data: bytes):
 
 
 def extract_image_payload(text: str) -> list[Table]:
-    from img2table_spark.operators.extract import PayloadError
-
-    opts = {
-        "implicit_rows": False,
-        "implicit_columns": False,
-        "borderless_tables": False,
-        "detect_rotation": False,
-    }
-    hocr = None
-    payload = text.strip()
-    if payload.startswith("{"):
-        try:
-            obj = json.loads(payload)
-            b64 = obj["image"]
-            hocr = obj.get("hocr")
-            for k in opts:
-                if k in obj:
-                    opts[k] = bool(obj[k])
-        except (json.JSONDecodeError, KeyError, TypeError) as exc:
-            raise PayloadError(f"invalid image JSON payload: {exc}") from exc
-    else:
-        b64 = payload
-
-    try:
-        data = base64.b64decode(b64, validate=True)
-    except (binascii.Error, ValueError) as exc:
-        raise PayloadError(f"invalid base64 image payload: {exc}") from exc
-
     from img2table_spark.kernels.document import extract_image_tables
     from img2table_spark.kernels.hocr import parse_hocr_pages
 
+    data, opts, hocr = parse_envelope(text, "image", lambda obj: obj.get("hocr"))
     try:
         img = decode_image_bytes(data)
     except ImageDecodeError as exc:

@@ -1,39 +1,51 @@
-"""PDF payload path: vector-native table extraction (S2/S4 substitute).
+"""PDF payload path: one page loop, three page routes.
 
-The reference rasterizes each page at 200 DPI and runs the pixel pipeline
-(document/pdf.py:46-67); rasterizing in pure Python is infeasible and
-wasteful at scale, so this path derives the same inputs directly from the
-PDF's vector content:
+The reference renders every page at 200 DPI and runs the image pipeline on
+it (document/pdf.py:46-67). ``extract_pdf_tables_auto`` is the one PDF page
+loop: it parses the bytes once, walks the page tree once, and for each
+requested page interprets the content stream once and sizes its 200-DPI
+canvas with ``_page_box`` (the one MediaBox reader, shared with the two
+renderers). A page whose canvas is empty or larger than ``_MAX_CANVAS_PX``
+yields no tables. Otherwise the route rule picks one page function:
 
-  - table borders: stroked/filled path geometry drawn into a sparse binary
-    mask at 200 DPI → the SAME golden-tested line detector (B1's morphology
-    chain, kernels/lines.py:identify_straight_lines)
-  - characters: text operators + font metrics → charboxes in the
-    reference's 200-DPI coordinate space (ocr/pdf.py:119-152 transform)
-  - words: the reference's char-clustering rules verbatim
-    (ocr/pdf.py:106-197): split on whitespace chars, direction-coherent
-    y/x-overlap ≥ 0.5·min height, distance ≤ 2·word size
-  - char_length / median_line_sep / contours: computed from charboxes and
-    word boxes with the same estimators the reference applies to pixel
-    connected components (metrics.py:251-293,330-401)
+  - no text → raster (``_raster_page``): ``rasterize_pdf_page`` composes
+    the page's image XObjects through their CTMs, vector rects on top, and
+    the pixel pipeline runs with caller-supplied OCR words
+  - text + ``borderless_tables`` or ``detect_rotation`` → rendered
+    (``_rendered_page``): ``render_pdf_text_page`` draws one ink box per
+    glyph, and the pixel pipeline runs with words clustered from the same
+    chars (caller words if the page was rotation-corrected)
+  - text, default flags → vector (``_vector_page``): the pixel pipeline's
+    inputs come straight from the vector content:
 
-Then B2–B12 + T1–T8 run unchanged. Output contract: same tables, titles and
-200-DPI bboxes as the reference's raster path.
+      - table borders: stroked/filled path geometry drawn into a sparse
+        binary mask at 200 DPI → the SAME golden-tested line detector
+        (B1's morphology chain, kernels/lines.py:identify_straight_lines)
+      - characters: text operators + font metrics → charboxes in the
+        reference's 200-DPI coordinate space (ocr/pdf.py:119-152 transform)
+      - words: the reference's char-clustering rules verbatim
+        (ocr/pdf.py:106-197): split on whitespace chars, direction-coherent
+        y/x-overlap ≥ 0.5·min height, distance ≤ 2·word size
+      - char_length / median_line_sep / contours: computed from charboxes
+        and word boxes with the same estimators the reference applies to
+        pixel connected components (metrics.py:251-293,330-401)
+
+    then B2–B12 + T1–T8 run unchanged. Output contract: same tables, titles
+    and 200-DPI bboxes as the reference's raster path.
 """
 
 from __future__ import annotations
-
-import base64
-import binascii
 
 import numpy as np
 import pandas as pd
 
 from img2table_spark.kernels.cells import get_cells
+from img2table_spark.kernels.document import extract_image_tables
 from img2table_spark.kernels.implicit import implicit_content
 from img2table_spark.kernels.lines import identify_straight_lines
 from img2table_spark.kernels.metrics import get_row_separations
 from img2table_spark.kernels.objects import Cell, Line, Table
+from img2table_spark.kernels.payload import PayloadError, parse_envelope
 from img2table_spark.kernels.pdf_native import (
     SCALE,
     PdfChar,
@@ -331,78 +343,60 @@ def _pdf_titles(tables: list[Table], words: pd.DataFrame, contours: list[Cell], 
 
 # --------------------------------------------------------------- pipeline
 
-def extract_pdf_tables_from_bytes(
-    data: bytes,
-    implicit_rows: bool = False,
-    implicit_columns: bool = False,
-    min_confidence: int = 50,
-    pages: list[int] | None = None,
-) -> list[list[Table]]:
-    """PDF bytes → per-page content-filled tables (vector-native path).
-    ``pages`` restricts work to those 0-based page indices; the output list
-    then holds only the requested pages, in ascending page order (reference
-    sorts pages in Document.__post_init__ and keys results ordinally)."""
-    doc = PdfDocument(data)
-    out: list[list[Table]] = []
-    for page_idx, page in enumerate(doc.pages()):
-        if pages is not None and page_idx not in pages:
-            continue
-        media = [float(doc.resolve(v)) for v in doc.resolve(page.get("MediaBox", [0, 0, 612, 792]))]
-        page_w = media[2] - media[0]
-        page_h = media[3] - media[1]
-        img_shape = (int(page_h * SCALE), int(page_w * SCALE))
+def _vector_page(
+    chars: list[PdfChar], rects: list[PdfRect], page_idx: int, media: list[float],
+    implicit_rows: bool, implicit_columns: bool, min_confidence: int,
+) -> list[Table]:
+    """Vector route: one text-layer page → content-filled tables."""
+    page_h = media[3] - media[1]
+    img_shape = (int(page_h * SCALE), int((media[2] - media[0]) * SCALE))
+    px_chars = chars_to_pixel(chars, page_h)
+    word_dicts = cluster_words(px_chars, page_idx)
+    char_length, median_line_sep, contours = pdf_metrics(px_chars, word_dicts)
+    if char_length is None:
+        return []
 
-        chars, rects = interpret_page(doc, page)
-        px_chars = chars_to_pixel(chars, page_h)
-        word_dicts = cluster_words(px_chars, page_idx)
-        char_length, median_line_sep, contours = pdf_metrics(px_chars, word_dicts)
-        if char_length is None:
-            out.append([])
-            continue
+    min_line_length = (
+        int(min(1.5 * median_line_sep, 4 * char_length)) if median_line_sep else 20
+    )
+    h_lines, v_lines = detect_pdf_lines(
+        rects, page_h, img_shape, min_line_length, char_length
+    )
+    lines = h_lines + v_lines
 
-        min_line_length = (
-            int(min(1.5 * median_line_sep, 4 * char_length)) if median_line_sep else 20
+    cells = get_cells(h_lines, v_lines)
+    tables = get_tables(cells=cells, elements=contours, lines=lines, char_length=char_length)
+    tables = [
+        implicit_content(
+            table=tb,
+            contours=contours,
+            char_length=char_length,
+            implicit_rows=implicit_rows,
+            implicit_columns=implicit_columns,
         )
-        h_lines, v_lines = detect_pdf_lines(
-            rects, page_h, img_shape, min_line_length, char_length
-        )
-        lines = h_lines + v_lines
+        for tb in tables
+    ]
+    tables = merge_consecutive_tables(tables, contours)
+    tables = [tb for tb in tables if min(tb.nb_rows, tb.nb_columns) >= 2]
 
-        cells = get_cells(h_lines, v_lines)
-        tables = get_tables(cells=cells, elements=contours, lines=lines, char_length=char_length)
-        tables = [
-            implicit_content(
-                table=tb,
-                contours=contours,
-                char_length=char_length,
-                implicit_rows=implicit_rows,
-                implicit_columns=implicit_columns,
-            )
-            for tb in tables
-        ]
-        tables = merge_consecutive_tables(tables, contours)
-        tables = [tb for tb in tables if min(tb.nb_rows, tb.nb_columns) >= 2]
-
-        words = pd.DataFrame(word_dicts, columns=WORD_COLUMNS)
-        if len(words):
-            tables = [table_get_content(tb, words, min_confidence) for tb in tables]
-            tables = [tb for tb in tables if max(tb.nb_rows, tb.nb_columns) >= 2]
-            tables = _pdf_titles(tables, words, contours, img_shape[1])
-        tables = [
-            tb
-            for tb in tables
-            if (max(tb.nb_rows, tb.nb_columns) >= 2 and not tb.borderless)
-            or (tb.nb_rows >= 2 and tb.nb_columns >= 3)
-        ]
-        out.append(tables)
-    return out
+    words = pd.DataFrame(word_dicts, columns=WORD_COLUMNS)
+    if len(words):
+        tables = [table_get_content(tb, words, min_confidence) for tb in tables]
+        tables = [tb for tb in tables if max(tb.nb_rows, tb.nb_columns) >= 2]
+        tables = _pdf_titles(tables, words, contours, img_shape[1])
+    return [
+        tb
+        for tb in tables
+        if (max(tb.nb_rows, tb.nb_columns) >= 2 and not tb.borderless)
+        or (tb.nb_rows >= 2 and tb.nb_columns >= 3)
+    ]
 
 
 def extract_pdf_payload(text: str) -> list[Table]:
     """Spark-UDF entry: base64 PDF → flat table list (pages concatenated in
     order, per-turn output contract).
 
-    Two payload shapes, mirroring the image payload envelope:
+    Two payload shapes (kernels/payload.py):
       - plain base64 PDF → defaults (implicit_rows=True)
       - JSON ``{"pdf": b64, "implicit_rows"/"implicit_columns"/
         "borderless_tables"/"detect_rotation": bool, "pages": [int, ...]}``
@@ -412,42 +406,18 @@ def extract_pdf_payload(text: str) -> list[Table]:
         those 0-based indices — at corpus scale, splitting a long document
         into per-page turns turns one straggler task into parallel work.
     """
-    import json as _json
-
-    from img2table_spark.operators.extract import PayloadError
-
-    opts = {
-        "implicit_rows": True,
-        "implicit_columns": False,
-        "borderless_tables": False,
-        "detect_rotation": False,
-    }
-    pages = None
-    payload = text.strip()
-    if payload.startswith("{"):
-        try:
-            obj = _json.loads(payload)
-            payload = obj["pdf"]
-            for k in opts:
-                if k in obj:
-                    opts[k] = bool(obj[k])
-            if obj.get("pages") is not None:
-                pages = [int(p) for p in obj["pages"]]
-        except (_json.JSONDecodeError, KeyError, TypeError, ValueError) as exc:
-            raise PayloadError(f"invalid PDF JSON payload: {exc}") from exc
-
-    try:
-        data = base64.b64decode(payload, validate=True)
-        if not data.startswith(b"%PDF"):
-            raise ValueError("not a PDF header")
-    except (binascii.Error, ValueError) as exc:
-        raise PayloadError(f"invalid PDF payload: {exc}") from exc
-
+    data, opts, pages = parse_envelope(text, "pdf", _envelope_pages)
+    if not data.startswith(b"%PDF"):
+        raise PayloadError("invalid PDF payload: not a PDF header")
     try:
         per_page, _ = extract_pdf_tables_auto(data, pages=pages, **opts)
     except PdfError as exc:
         raise PayloadError(f"unsupported PDF: {exc}") from exc
     return [tb for page in per_page for tb in page]
+
+
+def _envelope_pages(obj: dict) -> "list[int] | None":
+    return None if obj.get("pages") is None else [int(p) for p in obj["pages"]]
 
 
 # ------------------------------------------------- scanned-PDF raster path
@@ -523,6 +493,17 @@ def _decode_xobject_image(doc: PdfDocument, xobj) -> "np.ndarray | None":
 
 
 _MAX_CANVAS_PX = 64_000_000  # ~A0 at 200 DPI; guards hostile MediaBoxes
+
+
+def _page_box(doc: PdfDocument, page: dict) -> "tuple[list[float], int, int] | None":
+    """(MediaBox, canvas height, canvas width) at 200 DPI, or None when the
+    canvas is empty or larger than ``_MAX_CANVAS_PX``."""
+    media = [float(doc.resolve(v)) for v in doc.resolve(page.get("MediaBox", [0, 0, 612, 792]))]
+    cw = int(round((media[2] - media[0]) * SCALE))
+    ch = int(round((media[3] - media[1]) * SCALE))
+    if cw <= 0 or ch <= 0 or cw * ch > _MAX_CANVAS_PX:
+        return None
+    return media, ch, cw
 
 
 def _draw_affine_image(canvas: np.ndarray, img: np.ndarray, ctm, media) -> None:
@@ -613,11 +594,10 @@ def rasterize_pdf_page(doc: PdfDocument, page: dict) -> "np.ndarray | None":
 
     reference: document/pdf.py:46-67 renders whole pages via pdfium at
     scale=200/72; this is the from-scratch equivalent for scanned pages."""
-    media = [float(doc.resolve(v)) for v in doc.resolve(page.get("MediaBox", [0, 0, 612, 792]))]
-    cw = int(round((media[2] - media[0]) * SCALE))
-    ch = int(round((media[3] - media[1]) * SCALE))
-    if cw <= 0 or ch <= 0 or cw * ch > _MAX_CANVAS_PX:
+    box = _page_box(doc, page)
+    if box is None:
         return None
+    media, ch, cw = box
     _, rects, placements = interpret_page_full(doc, page)
     canvas = None
     for ref, ctm in placements:
@@ -732,12 +712,11 @@ def render_pdf_text_page(doc: PdfDocument, page: dict) -> "np.ndarray | None":
     (document/pdf.py:46-67); exact glyph outlines are not reproduced, but
     every downstream consumer reads only ink EXTENT statistics (contours,
     RLSA runs, whitespace gaps), which the model preserves."""
-    media = [float(doc.resolve(v)) for v in doc.resolve(page.get("MediaBox", [0, 0, 612, 792]))]
-    page_h = media[3] - media[1]
-    cw = int(round((media[2] - media[0]) * SCALE))
-    ch = int(round(page_h * SCALE))
-    if cw <= 0 or ch <= 0 or cw * ch > _MAX_CANVAS_PX:
+    box = _page_box(doc, page)
+    if box is None:
         return None
+    media, ch, cw = box
+    page_h = media[3] - media[1]
     chars, rects, placements = interpret_page_full(doc, page)
     canvas = np.full((ch, cw, 3), 255, dtype=np.uint8)
     for ref, ctm in placements:
@@ -784,112 +763,50 @@ def render_pdf_text_page(doc: PdfDocument, page: dict) -> "np.ndarray | None":
     return canvas
 
 
-def extract_text_pdf_tables_rendered(
-    data: bytes,
-    implicit_rows: bool = False,
-    implicit_columns: bool = False,
-    borderless_tables: bool = False,
-    min_confidence: int = 50,
-    pages: list[int] | None = None,
-    detect_rotation: bool = False,
-    words_by_page: "dict[int, pd.DataFrame] | None" = None,
-) -> "tuple[list[list[Table]], bool]":
-    """Pixel path for text-layer pages — the reference renders EVERY page and
-    runs the image pipeline (document/pdf.py:46-67, base/__init__.py:115-130);
-    this is the route for flags the vector-native path cannot express
-    (borderless_tables, detect_rotation).
+def _rendered_page(
+    doc: PdfDocument, page: dict, chars: list[PdfChar], page_idx: int,
+    media: list[float], words: "pd.DataFrame | None", detect_rotation: bool,
+    **opts,
+) -> "tuple[list[Table], bool]":
+    """Rendered route: one text-layer page through the pixel pipeline, for
+    the flags the vector route cannot express (borderless_tables,
+    detect_rotation). Returns (tables, page was rotated).
 
     Words come from the page's own text layer (PdfOCR analog, pixel space)
     UNLESS the page was rotation-corrected: the reference skips PdfOCR on
     rotated documents (document/pdf.py:69-77 ``_rotated`` guard) because the
-    text-layer coordinates no longer match the fixed image — caller-provided
-    OCR words in ``words_by_page`` are used there instead.
+    text-layer coordinates no longer match the fixed image — the caller's
+    OCR ``words`` are used there instead."""
+    canvas = render_pdf_text_page(doc, page)
+    rotated = False
+    if detect_rotation:
+        from img2table_spark.kernels.rotation import fix_rotation_image
 
-    Returns (per-page tables, any_page_rotated)."""
-    from img2table_spark.kernels.document import extract_image_tables
-
-    doc = PdfDocument(data)
-    out: list[list[Table]] = []
-    any_rotated = False
-    for page_idx, page in enumerate(doc.pages()):
-        if pages is not None and page_idx not in pages:
-            continue
-        canvas = render_pdf_text_page(doc, page)
-        if canvas is None:
-            out.append([])
-            continue
-        rotated = False
-        if detect_rotation:
-            from img2table_spark.kernels.rotation import fix_rotation_image
-
-            canvas, rotated = fix_rotation_image(canvas)
-            any_rotated = any_rotated or rotated
-        if rotated:
-            words = (words_by_page or {}).get(page_idx)
-        else:
-            media = [
-                float(doc.resolve(v))
-                for v in doc.resolve(page.get("MediaBox", [0, 0, 612, 792]))
-            ]
-            chars, _ = interpret_page(doc, page)
-            word_dicts = cluster_words(
-                chars_to_pixel(chars, media[3] - media[1]), page_idx
-            )
-            words = pd.DataFrame(word_dicts, columns=WORD_COLUMNS)
-            if not len(words):
-                words = None
-        out.append(
-            extract_image_tables(
-                canvas,
-                words=words,
-                implicit_rows=implicit_rows,
-                implicit_columns=implicit_columns,
-                borderless_tables=borderless_tables,
-                min_confidence=min_confidence,
-            )
+        canvas, rotated = fix_rotation_image(canvas)
+    if not rotated:
+        words = pd.DataFrame(
+            cluster_words(chars_to_pixel(chars, media[3] - media[1]), page_idx),
+            columns=WORD_COLUMNS,
         )
-    return out, any_rotated
+        if not len(words):
+            words = None
+    return extract_image_tables(canvas, words=words, **opts), rotated
 
 
-def extract_scanned_pdf_tables(
-    data: bytes,
-    implicit_rows: bool = False,
-    implicit_columns: bool = False,
-    borderless_tables: bool = False,
-    min_confidence: int = 50,
-    pages: list[int] | None = None,
-    words_by_page: "dict[int, pd.DataFrame] | None" = None,
-    detect_rotation: bool = False,
-) -> list[list["Table"]]:
-    """Raster path for image-only PDF pages: compose the page's image
-    XObjects (plus vector overlays) onto a 200-DPI canvas via their CTMs and
-    run the full pixel pipeline. Output bboxes are directly in the
-    reference's 200-DPI page space. Scans have no native text; pass OCR
-    words (200-DPI page coordinates, keyed by 0-based page index) through
-    ``words_by_page`` for content."""
-    from img2table_spark.kernels.document import extract_image_tables
-
-    doc = PdfDocument(data)
-    out = []
-    for page_idx, page in enumerate(doc.pages()):
-        if pages is not None and page_idx not in pages:
-            continue
-        canvas = rasterize_pdf_page(doc, page)
-        if canvas is None:
-            out.append([])
-            continue
-        words = (words_by_page or {}).get(page_idx)
-        tables = extract_image_tables(
-            canvas,
-            words=words,
-            implicit_rows=implicit_rows,
-            implicit_columns=implicit_columns,
-            borderless_tables=borderless_tables,
-            min_confidence=min_confidence,
-            detect_rotation=detect_rotation,
-        )
-        out.append(tables)
-    return out
+def _raster_page(
+    doc: PdfDocument, page: dict, words: "pd.DataFrame | None", detect_rotation: bool,
+    **opts,
+) -> list[Table]:
+    """Raster route: one page without text through the pixel pipeline.
+    Output bboxes are directly in the reference's 200-DPI page space. Scans
+    have no native text; the caller's OCR ``words`` (200-DPI page
+    coordinates) supply content."""
+    canvas = rasterize_pdf_page(doc, page)
+    if canvas is None:
+        return []
+    return extract_image_tables(
+        canvas, words=words, detect_rotation=detect_rotation, **opts
+    )
 
 
 def extract_pdf_tables_auto(
@@ -902,59 +819,50 @@ def extract_pdf_tables_auto(
     detect_rotation: bool = False,
     words_by_page: "dict[int, pd.DataFrame] | None" = None,
 ) -> "tuple[list[list[Table]], bool]":
-    """Per-PAGE route selection — the reference renders and extracts every
-    page individually (document/pdf.py:46-67), so a mixed PDF (text page +
-    scanned page) must not let one text page route the whole document:
+    """The one PDF page loop. The reference renders and extracts every page
+    on its own (document/pdf.py:46-67), so the route is chosen per PAGE and
+    a mixed PDF (text page + scanned page) extracts from both:
 
-      - page has no text layer          → raster composition pipeline
-      - page has text, pixel-only flags → glyph-rendered pixel pipeline
+      - page has no text layer          → raster route
+      - page has text, pixel-only flags → rendered route
         (borderless_tables / detect_rotation)
-      - page has text, default flags    → exact vector-native path
+      - page has text, default flags    → exact vector route
 
-    Each underlying path is invoked at most once with its page subset (one
-    PDF parse per path, not per page). Output pages are merged back in
-    ascending page order; returns (per-page tables, any_page_rotated)."""
+    ``pages`` selects 0-based page indices (out-of-range ones are dropped,
+    duplicates kept); output pages are in ascending page order (reference
+    sorts pages in Document.__post_init__). ``words_by_page`` holds OCR
+    words per page index for scanned and rotation-corrected pages. Returns
+    (per-page tables, any_page_rotated)."""
     doc = PdfDocument(data)
-    n = len(doc.pages())
+    all_pages = doc.pages()
+    n = len(all_pages)
     req = sorted(p for p in (pages if pages is not None else range(n)) if 0 <= p < n)
-    text_pages = [
-        p for p in req if len(interpret_page(doc, doc.pages()[p])[0]) > 0
-    ]
-    scan_pages = [p for p in req if p not in set(text_pages)]
-    by_page: dict[int, list[Table]] = {}
+    opts = {
+        "implicit_rows": implicit_rows,
+        "implicit_columns": implicit_columns,
+        "borderless_tables": borderless_tables,
+        "min_confidence": min_confidence,
+    }
+    out: list[list[Table]] = []
     any_rotated = False
-    if text_pages:
-        if borderless_tables or detect_rotation:
-            rendered, any_rotated = extract_text_pdf_tables_rendered(
-                data,
-                implicit_rows=implicit_rows,
-                implicit_columns=implicit_columns,
-                borderless_tables=borderless_tables,
-                min_confidence=min_confidence,
-                pages=text_pages,
-                detect_rotation=detect_rotation,
-                words_by_page=words_by_page,
+    for page_idx in req:
+        page = all_pages[page_idx]
+        chars, rects = interpret_page(doc, page)
+        box = _page_box(doc, page)
+        words = (words_by_page or {}).get(page_idx)
+        if box is None:
+            tables = []
+        elif not chars:
+            tables = _raster_page(doc, page, words, detect_rotation, **opts)
+        elif borderless_tables or detect_rotation:
+            tables, rotated = _rendered_page(
+                doc, page, chars, page_idx, box[0], words, detect_rotation, **opts
             )
-            by_page.update(zip(text_pages, rendered))
+            any_rotated = any_rotated or rotated
         else:
-            vec = extract_pdf_tables_from_bytes(
-                data,
-                implicit_rows=implicit_rows,
-                implicit_columns=implicit_columns,
-                min_confidence=min_confidence,
-                pages=text_pages,
+            tables = _vector_page(
+                chars, rects, page_idx, box[0],
+                implicit_rows, implicit_columns, min_confidence,
             )
-            by_page.update(zip(text_pages, vec))
-    if scan_pages:
-        scanned = extract_scanned_pdf_tables(
-            data,
-            implicit_rows=implicit_rows,
-            implicit_columns=implicit_columns,
-            borderless_tables=borderless_tables,
-            min_confidence=min_confidence,
-            pages=scan_pages,
-            words_by_page=words_by_page,
-            detect_rotation=detect_rotation,
-        )
-        by_page.update(zip(scan_pages, scanned))
-    return [by_page[p] for p in req], any_rotated
+        out.append(tables)
+    return out, any_rotated

@@ -11,9 +11,10 @@ clustering then follows the reference's rules exactly
 (ocr/pdf.py:106-197).
 
 Scope: classic xref tables (+ /Prev chains), FlateDecode, Type1/TrueType
-simple fonts with /Widths. Scanned PDFs (no text operators) raise
-PayloadError — they need the raster path (an OCR word table can be supplied
-instead, like any other OCR source).
+simple fonts with /Widths. A scanned page (no text operators) yields no
+chars; kernels/pdf_doc.py sends it to the raster route, which composes the
+page's image XObjects (recorded by interpret_page_full) and takes OCR words
+from the caller, like any other OCR source.
 """
 
 from __future__ import annotations

@@ -26,6 +26,7 @@ from pyspark.sql.pandas.types import to_arrow_schema
 
 from img2table_spark.kernels.html_io import parse_html_tables, table_to_html
 from img2table_spark.kernels.objects import Table
+from img2table_spark.kernels.payload import PayloadError  # noqa: F401 — raised by the kernels, re-exported here
 from img2table_spark.kernels.text import is_relevant_table
 from img2table_spark.schema import EXTRACTED_SCHEMA
 
@@ -34,10 +35,6 @@ _IMAGE_PREFIX = "image/"
 _PDF_TOOLS = {"application/pdf", "pdf"}
 # consecutive turns per salt key (with_salt)
 _TURN_BUCKET = 8
-
-
-class PayloadError(Exception):
-    """Raised by decoders on malformed payloads; mapped to 0 output rows."""
 
 
 def extract_payload(text: str | None, tool: str | None) -> list[Table]:

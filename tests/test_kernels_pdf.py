@@ -9,7 +9,7 @@ import pytest
 
 from img2table_spark.kernels.pdf_doc import (
     extract_pdf_payload,
-    extract_pdf_tables_from_bytes,
+    extract_pdf_tables_auto,
 )
 from img2table_spark.kernels.pdf_native import PdfDocument, interpret_page
 
@@ -31,7 +31,7 @@ def test_pdf_parse(pdf_bytes):
 
 
 def test_pdf_tables(pdf_bytes):
-    pages = extract_pdf_tables_from_bytes(pdf_bytes, implicit_rows=True)
+    pages, _ = extract_pdf_tables_auto(pdf_bytes, implicit_rows=True)
     assert [len(p) for p in pages] == [2, 2]
 
     golden = {

@@ -1,6 +1,8 @@
 """Scanned-PDF raster path: an image-only PDF page (Flate bitmap XObject)
 goes through decode → pixel pipeline; golden = the embedded image's own
-reference expectations (test.png 2 tables)."""
+reference expectations (test.png 2 tables). The planted counterparts scan
+``render_table_page()``'s ruled 5×3 page and run without the reference
+fixtures."""
 
 import base64
 import zlib
@@ -9,9 +11,12 @@ import pytest
 
 from img2table_spark.kernels.pdf_doc import (
     extract_pdf_payload,
-    extract_scanned_pdf_tables,
+    extract_pdf_tables_auto,
 )
+from img2table_spark.kernels.hocr import parse_hocr_pages
 from img2table_spark.kernels.png import decode_png
+
+from tests.conftest import render_table_page
 
 
 def _build_pdf(page_w: float, page_h: float, images: list, content: bytes) -> bytes:
@@ -103,7 +108,7 @@ def scanned_pdf(ref_tests):
 
 
 def test_scanned_pdf_raster_path(scanned_pdf):
-    pages = extract_scanned_pdf_tables(scanned_pdf, implicit_rows=True)
+    pages, _ = extract_pdf_tables_auto(scanned_pdf, implicit_rows=True)
     assert len(pages) == 1
     got = sorted(
         ((tb.x1, tb.y1, tb.x2, tb.y2), (tb.nb_rows, tb.nb_columns)) for tb in pages[0]
@@ -117,7 +122,7 @@ def test_tiled_scanned_pdf_composes_page(ref_tests):
     same golden tables as the single full-page scan."""
     with open(ref_tests / "tables/image/test_data/test.png", "rb") as f:
         img = decode_png(f.read())
-    pages = extract_scanned_pdf_tables(_build_tiled_scanned_pdf(img), implicit_rows=True)
+    pages, _ = extract_pdf_tables_auto(_build_tiled_scanned_pdf(img), implicit_rows=True)
     assert len(pages) == 1
     got = sorted(
         ((tb.x1, tb.y1, tb.x2, tb.y2), (tb.nb_rows, tb.nb_columns)) for tb in pages[0]
@@ -132,3 +137,38 @@ def test_scanned_pdf_payload_fallback(scanned_pdf):
     assert len(tables) == 2
     shapes = sorted((tb.nb_rows, tb.nb_columns) for tb in tables)
     assert shapes == [(2, 2), (6, 3)]
+
+
+# ------------------------------------------------ planted 5×3 counterparts
+
+@pytest.fixture(scope="module")
+def planted_scan():
+    """(single-scan PDF, tiled-scan PDF, hOCR words, 5×3 grid) of the
+    rendered table page."""
+    img, hocr, grid = render_table_page()
+    return _build_scanned_pdf(img), _build_tiled_scanned_pdf(img), hocr, grid
+
+
+def test_scanned_pdf_raster_path_planted(planted_scan):
+    pdf, _, hocr, grid = planted_scan
+    pages, _ = extract_pdf_tables_auto(pdf, implicit_rows=True)
+    assert [[(tb.nb_rows, tb.nb_columns) for tb in p] for p in pages] == [[(5, 3)]]
+    # OCR words for the scan supply the content
+    pages, _ = extract_pdf_tables_auto(
+        pdf, implicit_rows=True, words_by_page={0: parse_hocr_pages([hocr])}
+    )
+    assert [[c.content for c in row] for row in pages[0][0].rows] == grid
+
+
+def test_tiled_scanned_pdf_composes_page_planted(planted_scan):
+    pdf, tiled, _, _ = planted_scan
+    single, _ = extract_pdf_tables_auto(pdf, implicit_rows=True)
+    pages, _ = extract_pdf_tables_auto(tiled, implicit_rows=True)
+    got = [((tb.x1, tb.y1, tb.x2, tb.y2), (tb.nb_rows, tb.nb_columns)) for tb in pages[0]]
+    assert got == [((tb.x1, tb.y1, tb.x2, tb.y2), (5, 3)) for tb in single[0]]
+    assert len(got) == 1
+
+
+def test_scanned_pdf_payload_fallback_planted(planted_scan):
+    tables = extract_pdf_payload(base64.b64encode(planted_scan[0]).decode())
+    assert [(tb.nb_rows, tb.nb_columns) for tb in tables] == [(5, 3)]

@@ -21,10 +21,13 @@ import zlib
 import pytest
 
 from img2table_spark.kernels.pdf_doc import (
+    PdfDocument,
+    _page_box,
+    _rendered_page,
+    _vector_page,
     extract_pdf_payload,
     extract_pdf_tables_auto,
-    extract_pdf_tables_from_bytes,
-    extract_text_pdf_tables_rendered,
+    interpret_page,
 )
 
 
@@ -71,10 +74,19 @@ def test_rendered_matches_vector_on_test_pdf(test_pdf_bytes):
     """Cross-validation: the glyph-rendered pixel pipeline reproduces the
     vector-native goldens (titles, shapes, content exact; bbox ±2px) on the
     reference's own test.pdf."""
-    rendered, rotated = extract_text_pdf_tables_rendered(
-        test_pdf_bytes, implicit_rows=True
-    )
-    vector = extract_pdf_tables_from_bytes(test_pdf_bytes, implicit_rows=True)
+    # both page routes on the same pages, default flags + implicit rows
+    doc = PdfDocument(test_pdf_bytes)
+    rendered, vector, rotated = [], [], False
+    for page_idx, page in enumerate(doc.pages()):
+        chars, rects = interpret_page(doc, page)
+        media = _page_box(doc, page)[0]
+        tables, page_rotated = _rendered_page(
+            doc, page, chars, page_idx, media, None, False, implicit_rows=True,
+            implicit_columns=False, borderless_tables=False, min_confidence=50,
+        )
+        rendered.append(tables)
+        rotated = rotated or page_rotated
+        vector.append(_vector_page(chars, rects, page_idx, media, True, False, 50))
     assert not rotated
     assert [len(p) for p in rendered] == [len(p) for p in vector] == [2, 2]
     for pr, pv in zip(rendered, vector):
@@ -90,7 +102,7 @@ def test_rendered_matches_vector_on_test_pdf(test_pdf_bytes):
                 assert abs(a - b) <= 2
 
 
-def test_borderless_text_grid(ref_tests):
+def test_borderless_text_grid():
     pdf = build_borderless_text_pdf()
     pages, rotated = extract_pdf_tables_auto(pdf, borderless_tables=True)
     assert not rotated
@@ -125,6 +137,25 @@ def test_mixed_pdf_per_page_dispatch(ref_tests):
     # reference no-OCR semantics)
     assert len(pages[1]) >= 1
     assert any(t.nb_rows >= 2 and t.nb_columns >= 2 for t in pages[1])
+
+
+def test_mixed_pdf_per_page_dispatch_planted():
+    """The mixed document with a scan of ``render_table_page()``'s ruled
+    5×3 page as page 1."""
+    from tests.conftest import render_table_page
+
+    scan, _, _ = render_table_page()
+    pages, _ = extract_pdf_tables_auto(build_mixed_pdf(scan), implicit_rows=True)
+    assert len(pages) == 2
+    assert [(t.nb_rows, t.nb_columns, t.title) for t in pages[0]] == [
+        (4, 3, "Inventory table")
+    ]
+    assert [[c.content for c in row] for row in pages[0][0].rows][:2] == [
+        ["Name", "Qty", "Price"], ["apple", "3", "1.20"]
+    ]
+    # scanned page: the planted grid's structure, no OCR → no content
+    assert [(t.nb_rows, t.nb_columns) for t in pages[1]] == [(5, 3)]
+    assert all(c.content is None for row in pages[1][0].rows for c in row)
 
 
 def test_pdf_payload_json_envelope(test_pdf_bytes):
@@ -168,12 +199,7 @@ def test_rotated_text_pdf_detect_rotation_with_external_words():
 
     import pandas as pd
 
-    from img2table_spark.kernels.pdf_doc import (
-        PdfDocument,
-        chars_to_pixel,
-        cluster_words,
-        interpret_page,
-    )
+    from img2table_spark.kernels.pdf_doc import chars_to_pixel, cluster_words
     from img2table_spark.kernels.text import WORD_COLUMNS
 
     def grid_ops():
@@ -206,7 +232,7 @@ def test_rotated_text_pdf_detect_rotation_with_external_words():
         + "\nQ"
     )
     rot_pdf = build_text_pdf([(612, 792, content.encode(), [])])
-    pages, rotated = extract_text_pdf_tables_rendered(
+    pages, rotated = extract_pdf_tables_auto(
         rot_pdf, borderless_tables=True, detect_rotation=True,
         words_by_page={0: words},
     )
