@@ -213,20 +213,22 @@ def _make_batch_extract_arrow(emit_errors: bool = False):
     return _batch_extract
 
 
+def payload_tool(tool: "str | F.Column" = "tool") -> "F.Column":
+    """True where ``extract_payload`` dispatches ``tool`` to a kernel: the
+    lowercased tool is an HTML or PDF tool or starts with ``image/``. Null
+    and unknown tools are false."""
+    t = F.lower(tool)
+    return t.isin(*sorted(_HTML_TOOLS | _PDF_TOOLS)) | t.startswith(_IMAGE_PREFIX)
+
+
 def with_salt(df: DataFrame) -> "F.Column":
     """Skew-defusing salt: hash(conv_id, turn_idx // _TURN_BUCKET) so a single
     heavy conversation spreads over many partitions (north_rule)."""
     return F.xxhash64(F.col("conv_id"), F.floor(F.col("turn_idx") / F.lit(_TURN_BUCKET)))
 
 
-def extract_tables(
-    df: DataFrame,
-    salt: bool = True,
-    num_partitions: int | None = None,
-    emit_errors: bool = False,
-    balance: bool = False,
-) -> DataFrame:
-    """Transcript DataFrame → one row per extracted table (EXTRACTED_SCHEMA).
+def salted(df: DataFrame, num_partitions: int | None = None, balance: bool = False) -> DataFrame:
+    """The extractor's input columns behind its one exchange.
 
     Column pruning is explicit: only (conv_id, turn_idx, text, tool) reach the
     scan, so the parquet reader never materializes unused columns.
@@ -242,16 +244,30 @@ def extract_tables(
     rows per partition the law of large numbers balances payload cost.
     """
     slim = df.select("conv_id", "turn_idx", "text", "tool")
-    if salt:
-        if num_partitions is None:
-            # Python-CPU-bound stage: size parallelism by cores, NOT by bytes.
-            # A bare repartition(col) would let AQE coalesce the (byte-small,
-            # CPU-heavy) exchange down to one partition and serialize the UDF.
-            num_partitions = df.sparkSession.sparkContext.defaultParallelism * 2
-        if balance:
-            slim = slim.repartition(num_partitions)
-        else:
-            slim = slim.repartition(num_partitions, with_salt(slim))
+    if num_partitions is None:
+        # Python-CPU-bound stage: size parallelism by cores, NOT by bytes.
+        # A bare repartition(col) would let AQE coalesce the (byte-small,
+        # CPU-heavy) exchange down to one partition and serialize the UDF.
+        num_partitions = df.sparkSession.sparkContext.defaultParallelism * 2
+    if balance:
+        return slim.repartition(num_partitions)
+    return slim.repartition(num_partitions, with_salt(slim))
+
+
+def extract_tables(
+    df: DataFrame,
+    salt: bool = True,
+    num_partitions: int | None = None,
+    emit_errors: bool = False,
+    balance: bool = False,
+) -> DataFrame:
+    """Transcript DataFrame → one row per extracted table (EXTRACTED_SCHEMA).
+
+    ``salt=True`` runs the input through ``salted`` (one exchange, see there
+    for ``num_partitions`` and ``balance``); ``salt=False`` maps the input's
+    partitions as they are, for a caller that already salted it.
+    """
+    slim = salted(df, num_partitions, balance) if salt else df.select("conv_id", "turn_idx", "text", "tool")
     return slim.mapInArrow(_make_batch_extract_arrow(emit_errors), EXTRACTED_SCHEMA)
 
 

@@ -10,6 +10,16 @@ Manifest payload carries lineage + extraction metrics:
   bucket, input_path, app_id, wave, n_turns, n_payload_turns, n_tables,
   n_cells, n_errors, checksum (order-insensitive sum of cell-value hashes),
   wall_s, committed_at.
+
+The metrics are ``DataFrame.observe`` results of the wave's two actions
+(``plans/pipeline.py``):
+  - the write observes its salted input for n_turns and n_payload_turns
+    (``operators.extract.payload_tool``), and the extractor's output for
+    n_errors (error-marker rows, ``table_idx < 0``, which are not written);
+  - the scan of the committed output observes n_tables (rows), n_cells
+    (``sum(size(cells))``) and checksum (the decimal(38,0) sum of
+    ``xxhash64(conv_id, turn_idx, row, col, value)`` over every cell, taken
+    mod 2^63).
 """
 
 from __future__ import annotations

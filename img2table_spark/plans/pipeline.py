@@ -1,11 +1,19 @@
 """The resumable extraction job (SURVEY.md §3.4, north_rule).
 
 Plan shape: scan → exchange(salted) → project(Arrow UDF) → write. The input
-is hash-bucketed on conv_id; buckets are processed in waves (one Spark job
-per wave), each wave writing its output partitions via dynamic partition
-overwrite and then committing one manifest per bucket. A restart skips every
-bucket with a committed manifest, so at 10^12-turn scale an interrupted run
-loses at most one wave of work and re-runs it idempotently.
+is hash-bucketed on conv_id; buckets are processed in waves, each wave
+writing its output partitions via dynamic partition overwrite and then
+committing one manifest per bucket. A restart skips every bucket with a
+committed manifest, so at 10^12-turn scale an interrupted run loses at most
+one wave of work and re-runs it idempotently.
+
+A wave is two actions, three Spark jobs: the write (the exchange's map
+stage, then the UDF and the sink in one result stage) and one scan of the
+committed output to a noop sink. Every manifest count rides one of them as
+a ``DataFrame.observe`` metric, one ``count_if``/``sum`` per bucket of the
+wave: turns, payload turns and error markers during the write, tables,
+cells and the checksum during the scan. A path input adds one job to read
+its schema.
 
 Why waves and not per-task commits: output atomicity lives with the parquet
 committer; the manifest is only written after the wave's commit, so a
@@ -17,19 +25,107 @@ from __future__ import annotations
 import time
 
 from pyspark.errors import AnalysisException
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
+from pyspark.sql.types import IntegerType, StructField, StructType
 
-from img2table_spark.operators.extract import (
-    _HTML_TOOLS,
-    _IMAGE_PREFIX,
-    _PDF_TOOLS,
-    extract_tables,
-)
+from img2table_spark.operators.extract import extract_tables, payload_tool, salted
 from img2table_spark.plans.checkpoints import read_committed, write_manifest
+from img2table_spark.schema import EXTRACTED_SCHEMA
+
+# what run_pipeline writes: one row per extracted table, partitioned by bucket
+OUTPUT_SCHEMA = StructType([*EXTRACTED_SCHEMA.fields, StructField("bucket", IntegerType())])
 
 
 def bucket_col(n_buckets: int) -> "F.Column":
     return F.pmod(F.xxhash64("conv_id"), F.lit(n_buckets)).cast("int")
+
+
+def _per_bucket(obs: Observation, wave: list[int], names: tuple[str, ...]) -> dict[int, tuple[int, ...]]:
+    """bucket -> the observed values ``f"{name}_{bucket}"``, nulls (a sum
+    over no rows) read as 0."""
+    row = obs.get
+    return {b: tuple(int(row[f"{n}_{b}"] or 0) for n in names) for b in wave}
+
+
+def _write_wave(
+    sub: DataFrame, wave: list[int], n_buckets: int, num_partitions: int | None, output_dir: str
+) -> dict[int, tuple[int, ...]]:
+    """Extract one wave and write its tables: one write action. Returns
+    bucket -> (n_turns, n_payload_turns, n_errors), observed during the
+    write.
+
+    Both observations sit after the salt exchange, in the write's result
+    stage, where Spark applies each task's metrics once. Observed below the
+    exchange, they would run in its map stage and count again whenever that
+    stage is retried."""
+    from img2table_spark.sources.iceberg import overwrite_partitions
+
+    inp, ext_obs = Observation(), Observation()
+    turns = salted(sub, num_partitions).withColumn("bucket", bucket_col(n_buckets))
+    is_payload = payload_tool()
+    turns = turns.observe(
+        inp,
+        *[F.count_if(F.col("bucket") == b).alias(f"turns_{b}") for b in wave],
+        *[F.count_if((F.col("bucket") == b) & is_payload).alias(f"payload_{b}") for b in wave],
+    )
+    ext = extract_tables(turns, salt=False, emit_errors=True).withColumn("bucket", bucket_col(n_buckets))
+    ext = ext.observe(
+        ext_obs,
+        *[F.count_if((F.col("bucket") == b) & (F.col("table_idx") < 0)).alias(f"errors_{b}") for b in wave],
+    )
+    overwrite_partitions(ext.filter(F.col("table_idx") >= 0), output_dir, "bucket")
+    counts, errors = _per_bucket(inp, wave, ("turns", "payload")), _per_bucket(ext_obs, wave, ("errors",))
+    return {b: counts[b] + errors[b] for b in wave}
+
+
+def _verify_wave(spark: SparkSession, output_dir: str, wave: list[int]) -> dict[int, tuple[int, int, int]]:
+    """bucket -> (n_tables, n_cells, checksum) re-read from the committed
+    output: one scan to a noop sink, counted by an observation.
+
+    Re-reading verifies what is actually on disk. Only a MISSING output
+    (all-negative waves so far: nothing written yet) maps to zero metrics;
+    any other failure must fail the wave BEFORE manifests are written,
+    otherwise manifests would durably record n_tables=0/checksum=0 for data
+    that is on disk."""
+    from img2table_spark.sources.iceberg import read_table
+
+    try:
+        written = read_table(spark, output_dir, OUTPUT_SCHEMA)
+    except AnalysisException as exc:
+        missing = any(
+            tok in str(exc)
+            for tok in ("PATH_NOT_FOUND", "Path does not exist", "TABLE_OR_VIEW_NOT_FOUND")
+        )
+        if not missing:
+            raise
+        return {b: (0, 0, 0) for b in wave}
+    # decimal(38,0) accumulator: summing 64-bit hashes in a long overflows
+    # under ANSI mode
+    cell_hash = F.aggregate(
+        F.transform(
+            "cells",
+            lambda c: F.xxhash64(
+                F.col("conv_id"), F.col("turn_idx"), c["row"], c["col"], c["value"]
+            ).cast("decimal(38,0)"),
+        ),
+        F.lit(0).cast("decimal(38,0)"),
+        lambda acc, x: acc + x,
+    )
+    rows = written.filter(F.col("bucket").isin(wave)).select(
+        "bucket", F.size("cells").alias("n_cells"), cell_hash.alias("checksum")
+    )
+    obs = Observation()
+    in_b = {b: F.col("bucket") == b for b in wave}
+    rows.observe(
+        obs,
+        *[F.count_if(in_b[b]).alias(f"tables_{b}") for b in wave],
+        *[F.sum(F.when(in_b[b], F.col("n_cells"))).alias(f"cells_{b}") for b in wave],
+        *[F.sum(F.when(in_b[b], F.col("checksum"))).alias(f"checksum_{b}") for b in wave],
+    ).write.format("noop").mode("overwrite").save()
+    return {
+        b: (t, c, h % (2**63))
+        for b, (t, c, h) in _per_bucket(obs, wave, ("tables", "cells", "checksum")).items()
+    }
 
 
 def run_pipeline(
@@ -44,7 +140,7 @@ def run_pipeline(
     input_path: str | None = None,
 ) -> dict:
     """Run (or resume) the extraction job. Returns a summary dict."""
-    from img2table_spark.sources.iceberg import overwrite_partitions, read_table
+    from img2table_spark.sources.iceberg import read_table
 
     if isinstance(transcripts, str):
         input_path = input_path or transcripts
@@ -100,88 +196,15 @@ def run_pipeline(
 
     for wave_idx, wave in enumerate(waves):
         t0 = time.time()
-        sub = df.filter(F.col("bucket").isin(wave))
-
-        # Input-side metrics per bucket (cheap columnar scan, payload pruned).
-        in_stats = {
-            int(r["bucket"]): r
-            for r in sub.groupBy("bucket")
-            .agg(
-                F.count("*").alias("n_turns"),
-                # the tools extract_payload dispatches, lowercased first as
-                # it does, so 'TEXT/HTML' turns count as payload turns too
-                F.sum(
-                    (F.lower("tool").isin(*sorted(_HTML_TOOLS | _PDF_TOOLS))
-                     | F.lower("tool").startswith(_IMAGE_PREFIX)).cast("long")
-                ).alias("n_payload_turns"),
-            )
-            .collect()
-        }
-
-        # Cache the (small) extracted output: it feeds both the sink write and
-        # the error-marker scan; without the cache the Arrow UDF would run
-        # twice over the wave's payloads.
-        ext = (
-            extract_tables(sub, salt=True, num_partitions=num_partitions, emit_errors=True)
-            .withColumn("bucket", bucket_col(n_buckets))
-            .persist()
+        ins = _write_wave(
+            df.filter(F.col("bucket").isin(wave)), wave, n_buckets, num_partitions, output_dir
         )
-        out = ext.filter(F.col("table_idx") >= 0)
-        overwrite_partitions(out, output_dir, "bucket")
-
-        # Post-commit metrics from the durably-written output (re-reading the
-        # columnar sink verifies what is actually on disk), plus error counts
-        # from the cached marker rows. Only a MISSING output path (all-negative
-        # wave: nothing written yet) maps to zero metrics — any other failure
-        # must fail the wave BEFORE manifests are written, otherwise manifests
-        # would durably record n_tables=0/checksum=0 for data that is on disk.
-        try:
-            written = read_table(spark, output_dir).filter(F.col("bucket").isin(wave))
-            out_stats = {
-                int(r["bucket"]): r
-                for r in written.groupBy("bucket")
-                .agg(
-                    F.count("*").alias("n_tables"),
-                    F.sum(F.size("cells")).alias("n_cells"),
-                    # decimal(38,0) accumulator: summing 64-bit hashes in a
-                    # long overflows under ANSI mode
-                    F.sum(
-                        F.aggregate(
-                            F.transform(
-                                "cells",
-                                lambda c: F.xxhash64(
-                                    F.col("conv_id"), F.col("turn_idx"), c["row"], c["col"], c["value"]
-                                ).cast("decimal(38,0)"),
-                            ),
-                            F.lit(0).cast("decimal(38,0)"),
-                            lambda acc, x: acc + x,
-                        )
-                    ).alias("checksum"),
-                )
-                .collect()
-            }
-        except AnalysisException as exc:
-            missing = any(
-                tok in str(exc)
-                for tok in ("PATH_NOT_FOUND", "Path does not exist", "TABLE_OR_VIEW_NOT_FOUND")
-            )
-            if not missing:
-                raise
-            out_stats = {}
-        err_stats = {
-            int(r["bucket"]): r["n_errors"]
-            for r in ext.filter(F.col("table_idx") < 0)
-            .groupBy("bucket")
-            .agg(F.count("*").alias("n_errors"))
-            .collect()
-        }
-        ext.unpersist()
+        outs = _verify_wave(spark, output_dir, wave)
 
         wall = time.time() - t0
         for b in wave:
-            ins = in_stats.get(b)
-            outs = out_stats.get(b)
-            n_err = int(err_stats.get(b, 0))
+            n_turns, n_payload_turns, n_errors = ins[b]
+            n_tables, n_cells, checksum = outs[b]
             write_manifest(
                 checkpoint_dir,
                 b,
@@ -190,19 +213,19 @@ def run_pipeline(
                     "n_buckets": n_buckets,
                     "app_id": spark.sparkContext.applicationId,
                     "wave": wave_idx,
-                    "n_turns": int(ins["n_turns"]) if ins else 0,
-                    "n_payload_turns": int(ins["n_payload_turns"] or 0) if ins else 0,
-                    "n_tables": int(outs["n_tables"]) if outs else 0,
-                    "n_cells": int(outs["n_cells"] or 0) if outs else 0,
-                    "n_errors": n_err,
-                    "checksum": (int(outs["checksum"] or 0) % (2**63)) if outs else 0,
+                    "n_turns": n_turns,
+                    "n_payload_turns": n_payload_turns,
+                    "n_tables": n_tables,
+                    "n_cells": n_cells,
+                    "n_errors": n_errors,
+                    "checksum": checksum,
                     "wall_s": round(wall, 3),
                 },
             )
             summary["processed_buckets"] += 1
-            summary["n_tables"] += int(outs["n_tables"]) if outs else 0
-            summary["n_cells"] += int(outs["n_cells"] or 0) if outs else 0
-            summary["n_errors"] += n_err
+            summary["n_tables"] += n_tables
+            summary["n_cells"] += n_cells
+            summary["n_errors"] += n_errors
         summary["waves"] += 1
 
     return summary

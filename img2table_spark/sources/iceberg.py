@@ -16,6 +16,7 @@ from __future__ import annotations
 
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 _PATH_MARKERS = ("/", "\\")
 _URI_SCHEMES = ("s3://", "s3a://", "hdfs://", "file:", "abfss://", "gs://")
@@ -29,10 +30,13 @@ def is_table_ref(ref: str) -> bool:
     return not any(m in ref for m in _PATH_MARKERS)
 
 
-def read_table(spark: SparkSession, ref: str) -> DataFrame:
+def read_table(spark: SparkSession, ref: str, schema: StructType | None = None) -> DataFrame:
+    """The table behind ``ref``. A known ``schema`` spares a parquet path
+    the footer read that infers it; a catalog table carries its own."""
     if is_table_ref(ref):
         return spark.read.table(ref)
-    return spark.read.parquet(ref)
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    return reader.parquet(ref)
 
 
 def overwrite_partitions(df: DataFrame, ref: str, partition_col: str) -> None:
