@@ -213,11 +213,11 @@ def _make_batch_extract_arrow(emit_errors: bool = False):
     return _batch_extract
 
 
-def payload_tool(tool: "str | F.Column" = "tool") -> "F.Column":
-    """True where ``extract_payload`` dispatches ``tool`` to a kernel: the
-    lowercased tool is an HTML or PDF tool or starts with ``image/``. Null
-    and unknown tools are false."""
-    t = F.lower(tool)
+def payload_tool() -> "F.Column":
+    """True where ``extract_payload`` dispatches the row's ``tool`` to a
+    kernel: the lowercased tool is an HTML or PDF tool or starts with
+    ``image/``. Null and unknown tools are false."""
+    t = F.lower("tool")
     return t.isin(*sorted(_HTML_TOOLS | _PDF_TOOLS)) | t.startswith(_IMAGE_PREFIX)
 
 

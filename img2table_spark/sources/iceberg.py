@@ -32,7 +32,8 @@ def is_table_ref(ref: str) -> bool:
 
 def read_table(spark: SparkSession, ref: str, schema: StructType | None = None) -> DataFrame:
     """The table behind ``ref``. A known ``schema`` spares a parquet path
-    the footer read that infers it; a catalog table carries its own."""
+    the footer read that infers it, and reads a directory holding no parquet
+    file as empty instead of failing; a catalog table carries its own."""
     if is_table_ref(ref):
         return spark.read.table(ref)
     reader = spark.read if schema is None else spark.read.schema(schema)
