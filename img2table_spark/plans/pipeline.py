@@ -43,8 +43,7 @@ def _per_bucket(name: str, wave: list[int], agg: str) -> "F.Column":
     """One observed metric: the SQL aggregate ``agg`` (over ``{b}``) for each
     bucket of the wave, as an array in wave order. A SQL string is one call
     into the JVM, where a Column chain per bucket costs several: ~8 ms a
-    bucket on 4 CPUs, about a second of driver time a wave at ``wave_size``
-    32."""
+    bucket on 4 CPUs, about a second a wave at ``wave_size`` 32."""
     return F.expr(f"array({', '.join(agg.format(b=b) for b in wave)}) AS {name}")
 
 

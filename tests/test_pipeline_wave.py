@@ -166,7 +166,7 @@ def _run_wave(fn, *args, **kwargs):
     def target():
         try:
             out["value"] = fn(*args, **kwargs)
-        except BaseException as exc:  # re-raised in the test thread
+        except Exception as exc:  # re-raised in the test thread
             out["error"] = exc
 
     t = threading.Thread(target=target, daemon=True)
