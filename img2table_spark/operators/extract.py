@@ -213,18 +213,26 @@ def _make_batch_extract_arrow(emit_errors: bool = False):
     return _batch_extract
 
 
+# payload_tool and with_salt as SQL: one call into the JVM builds either,
+# where the same Column chain costs dozens
+PAYLOAD_TOOL_SQL = (
+    f"lower(tool) IN ({', '.join(repr(t) for t in sorted(_HTML_TOOLS | _PDF_TOOLS))})"
+    f" OR startswith(lower(tool), '{_IMAGE_PREFIX}')"
+)
+SALT_SQL = f"xxhash64(conv_id, floor(turn_idx / {_TURN_BUCKET}))"
+
+
 def payload_tool() -> "F.Column":
     """True where ``extract_payload`` dispatches the row's ``tool`` to a
     kernel: the lowercased tool is an HTML or PDF tool or starts with
     ``image/``. Null and unknown tools are false."""
-    t = F.lower("tool")
-    return t.isin(*sorted(_HTML_TOOLS | _PDF_TOOLS)) | t.startswith(_IMAGE_PREFIX)
+    return F.expr(PAYLOAD_TOOL_SQL)
 
 
 def with_salt(df: DataFrame) -> "F.Column":
     """Skew-defusing salt: hash(conv_id, turn_idx // _TURN_BUCKET) so a single
     heavy conversation spreads over many partitions (north_rule)."""
-    return F.xxhash64(F.col("conv_id"), F.floor(F.col("turn_idx") / F.lit(_TURN_BUCKET)))
+    return F.expr(SALT_SQL)
 
 
 def salted(df: DataFrame, num_partitions: int | None = None, balance: bool = False) -> DataFrame:

@@ -1,9 +1,9 @@
 """The resumable extraction job (SURVEY.md §3.4, north_rule).
 
-Plan shape: scan → exchange(salted) → project(Arrow UDF) → write. The input
-is hash-bucketed on conv_id; buckets are processed in waves, each wave
-writing its output partitions via dynamic partition overwrite and then
-committing one manifest per bucket. A restart skips every bucket with a
+Plan shape: scan → exchange(salted, by bucket) → project(Arrow UDF) →
+write. The input is hash-bucketed on conv_id; buckets are processed in
+waves, each wave writing its output partitions via dynamic partition
+overwrite and then committing one manifest per bucket. A restart skips every bucket with a
 committed manifest, so at 10^12-turn scale an interrupted run loses at most
 one wave of work and re-runs it idempotently.
 
@@ -13,7 +13,10 @@ committed output to a noop sink. Every manifest count rides one of them as
 a ``DataFrame.observe`` metric, one ``count_if``/``sum`` per bucket of the
 wave: turns, payload turns and error markers during the write, tables,
 cells and the checksum during the scan. A path input adds one job a run,
-to read its schema.
+to read its schema. The exchange gives each bucket partitions of its own,
+so every write task opens one file. Every expression names a bucket by its
+``slot`` in the wave, so each wave runs the code Spark generated for the
+first.
 
 Why waves and not per-task commits: output atomicity lives with the parquet
 committer; the manifest is only written after the wave's commit, so a
@@ -27,7 +30,7 @@ import time
 from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 from pyspark.sql.types import IntegerType, StructField, StructType
 
-from img2table_spark.operators.extract import extract_tables, payload_tool, salted
+from img2table_spark.operators.extract import PAYLOAD_TOOL_SQL, SALT_SQL, extract_tables
 from img2table_spark.plans.checkpoints import read_committed, write_manifest
 from img2table_spark.schema import EXTRACTED_SCHEMA
 
@@ -36,49 +39,82 @@ OUTPUT_SCHEMA = StructType([*EXTRACTED_SCHEMA.fields, StructField("bucket", Inte
 
 
 def bucket_col(n_buckets: int) -> "F.Column":
-    return F.pmod(F.xxhash64("conv_id"), F.lit(n_buckets)).cast("int")
+    return F.expr(f"CAST(pmod(xxhash64(conv_id), {n_buckets}) AS INT)")
 
 
-def _per_bucket(name: str, wave: list[int], agg: str) -> "F.Column":
-    """One observed metric: the SQL aggregate ``agg`` (over ``{b}``) for each
-    bucket of the wave, as an array in wave order. A SQL string is one call
-    into the JVM, where a Column chain per bucket costs several: ~8 ms a
-    bucket on 4 CPUs, about a second a wave at ``wave_size`` 32."""
-    return F.expr(f"array({', '.join(agg.format(b=b) for b in wave)}) AS {name}")
+def _slot(wave: list[int]) -> str:
+    """SQL for the row's position in the wave (from ``bucket``), -1 outside
+    it. The wave's bucket ids form one array literal, which generated code
+    reads as a reference instead of inlining it: every wave of one size
+    compiles to the same classes, so the first wave's code serves the rest
+    and the JIT warms one copy of it, not one per wave."""
+    return f"CAST(array_position(array({', '.join(map(str, wave))}), bucket) - 1 AS INT)"
+
+
+def _per_slot(name: str, size: int, agg: str) -> "F.Column":
+    """One observed metric: the SQL aggregate ``agg`` (over ``{i}``, a
+    ``slot``) for each bucket of the wave, as an array in wave order. A SQL
+    string is one call into the JVM, where a Column chain per bucket costs
+    several: ~8 ms a bucket on 4 CPUs, about a second a wave at
+    ``wave_size`` 32."""
+    return F.expr(f"array({', '.join(agg.format(i=i) for i in range(size))}) AS {name}")
 
 
 def _observed(obs: Observation, wave: list[int], *names: str) -> dict[int, tuple[int, ...]]:
-    """bucket -> the values of the ``_per_bucket`` metrics ``names``, nulls
+    """bucket -> the values of the ``_per_slot`` metrics ``names``, nulls
     (a sum over no rows) read as 0."""
     row = obs.get
     return {b: tuple(int(row[n][i] or 0) for n in names) for i, b in enumerate(wave)}
 
 
-def _write_wave(
-    sub: DataFrame, wave: list[int], n_buckets: int, num_partitions: int | None, output_dir: str
-) -> dict[int, tuple[int, ...]]:
-    """Extract one wave and write its tables: one write action. Returns
-    bucket -> (n_turns, n_payload_turns, n_errors), observed during the
-    write.
+def _wave_turns(df: DataFrame, wave: list[int], num_partitions: int | None) -> DataFrame:
+    """The turns of the wave's buckets with their ``slot`` and ``payload``
+    flag (``payload_tool``), behind the wave's one exchange, each partition
+    holding the turns of one bucket.
 
-    Both observations sit after the salt exchange, in the write's result
+    The sink opens one file per task and bucket. With ``salted``'s hash salt
+    every bucket reaches every task: ``num_partitions`` x wave size files a
+    wave. Here each bucket owns ``num_partitions // len(wave)`` partitions
+    (at least one) and the same salt spreads its turns over them, so each
+    task writes one file."""
+    if num_partitions is None:
+        # salted's rule: the UDF stage is Python-CPU-bound, two tasks a core
+        num_partitions = df.sparkSession.sparkContext.defaultParallelism * 2
+    per_bucket = max(1, num_partitions // len(wave))
+    turns = df.selectExpr(
+        "conv_id", "turn_idx", "text", "tool", f"{_slot(wave)} AS slot", f"{PAYLOAD_TOOL_SQL} AS payload"
+    ).where("slot >= 0")
+    part = F.expr(f"CAST(slot * {per_bucket} + pmod({SALT_SQL}, {per_bucket}) AS INT)")
+    return turns.repartitionById(per_bucket * len(wave), part)
+
+
+def _write_wave(
+    df: DataFrame, wave: list[int], n_buckets: int, num_partitions: int | None, output_dir: str
+) -> dict[int, tuple[int, ...]]:
+    """Extract the turns of one wave's buckets and write their tables: one
+    write action. Returns bucket -> (n_turns, n_payload_turns, n_errors),
+    observed during the write.
+
+    Both observations sit after the wave's exchange, in the write's result
     stage, where Spark applies each task's metrics once. Observed below the
     exchange, they would run in its map stage and count again whenever that
     stage is retried."""
     from img2table_spark.sources.iceberg import overwrite_partitions
 
     inp, ext_obs = Observation(), Observation()
-    turns = salted(sub, num_partitions).select(
-        "*", bucket_col(n_buckets).alias("bucket"), payload_tool().alias("payload")
-    )
-    turns = turns.observe(
+    size = len(wave)
+    turns = _wave_turns(df, wave, num_partitions).observe(
         inp,
-        _per_bucket("turns", wave, "count_if(bucket = {b})"),
-        _per_bucket("payload", wave, "count_if(bucket = {b} AND payload)"),
+        _per_slot("turns", size, "count_if(slot = {i})"),
+        _per_slot("payload", size, "count_if(slot = {i} AND payload)"),
     )
-    ext = extract_tables(turns, salt=False, emit_errors=True).withColumn("bucket", bucket_col(n_buckets))
-    ext = ext.observe(ext_obs, _per_bucket("errors", wave, "count_if(bucket = {b} AND table_idx < 0)"))
-    overwrite_partitions(ext.filter(F.col("table_idx") >= 0), output_dir, "bucket")
+    ext = (
+        extract_tables(turns, salt=False, emit_errors=True)
+        .withColumn("bucket", bucket_col(n_buckets))
+        .withColumn("slot", F.expr(_slot(wave)))
+        .observe(ext_obs, _per_slot("errors", size, "count_if(slot = {i} AND table_idx < 0)"))
+    )
+    overwrite_partitions(ext.where("table_idx >= 0").drop("slot"), output_dir, "bucket")
     counts, errors = _observed(inp, wave, "turns", "payload"), _observed(ext_obs, wave, "errors")
     return {b: counts[b] + errors[b] for b in wave}
 
@@ -93,20 +129,25 @@ def _verify_wave(spark: SparkSession, output_dir: str, wave: list[int]) -> dict[
     table yet; the known schema reads that as empty."""
     from img2table_spark.sources.iceberg import read_table
 
-    rows = read_table(spark, output_dir, OUTPUT_SCHEMA).filter(F.col("bucket").isin(wave)).selectExpr(
-        "bucket",
-        "size(cells) AS n_cells",
-        # decimal(38,0) accumulator: summing 64-bit hashes in a long
-        # overflows under ANSI mode
-        "aggregate(transform(cells, c -> CAST(xxhash64(conv_id, turn_idx, c.row, c.col, c.value)"
-        " AS DECIMAL(38,0))), CAST(0 AS DECIMAL(38,0)), (acc, x) -> acc + x) AS checksum",
+    rows = (
+        read_table(spark, output_dir, OUTPUT_SCHEMA)
+        .where(f"bucket IN ({', '.join(map(str, wave))})")
+        .selectExpr(
+            f"{_slot(wave)} AS slot",
+            "size(cells) AS n_cells",
+            # decimal(38,0) accumulator: summing 64-bit hashes in a long
+            # overflows under ANSI mode
+            "aggregate(transform(cells, c -> CAST(xxhash64(conv_id, turn_idx, c.row, c.col, c.value)"
+            " AS DECIMAL(38,0))), CAST(0 AS DECIMAL(38,0)), (acc, x) -> acc + x) AS checksum",
+        )
     )
     obs = Observation()
+    size = len(wave)
     rows.observe(
         obs,
-        _per_bucket("tables", wave, "count_if(bucket = {b})"),
-        _per_bucket("cells", wave, "sum(if(bucket = {b}, n_cells, NULL))"),
-        _per_bucket("checksum", wave, "sum(if(bucket = {b}, checksum, NULL))"),
+        _per_slot("tables", size, "count_if(slot = {i})"),
+        _per_slot("cells", size, "sum(if(slot = {i}, n_cells, NULL))"),
+        _per_slot("checksum", size, "sum(if(slot = {i}, checksum, NULL))"),
     ).write.format("noop").mode("overwrite").save()
     return {
         b: (t, c, h % (2**63))
@@ -182,9 +223,7 @@ def run_pipeline(
 
     for wave_idx, wave in enumerate(waves):
         t0 = time.time()
-        ins = _write_wave(
-            df.filter(F.col("bucket").isin(wave)), wave, n_buckets, num_partitions, output_dir
-        )
+        ins = _write_wave(df, wave, n_buckets, num_partitions, output_dir)
         outs = _verify_wave(spark, output_dir, wave)
 
         wall = time.time() - t0

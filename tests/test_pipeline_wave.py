@@ -338,3 +338,48 @@ def test_wave_observes_after_exchange_in_few_jobs(spark, mixed, tmp_path, monkey
     assert len(metrics) == 2
     for i in metrics:
         assert any("Exchange" in ln for ln in _subtree(lines, i)), lines[i]
+
+
+def test_each_write_task_holds_one_bucket(spark, mixed, tmp_path):
+    """The wave's exchange gives each bucket ``num_partitions // wave_size``
+    partitions of its own, so the partitioned sink writes at most that many
+    files per bucket, not one per partition."""
+    out = tmp_path / "out"
+    _run_wave(
+        run_pipeline, spark, mixed, str(out), str(tmp_path / "ckpt"),
+        n_buckets=N_BUCKETS, wave_size=WAVE_SIZE, num_partitions=4,
+    )
+    files = {d.name: len(list(d.glob("*.parquet"))) for d in out.glob("bucket=*")}
+    assert files and max(files.values()) <= 4 // WAVE_SIZE, files
+
+
+def _generated_code(spark, df) -> str:
+    """The whole-stage generated code of ``df``'s plan, ids stripped."""
+    text = spark._jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), "codegen")
+    code = "".join(part.split("== Subtree")[0] for part in text.split("Generated code:")[1:])
+    return re.sub(r"#\d+|_\d+L?\b|\d+L\b", "", code)
+
+
+def test_waves_share_generated_code(spark, mixed, tmp_path, monkeypatch):
+    """Two waves of one size compile to the same code: the bucket ids reach
+    it as one array literal, not as inlined constants, so Spark compiles
+    and the JIT warms one copy of it a run."""
+    codes = []
+    write = iceberg.overwrite_partitions
+
+    def capture(df, ref, col):
+        codes.append(_generated_code(spark, df))
+        return write(df, ref, col)
+
+    monkeypatch.setattr(iceberg, "overwrite_partitions", capture)
+    # an adaptive plan shows its generated code only once it has run
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        _run_wave(
+            run_pipeline, spark, mixed, str(tmp_path / "out"), str(tmp_path / "ckpt"),
+            n_buckets=N_BUCKETS, wave_size=WAVE_SIZE, max_waves=2,
+        )
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", "true")
+    assert len(codes) == 2 and "processNext" in codes[0]
+    assert codes[0] == codes[1]
