@@ -7,6 +7,14 @@ bs4 ``prettify`` line format of the golden fixture
 that grammar — ``<table>/<tr>/<td colspan rowspan>`` with ``<br>`` for
 newlines — so HTML payloads embedded in transcript turns land in the same
 output schema as image/PDF payloads.
+
+Two parse routes give the same tables. ``parse_html_tables`` parses one
+payload. ``compact_html_tables`` takes a whole Arrow array of payloads at
+once with ``pyarrow.compute`` and NumPy, but answers only for the compact
+grammar (``COMPACT_TABLE_RE2``): one ``<table>`` of equal-length
+``<tr>`` rows of bare ``<td>``/``<th>`` cells whose text is already
+whitespace-normalized and holds no ``<``, ``>`` or ``&``. Every other
+payload is left to ``parse_html_tables``.
 """
 
 from __future__ import annotations
@@ -14,6 +22,11 @@ from __future__ import annotations
 import re
 from html import unescape
 from html.parser import HTMLParser
+from typing import NamedTuple
+
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 
 from img2table_spark.kernels.objects import Cell, Table
 from img2table_spark.kernels.spans import CellSpan, create_all_rectangles
@@ -447,3 +460,93 @@ def parse_html_tables(html: str) -> list[Table]:
             rows.append(row)
         out.append(Table(rows=rows))
     return out
+
+
+# ------------------------------------------------- compact batch parsing
+
+# The 29 code points str.split() splits on (str.isspace), as an RE2 class
+# body; RE2's \s is ASCII-only. Spelled out rather than scanned from all
+# 0x110000 code points, which costs ~0.1 s at every worker's import;
+# tests/test_html_batch.py checks the two agree.
+SPACES_RE2 = r"\x{9}-\x{d}\x{1c}-\x{20}\x{85}\x{a0}\x{1680}\x{2000}-\x{200a}\x{2028}\x{2029}\x{202f}\x{205f}\x{3000}"
+_WORD = f"[^<>&{SPACES_RE2}]+"
+# a cell text that " ".join(v.split()) leaves as it is, with nothing to unescape
+_VALUE = f"(?:{_WORD}(?: {_WORD})*)?"
+COMPACT_TABLE_RE2 = f"^<table>(?:<tr>(?:<td>{_VALUE}</td>|<th>{_VALUE}</th>)+</tr>)+</table>$"
+
+
+class CompactTables(NamedTuple):
+    """The tables ``compact_html_tables`` found: at most one per payload,
+    cells flattened row-major, boxes in the synthetic HTML geometry."""
+
+    owned: np.ndarray  # bool per payload: the table (or its absence) is settled here
+    src: np.ndarray  # the payload position of each table
+    n_rows: np.ndarray
+    n_cols: np.ndarray
+    x2: np.ndarray  # table box; x1 = y1 = 0
+    y2: np.ndarray
+    offsets: np.ndarray  # cells of table i: offsets[i]:offsets[i + 1]
+    row: np.ndarray
+    col: np.ndarray
+    cell_x1: np.ndarray
+    cell_y1: np.ndarray
+    cell_x2: np.ndarray
+    cell_y2: np.ndarray
+    values: pa.Array  # cell texts, null for an empty cell
+    html: pa.Array  # table_to_html of each table
+
+
+def compact_html_tables(payloads: pa.Array) -> CompactTables:
+    """``parse_html_tables`` plus ``is_relevant_table`` over a string array
+    of non-null payloads, for those that fully match ``COMPACT_TABLE_RE2``.
+
+    A matching payload with rows of unequal length (which the per-payload
+    parser pads) is not owned; one whose table has ``max(n_rows, n_cols) <
+    2`` is owned and yields no table. Each table's HTML is
+    ``table_to_html``'s 1×1 rendering, ``<th>`` written as ``<td>``."""
+    i32 = np.int32
+    matched = np.flatnonzero(pc.match_substring_regex(payloads, COMPACT_TABLE_RE2).to_numpy(zero_copy_only=False))
+    owned = np.zeros(len(payloads), bool)
+    # <th> cells as <td> (literal replaces: a regex replace costs ~3x)
+    html = pc.replace_substring(payloads.take(pa.array(matched)), "<th>", "<td>")
+    html = pc.replace_substring(html, "</th>", "</td>")
+    # strip "<table><tr>" and "</tr></table>", then "<td>" and "</td>" per row
+    rows = pc.split_pattern(pc.utf8_slice_codeunits(html, 11, -13), "</tr><tr>")
+    cells = pc.split_pattern(pc.utf8_slice_codeunits(rows.flatten(), 4, -5), "</td><td>")
+    n_rows = pc.list_value_length(rows).to_numpy().astype(i32)
+    width = pc.list_value_length(cells).to_numpy().astype(i32)
+    if len(matched):
+        first = np.cumsum(n_rows) - n_rows
+        n_cols = width[first]
+        uniform = np.minimum.reduceat(width, first) == np.maximum.reduceat(width, first)
+        n_cells = np.add.reduceat(width, first)
+    else:
+        n_cols = n_cells = width
+        uniform = np.zeros(0, bool)
+    owned[matched[uniform]] = True
+    keep = uniform & (np.maximum(n_rows, n_cols) >= 2)
+    values = cells.flatten().filter(pa.array(np.repeat(keep, n_cells)))
+    values = pc.if_else(pc.equal(values, ""), pa.scalar(None, values.type), values)
+    n_rows, n_cols = n_rows[keep], n_cols[keep]
+    size = n_rows * n_cols
+    offsets = np.zeros(len(size) + 1, i32)
+    np.cumsum(size, out=offsets[1:])
+    row, col = np.divmod(np.arange(offsets[-1], dtype=i32) - np.repeat(offsets[:-1], size), np.repeat(n_cols, size))
+    html = pc.replace_substring(html.filter(pa.array(keep)), "<td>", '<td colspan="1" rowspan="1">')
+    return CompactTables(
+        owned=owned,
+        src=matched[keep],
+        n_rows=n_rows,
+        n_cols=n_cols,
+        x2=n_cols * HTML_COL_W,
+        y2=n_rows * HTML_ROW_H,
+        offsets=offsets,
+        row=row,
+        col=col,
+        cell_x1=col * HTML_COL_W,
+        cell_y1=row * HTML_ROW_H,
+        cell_x2=(col + 1) * HTML_COL_W,
+        cell_y2=(row + 1) * HTML_ROW_H,
+        values=values,
+        html=html,
+    )

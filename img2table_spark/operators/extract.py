@@ -6,11 +6,19 @@ geometry ever crosses the Spark boundary; the only shuffle in the job is the
 optional salted repartition that defuses long-conversation skew.
 
 Payload dispatch by the ``tool`` column (FIXTURES.md §1):
-  - text/html        → HTML-table grammar parser (kernels.html_io)
+  - text/html        → HTML-table grammar parser (kernels.html_io). A batch's
+                       HTML turns that fully match the compact grammar
+                       (``html_io.COMPACT_TABLE_RE2``: one ``<table>`` of
+                       equal-length rows of bare ``<td>``/``<th>`` cells,
+                       whitespace-normalized text without ``<>&``) are
+                       parsed together by ``compact_html_tables``, in Arrow
+                       and NumPy; the rest one at a time by
+                       ``parse_html_tables``. The rows are the same.
   - image/*          → decode + bordered/borderless CV pipeline
                        (kernels.image — pure NumPy; PNG via stdlib zlib)
   - application/pdf  → native-text path (kernels.pdf) when available
-  - text/plain, null → no tables (negative payload)
+  - text/plain, null → no tables (negative payload); ``salted`` drops
+                       these turns before its exchange
 
 Malformed payloads never fail the job: the UDF emits zero rows and the
 per-partition manifest records the error count (FIXTURES.md §6).
@@ -20,11 +28,13 @@ from __future__ import annotations
 
 from collections.abc import Iterator
 
+import numpy as np
 import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.pandas.types import to_arrow_schema
 
-from img2table_spark.kernels.html_io import parse_html_tables, table_to_html
+from img2table_spark.kernels.html_io import CompactTables, compact_html_tables, parse_html_tables, table_to_html
 from img2table_spark.kernels.objects import Table
 from img2table_spark.kernels.payload import PayloadError  # noqa: F401 — raised by the kernels, re-exported here
 from img2table_spark.kernels.text import is_relevant_table
@@ -66,7 +76,9 @@ class _TableRows:
     extractor and for ``assign_text``. Values go into flat Python lists
     converted once per batch into Arrow arrays (offsets + struct children
     for ``cells``): per-cell dicts plus a pandas→Arrow conversion of the
-    nested column measured ~35% of the per-turn cost at full throughput."""
+    nested column measured ~35% of the per-turn cost at full throughput.
+    ``compact_batch`` builds the same rows from ``compact_html_tables``'
+    arrays, with no ``Table`` in between."""
 
     def __init__(self) -> None:
         self.conv: list = []
@@ -151,73 +163,120 @@ class _TableRows:
 
     def batch(self) -> pa.RecordBatch:
         i32, s = pa.int32(), pa.string()
-        cells = pa.ListArray.from_arrays(
+        return _record_batch(
+            [pa.array(v, t) for v, t in ((self.conv, s), (self.turn, i32), (self.tidx, i32))]
+            + [pa.array(v, i32) for v in (self.x1, self.y1, self.x2, self.y2)]
+            + [pa.array(self.titles, s)],
             pa.array(self.offsets, i32),
-            pa.StructArray.from_arrays(
-                [
-                    pa.array(self.c_row, i32),
-                    pa.array(self.c_col, i32),
-                    pa.array(self.c_x1, i32),
-                    pa.array(self.c_y1, i32),
-                    pa.array(self.c_x2, i32),
-                    pa.array(self.c_y2, i32),
-                    pa.array(self.c_val, s),
-                ],
-                fields=list(_CELLS_TYPE.value_type),
-            ),
-            type=_CELLS_TYPE,
+            [pa.array(v, i32) for v in (self.c_row, self.c_col, self.c_x1, self.c_y1, self.c_x2, self.c_y2)]
+            + [pa.array(self.c_val, s)],
+            [pa.array(self.htmls, s), pa.array(self.nrows, i32), pa.array(self.ncols, i32)],
         )
-        return pa.RecordBatch.from_arrays(
-            [
-                pa.array(self.conv, s),
-                pa.array(self.turn, i32),
-                pa.array(self.tidx, i32),
-                pa.array(self.x1, i32),
-                pa.array(self.y1, i32),
-                pa.array(self.x2, i32),
-                pa.array(self.y2, i32),
-                pa.array(self.titles, s),
-                cells,
-                pa.array(self.htmls, s),
-                pa.array(self.nrows, i32),
-                pa.array(self.ncols, i32),
-            ],
-            schema=_ARROW_SCHEMA,
+
+    @staticmethod
+    def compact_batch(conv_id: pa.Array, turn_idx: pa.Array, t: CompactTables) -> pa.RecordBatch:
+        """The rows of ``compact_html_tables``' tables, ``conv_id`` and
+        ``turn_idx`` given per table: each is its turn's table 0, untitled."""
+        n, i32, s = len(t.src), pa.int32(), pa.string()
+        zeros = pa.array(np.zeros(n, np.int32))
+        return _record_batch(
+            [conv_id.cast(s), turn_idx.cast(i32), zeros, zeros, zeros, pa.array(t.x2), pa.array(t.y2), pa.nulls(n, s)],
+            pa.array(t.offsets),
+            [pa.array(v) for v in (t.row, t.col, t.cell_x1, t.cell_y1, t.cell_x2, t.cell_y2)] + [t.values.cast(s)],
+            [t.html.cast(s), pa.array(t.n_rows), pa.array(t.n_cols)],
         )
+
+
+def _record_batch(head: list, offsets: pa.Array, cell_fields: list, tail: list) -> pa.RecordBatch:
+    """EXTRACTED_SCHEMA batch from its columns before ``cells``, the cells'
+    list offsets and struct children, and the columns after ``cells``."""
+    cells = pa.ListArray.from_arrays(
+        offsets, pa.StructArray.from_arrays(cell_fields, fields=list(_CELLS_TYPE.value_type)), type=_CELLS_TYPE
+    )
+    return pa.RecordBatch.from_arrays(head + [cells] + tail, schema=_ARROW_SCHEMA)
+
+
+_HTML_TOOL_SET = pa.array(sorted(_HTML_TOOLS))
+
+
+def _html_turns(text: pa.Array, tool: pa.Array) -> np.ndarray:
+    """Positions of the turns ``extract_payload`` hands to the HTML parser:
+    text is not null and the lowercased tool is an HTML tool."""
+    if tool.null_count == len(tool):  # also a null-typed array, which utf8_lower rejects
+        return np.zeros(0, np.intp)
+    is_html = pc.and_(pc.is_in(pc.utf8_lower(tool), value_set=_HTML_TOOL_SET), pc.is_valid(text))
+    return np.flatnonzero(is_html.to_numpy(zero_copy_only=False))
+
+
+def _extract_batch(b: pa.RecordBatch, emit_errors: bool) -> pa.RecordBatch:
+    """One transcript batch → its EXTRACTED_SCHEMA rows, in input order.
+
+    HTML turns in the compact grammar are parsed together by
+    ``compact_html_tables``; every other turn goes through
+    ``extract_payload`` one at a time. A malformed payload never fails the
+    task: it yields zero rows, or with ``emit_errors`` one error-marker
+    row."""
+    texts = b.column("text")
+    html = _html_turns(texts, b.column("tool"))
+    compact = compact_html_tables(texts.take(pa.array(html))) if len(html) else None
+    looped = b
+    if compact is not None and compact.owned.any():
+        rest = np.ones(b.num_rows, bool)
+        rest[html[compact.owned]] = False
+        rest = np.flatnonzero(rest)
+        looped = b.take(pa.array(rest))
+    out = _TableRows()
+    ends = []  # rows in ``out`` after each looped turn
+    for conv_id, turn_idx, text, tool in zip(
+        looped.column("conv_id").to_pylist(),
+        looped.column("turn_idx").to_pylist(),
+        looped.column("text").to_pylist(),
+        looped.column("tool").to_pylist(),
+    ):
+        try:
+            tables = [t for t in extract_payload(text, tool) if is_relevant_table(t)]
+        except Exception as exc:
+            if emit_errors:
+                out.add_error(conv_id, turn_idx, exc)
+        else:
+            for i, t in enumerate(tables):
+                out.add(conv_id, turn_idx, i, t)
+        ends.append(len(out.tidx))
+    rows = out.batch()
+    if looped is b or not len(compact.src):
+        return rows
+    src = html[compact.src]
+    grids = _TableRows.compact_batch(b.column("conv_id").take(src), b.column("turn_idx").take(src), compact)
+    if not rows.num_rows:
+        return grids
+    # both kinds: put every row back at its turn's place
+    looped_src = np.repeat(rest, np.diff(ends, prepend=0))
+    order = np.argsort(np.concatenate([looped_src, src]), kind="stable")
+    return pa.Table.from_batches([rows, grids]).take(order).combine_chunks().to_batches()[0]
 
 
 def _make_batch_extract_arrow(emit_errors: bool = False):
-    """The mapInArrow body: transcript batches → EXTRACTED_SCHEMA batches.
-    A malformed payload never fails the task: it yields zero rows, or with
-    ``emit_errors`` one error-marker row."""
+    """The mapInArrow body: transcript batches → EXTRACTED_SCHEMA batches
+    (``_extract_batch``)."""
 
     def _batch_extract(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for b in batches:
-            out = _TableRows()
-            for conv_id, turn_idx, text, tool in zip(
-                b.column("conv_id").to_pylist(),
-                b.column("turn_idx").to_pylist(),
-                b.column("text").to_pylist(),
-                b.column("tool").to_pylist(),
-            ):
-                try:
-                    tables = [t for t in extract_payload(text, tool) if is_relevant_table(t)]
-                except Exception as exc:
-                    if emit_errors:
-                        out.add_error(conv_id, turn_idx, exc)
-                    continue
-                for i, t in enumerate(tables):
-                    out.add(conv_id, turn_idx, i, t)
-            yield out.batch()
+            yield _extract_batch(b, emit_errors)
 
     return _batch_extract
 
 
 # payload_tool and with_salt as SQL: one call into the JVM builds either,
 # where the same Column chain costs dozens
+# The tool lowercased in ASCII only. Spark's lower() sets up collation
+# support on its first call in a JVM, ~1.7 s on 4 CPUs. On the ASCII tool
+# names above, ASCII lowercasing picks the same tools as str.lower(): the
+# only non-ASCII characters it lowers into ASCII are U+0130 (to "i" plus
+# U+0307) and U+212A (to "k"), and neither can spell one of the names.
+_TOOL_LOWER = "translate(tool, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz')"
 PAYLOAD_TOOL_SQL = (
-    f"lower(tool) IN ({', '.join(repr(t) for t in sorted(_HTML_TOOLS | _PDF_TOOLS))})"
-    f" OR startswith(lower(tool), '{_IMAGE_PREFIX}')"
+    f"{_TOOL_LOWER} IN ({', '.join(repr(t) for t in sorted(_HTML_TOOLS | _PDF_TOOLS))})"
+    f" OR startswith({_TOOL_LOWER}, '{_IMAGE_PREFIX}')"
 )
 SALT_SQL = f"xxhash64(conv_id, floor(turn_idx / {_TURN_BUCKET}))"
 
@@ -239,7 +298,10 @@ def salted(df: DataFrame, num_partitions: int | None = None, balance: bool = Fal
     """The extractor's input columns behind its one exchange.
 
     Column pruning is explicit: only (conv_id, turn_idx, text, tool) reach the
-    scan, so the parquet reader never materializes unused columns.
+    scan, so the parquet reader never materializes unused columns. Turns
+    that ``extract_payload`` answers with no rows at all (null text, or a
+    tool outside ``PAYLOAD_TOOL_SQL``) are filtered out before the exchange,
+    so they are never shuffled nor sent to Python.
 
     ``balance=True`` swaps the hash salt for ROUND-ROBIN repartitioning —
     still exactly one exchange, but rows spread uniformly instead of by
@@ -251,7 +313,7 @@ def salted(df: DataFrame, num_partitions: int | None = None, balance: bool = Fal
     sortBeforeRepartition on every input partition), and at millions of
     rows per partition the law of large numbers balances payload cost.
     """
-    slim = df.select("conv_id", "turn_idx", "text", "tool")
+    slim = df.select("conv_id", "turn_idx", "text", "tool").where(f"text IS NOT NULL AND ({PAYLOAD_TOOL_SQL})")
     if num_partitions is None:
         # Python-CPU-bound stage: size parallelism by cores, NOT by bytes.
         # A bare repartition(col) would let AQE coalesce the (byte-small,

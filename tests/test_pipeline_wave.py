@@ -35,6 +35,8 @@ TOOLS = [
     "application/pdf", "APPLICATION/PDF", "pdf", "PDF",
     "image/png", "IMAGE/PNG", "image/", "image", "images/png",
     "text/plain", "TEXT/PLAIN", None, "", "application/json", "unknown/tool",
+    # str.lower() maps these two into ASCII; neither spells a payload tool
+    "\u0130MAGE/png", "\u212aTML", "html\n",
 ]
 
 
