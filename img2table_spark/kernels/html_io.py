@@ -12,9 +12,12 @@ Two parse routes give the same tables. ``parse_html_tables`` parses one
 payload. ``compact_html_tables`` takes a whole Arrow array of payloads at
 once with ``pyarrow.compute`` and NumPy, but answers only for the compact
 grammar (``COMPACT_TABLE_RE2``): one ``<table>`` of equal-length
-``<tr>`` rows of bare ``<td>``/``<th>`` cells whose text is already
-whitespace-normalized and holds no ``<``, ``>`` or ``&``. Every other
-payload is left to ``parse_html_tables``.
+``<tr>`` rows of ``<td>``/``<th>`` cells, each bare or carrying exactly
+the renderer's ``colspan="1" rowspan="1"``, whose text is already
+whitespace-normalized and holds no ``<``, ``>`` or ``&``, with nothing
+between the tags. That covers ``table_to_html``'s own output for tables
+without merged cells or newlines. Every other payload is left to
+``parse_html_tables``.
 """
 
 from __future__ import annotations
@@ -472,7 +475,10 @@ SPACES_RE2 = r"\x{9}-\x{d}\x{1c}-\x{20}\x{85}\x{a0}\x{1680}\x{2000}-\x{200a}\x{2
 _WORD = f"[^<>&{SPACES_RE2}]+"
 # a cell text that " ".join(v.split()) leaves as it is, with nothing to unescape
 _VALUE = f"(?:{_WORD}(?: {_WORD})*)?"
-COMPACT_TABLE_RE2 = f"^<table>(?:<tr>(?:<td>{_VALUE}</td>|<th>{_VALUE}</th>)+</tr>)+</table>$"
+# the attributes table_to_html writes on an unmerged cell
+_UNIT_SPAN = ' colspan="1" rowspan="1"'
+_CELL = f"(?:<td(?:{_UNIT_SPAN})?>{_VALUE}</td>|<th(?:{_UNIT_SPAN})?>{_VALUE}</th>)"
+COMPACT_TABLE_RE2 = f"^<table>(?:<tr>{_CELL}+</tr>)+</table>$"
 
 
 class CompactTables(NamedTuple):
@@ -507,8 +513,10 @@ def compact_html_tables(payloads: pa.Array) -> CompactTables:
     i32 = np.int32
     matched = np.flatnonzero(pc.match_substring_regex(payloads, COMPACT_TABLE_RE2).to_numpy(zero_copy_only=False))
     owned = np.zeros(len(payloads), bool)
-    # <th> cells as <td> (literal replaces: a regex replace costs ~3x)
-    html = pc.replace_substring(payloads.take(pa.array(matched)), "<th>", "<td>")
+    # bare <td> cells (literal replaces: a regex replace costs ~3x). A value
+    # holds no ">", so the unit span's text followed by ">" is only a tag.
+    html = pc.replace_substring(payloads.take(pa.array(matched)), _UNIT_SPAN + ">", ">")
+    html = pc.replace_substring(html, "<th>", "<td>")
     html = pc.replace_substring(html, "</th>", "</td>")
     # strip "<table><tr>" and "</tr></table>", then "<td>" and "</td>" per row
     rows = pc.split_pattern(pc.utf8_slice_codeunits(html, 11, -13), "</tr><tr>")
@@ -532,7 +540,7 @@ def compact_html_tables(payloads: pa.Array) -> CompactTables:
     offsets = np.zeros(len(size) + 1, i32)
     np.cumsum(size, out=offsets[1:])
     row, col = np.divmod(np.arange(offsets[-1], dtype=i32) - np.repeat(offsets[:-1], size), np.repeat(n_cols, size))
-    html = pc.replace_substring(html.filter(pa.array(keep)), "<td>", '<td colspan="1" rowspan="1">')
+    html = pc.replace_substring(html.filter(pa.array(keep)), "<td>", f"<td{_UNIT_SPAN}>")
     return CompactTables(
         owned=owned,
         src=matched[keep],

@@ -9,7 +9,8 @@ Payload dispatch by the ``tool`` column (FIXTURES.md §1):
   - text/html        → HTML-table grammar parser (kernels.html_io). A batch's
                        HTML turns that fully match the compact grammar
                        (``html_io.COMPACT_TABLE_RE2``: one ``<table>`` of
-                       equal-length rows of bare ``<td>``/``<th>`` cells,
+                       equal-length rows of ``<td>``/``<th>`` cells, bare or
+                       with ``table_to_html``'s ``colspan="1" rowspan="1"``,
                        whitespace-normalized text without ``<>&``) are
                        parsed together by ``compact_html_tables``, in Arrow
                        and NumPy; the rest one at a time by
@@ -219,20 +220,22 @@ def _extract_batch(b: pa.RecordBatch, emit_errors: bool) -> pa.RecordBatch:
     texts = b.column("text")
     html = _html_turns(texts, b.column("tool"))
     compact = compact_html_tables(texts.take(pa.array(html))) if len(html) else None
-    looped = b
-    if compact is not None and compact.owned.any():
-        rest = np.ones(b.num_rows, bool)
-        rest[html[compact.owned]] = False
-        rest = np.flatnonzero(rest)
-        looped = b.take(pa.array(rest))
+    owned = np.zeros(b.num_rows, bool)  # turns whose rows compact_batch builds
+    if compact is not None:
+        owned[html[compact.owned]] = True
+    looped = np.flatnonzero(~owned)
+    at = pa.array(looped)
     out = _TableRows()
     ends = []  # rows in ``out`` after each looped turn
-    for conv_id, turn_idx, text, tool in zip(
-        looped.column("conv_id").to_pylist(),
-        looped.column("turn_idx").to_pylist(),
-        looped.column("text").to_pylist(),
-        looped.column("tool").to_pylist(),
+    for k, conv_id, turn_idx, tool in zip(
+        looped.tolist(),
+        b.column("conv_id").take(at).to_pylist(),
+        b.column("turn_idx").take(at).to_pylist(),
+        b.column("tool").take(at).to_pylist(),
     ):
+        # the text read in place, one turn at a time: a take would copy
+        # every looped payload, multi-MB images included
+        text = texts[k].as_py()
         try:
             tables = [t for t in extract_payload(text, tool) if is_relevant_table(t)]
         except Exception as exc:
@@ -243,14 +246,14 @@ def _extract_batch(b: pa.RecordBatch, emit_errors: bool) -> pa.RecordBatch:
                 out.add(conv_id, turn_idx, i, t)
         ends.append(len(out.tidx))
     rows = out.batch()
-    if looped is b or not len(compact.src):
+    if compact is None or not len(compact.src):
         return rows
     src = html[compact.src]
     grids = _TableRows.compact_batch(b.column("conv_id").take(src), b.column("turn_idx").take(src), compact)
     if not rows.num_rows:
         return grids
     # both kinds: put every row back at its turn's place
-    looped_src = np.repeat(rest, np.diff(ends, prepend=0))
+    looped_src = np.repeat(looped, np.diff(ends, prepend=0))
     order = np.argsort(np.concatenate([looped_src, src]), kind="stable")
     return pa.Table.from_batches([rows, grids]).take(order).combine_chunks().to_batches()[0]
 

@@ -18,7 +18,7 @@ import pytest
 
 import img2table_spark.operators.extract as extract_mod
 from img2table_spark.kernels.encoders import encode_png
-from img2table_spark.kernels.html_io import SPACES_RE2, compact_html_tables
+from img2table_spark.kernels.html_io import SPACES_RE2, compact_html_tables, parse_html_tables, table_to_html
 from img2table_spark.kernels.text import is_relevant_table
 from img2table_spark.operators.extract import (
     _html_turns,
@@ -35,7 +35,13 @@ WORDS = ["a", "Bq", "42", "é", "ß", "日本", "\U0001F600", '"q"', "'s'", "a/b
 HTML_TOOLS = ["text/html", "text/html", "html", "HTML", "Text/Html", " text/html", "text/html; charset=utf-8"]
 MUTATIONS = [
     "space", "double_space", "edge_space", "amp", "entity", "lt", "gt", "br", "upper_td", "colspan",
-    "ragged", "trailing_tr", "two_tables", "leading_text", "table_attr", "one_cell",
+    "span_attrs", "ragged", "trailing_tr", "two_tables", "leading_text", "table_attr", "one_cell",
+]
+# the attributes table_to_html writes on an unmerged cell, and near misses
+UNIT_SPAN = ' colspan="1" rowspan="1"'
+NOT_UNIT_SPANS = [
+    ' colspan="1"', ' rowspan="1" colspan="1"', " colspan='1' rowspan='1'", ' colspan="1"  rowspan="1"',
+    ' colspan="1" rowspan="2"', ' COLSPAN="1" ROWSPAN="1"', ' colspan="1" rowspan="1" ',
 ]
 
 
@@ -81,12 +87,15 @@ class _Gen:
         rng = self.rng
         n_rows = n_rows or rng.randint(1, 4)
         n_cols = n_cols or rng.randint(1, 4)
-        return [[(rng.choice("dddh"), self.value()) for _ in range(n_cols)] for _ in range(n_rows)]
+        return [
+            [(rng.choice("dddh") + rng.choice(["", "", UNIT_SPAN]), self.value()) for _ in range(n_cols)]
+            for _ in range(n_rows)
+        ]
 
     @staticmethod
     def html(grid, td=("<t{}>", "</t{}>"), attr="") -> str:
         rows = "".join(
-            "<tr>" + "".join(td[0].format(k) + v + td[1].format(k) for k, v in row) + "</tr>" for row in grid
+            "<tr>" + "".join(td[0].format(k) + v + td[1].format(k[0]) for k, v in row) + "</tr>" for row in grid
         )
         return f"<table{attr}>{rows}</table>"
 
@@ -125,6 +134,11 @@ class _Gen:
         elif kind == "colspan":
             text = self.html(grid)
             return text.replace("<td>", '<td colspan="2">', 1).replace("<th>", '<th rowspan="2">', 1)
+        elif kind == "span_attrs":
+            r = rng.randrange(len(grid))
+            c = rng.randrange(len(grid[r]))
+            k, v = grid[r][c]
+            grid[r][c] = (k[0] + rng.choice(NOT_UNIT_SPANS), v)
         elif kind == "ragged":
             grid = self.grid(n_rows=rng.randint(2, 4))
             r = rng.randrange(len(grid))
@@ -144,11 +158,22 @@ class _Gen:
             grid = self.grid(n_rows=1, n_cols=1)
         return self.html(grid)
 
+    def rendered(self) -> str:
+        """``table_to_html`` of a parsed table: unit spans on every cell, or
+        real ones where a value spans two cells."""
+        grid = self.grid()
+        if self.rng.random() < 0.3 and len(grid[0]) > 1:
+            grid[0][1] = grid[0][0]
+        tables = parse_html_tables(self.html(grid))
+        return table_to_html(tables[0]) if tables else self.html(grid)
+
     def turn(self) -> tuple[str | None, str | None]:
         rng = self.rng
         u = rng.random()
-        if u < 0.50:
+        if u < 0.40:
             return self.html(self.grid()), rng.choice(HTML_TOOLS)
+        if u < 0.50:
+            return self.rendered(), rng.choice(HTML_TOOLS)
         if u < 0.78:
             return self.mutated(), rng.choice(HTML_TOOLS)
         if u < 0.86:
@@ -209,6 +234,8 @@ def test_batch_path_equals_per_turn_reference(emit_errors):
 
 def test_edge_batches_equal_the_reference():
     html = "<table><tr><td>a</td><td>b</td></tr></table>"
+    rendered = table_to_html(parse_html_tables(html)[0])
+    assert rendered == '<table><tr><td colspan="1" rowspan="1">a</td><td colspan="1" rowspan="1">b</td></tr></table>'
     png = base64.b64encode(encode_png(np.full((24, 32, 3), 255, np.uint8))).decode()
     edge = [
         _batch([], [], [], []),
@@ -217,12 +244,13 @@ def test_edge_batches_equal_the_reference():
         # a tool column with no value, typed string and null-typed
         _batch(["c0", "c1"], [0, 1], [html, html], [None, None]),
         _batch(["c0", "c1"], [0, 1], [html, html], [None, None], tool_type=pa.null()),
-        # only the batch path
+        # only the batch path, also on the renderer's own output
         _batch(["c0", "c1"], [0, 1], [html, html.replace("td", "th")], ["html", "text/html"]),
+        _batch(["c0", "c1"], [0, 1], [rendered, rendered.replace(">a<", ">a b<")], ["html", "text/html"]),
     ]
     for emit_errors in (False, True):
         _assert_same(edge, emit_errors)
-    assert _n_batch_path(edge[-1]) == 2
+    assert _n_batch_path(edge[-2]) == 2 and _n_batch_path(edge[-1]) == 2
 
 
 # the dispatch rule extract_payload applies, and the cases it turns on
