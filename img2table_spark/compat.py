@@ -255,7 +255,7 @@ class PDF:
             else None
         )
         per_page, _ = extract_pdf_tables_auto(
-            self.bytes,
+            doc,
             pages=req,
             implicit_rows=implicit_rows,
             implicit_columns=implicit_columns,

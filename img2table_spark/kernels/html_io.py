@@ -11,13 +11,15 @@ output schema as image/PDF payloads.
 Two parse routes give the same tables. ``parse_html_tables`` parses one
 payload. ``compact_html_tables`` takes a whole Arrow array of payloads at
 once with ``pyarrow.compute`` and NumPy, but answers only for the compact
-grammar (``COMPACT_TABLE_RE2``): one ``<table>`` of equal-length
-``<tr>`` rows of ``<td>``/``<th>`` cells, each bare or carrying exactly
-the renderer's ``colspan="1" rowspan="1"``, whose text is already
-whitespace-normalized and holds no ``<``, ``>`` or ``&``, with nothing
-between the tags. That covers ``table_to_html``'s own output for tables
-without merged cells or newlines. Every other payload is left to
-``parse_html_tables``.
+grammar (``COMPACT_TABLE_RE2``): one ``<table>`` of ``<tr>`` rows of
+``<td>``/``<th>`` cells, each bare or carrying ``colspan="k"`` (k from 1
+to 99, no leading zero) with or without a following ``rowspan="1"``, every
+row covering the same number of columns, with nothing between the tags.
+A cell's text is words split by single spaces or by runs of ``<br>``,
+already whitespace-normalized, holding no ``<``, ``>`` or ``&``. That
+covers ``table_to_html``'s own output for tables whose merged cells span
+one row. Every other payload (rowspans, entities, prettified whitespace)
+is left to ``parse_html_tables``.
 """
 
 from __future__ import annotations
@@ -426,7 +428,9 @@ def parse_html_tables(html: str) -> list[Table]:
             out.append(Table(rows=rows))
             continue
         occupied: dict[tuple[int, int], Cell] = {}
-        pending: dict[Cell, tuple[int, int, int, int]] = {}  # cell -> (r1, c1, r2, c2)
+        # (cell, (r1, c1, r2, c2)) — a list, not a dict keyed by Cell: until
+        # its box is set, a cell hashes and compares by its content alone
+        pending: list[tuple[Cell, tuple[int, int, int, int]]] = []
         for r, raw_row in enumerate(raw_rows):
             c = 0
             for value, colspan, rowspan in raw_row:
@@ -435,7 +439,7 @@ def parse_html_tables(html: str) -> list[Table]:
                 cell = Cell(0, 0, 0, 0, content=value)
                 r2 = r + rowspan - 1
                 c2 = c + colspan - 1
-                pending[cell] = (r, c, r2, c2)
+                pending.append((cell, (r, c, r2, c2)))
                 for rr in range(r, r2 + 1):
                     for cc in range(c, c2 + 1):
                         occupied[(rr, cc)] = cell
@@ -445,7 +449,7 @@ def parse_html_tables(html: str) -> list[Table]:
         n_rows = max(rc[0] for rc in occupied) + 1
         n_cols = max(rc[1] for rc in occupied) + 1
         # Assign synthetic geometry now that span extents are known.
-        for cell, (r1, c1, r2, c2) in pending.items():
+        for cell, (r1, c1, r2, c2) in pending:
             cell.x1 = c1 * HTML_COL_W
             cell.y1 = r1 * HTML_ROW_H
             cell.x2 = (c2 + 1) * HTML_COL_W
@@ -473,17 +477,20 @@ def parse_html_tables(html: str) -> list[Table]:
 # tests/test_html_batch.py checks the two agree.
 SPACES_RE2 = r"\x{9}-\x{d}\x{1c}-\x{20}\x{85}\x{a0}\x{1680}\x{2000}-\x{200a}\x{2028}\x{2029}\x{202f}\x{205f}\x{3000}"
 _WORD = f"[^<>&{SPACES_RE2}]+"
-# a cell text that " ".join(v.split()) leaves as it is, with nothing to unescape
-_VALUE = f"(?:{_WORD}(?: {_WORD})*)?"
-# the attributes table_to_html writes on an unmerged cell
-_UNIT_SPAN = ' colspan="1" rowspan="1"'
-_CELL = f"(?:<td(?:{_UNIT_SPAN})?>{_VALUE}</td>|<th(?:{_UNIT_SPAN})?>{_VALUE}</th>)"
+# a cell text that parse_html_tables leaves as it is: lines that
+# " ".join(v.split()) keeps, split by runs of <br>, nothing to unescape
+_LINE = f"{_WORD}(?: {_WORD})*"
+_VALUE = f"(?:{_LINE}(?:(?:<br>)+{_LINE})*)?"
+# a colspan of 1 to 99 as table_to_html writes it, its unit rowspan optional
+_SPAN = '(?: colspan="[1-9][0-9]?"(?: rowspan="1")?)?'
+_CELL = f"(?:<td{_SPAN}>{_VALUE}</td>|<th{_SPAN}>{_VALUE}</th>)"
 COMPACT_TABLE_RE2 = f"^<table>(?:<tr>{_CELL}+</tr>)+</table>$"
 
 
 class CompactTables(NamedTuple):
     """The tables ``compact_html_tables`` found: at most one per payload,
-    cells flattened row-major, boxes in the synthetic HTML geometry."""
+    grid positions flattened row-major (a merged cell once per position it
+    covers, with its whole box), boxes in the synthetic HTML geometry."""
 
     owned: np.ndarray  # bool per payload: the table (or its absence) is settled here
     src: np.ndarray  # the payload position of each table
@@ -491,14 +498,14 @@ class CompactTables(NamedTuple):
     n_cols: np.ndarray
     x2: np.ndarray  # table box; x1 = y1 = 0
     y2: np.ndarray
-    offsets: np.ndarray  # cells of table i: offsets[i]:offsets[i + 1]
+    offsets: np.ndarray  # positions of table i: offsets[i]:offsets[i + 1]
     row: np.ndarray
     col: np.ndarray
     cell_x1: np.ndarray
     cell_y1: np.ndarray
     cell_x2: np.ndarray
     cell_y2: np.ndarray
-    values: pa.Array  # cell texts, null for an empty cell
+    values: pa.Array  # cell texts, "\n" for <br>, null for an empty cell
     html: pa.Array  # table_to_html of each table
 
 
@@ -506,41 +513,56 @@ def compact_html_tables(payloads: pa.Array) -> CompactTables:
     """``parse_html_tables`` plus ``is_relevant_table`` over a string array
     of non-null payloads, for those that fully match ``COMPACT_TABLE_RE2``.
 
-    A matching payload with rows of unequal length (which the per-payload
-    parser pads) is not owned; one whose table has ``max(n_rows, n_cols) <
-    2`` is owned and yields no table. Each table's HTML is
-    ``table_to_html``'s 1×1 rendering, ``<th>`` written as ``<td>``."""
+    A cell of colspan k covers k positions of its row, each with the cell's
+    value and box. A matching payload whose rows cover unequal numbers of
+    columns (which the per-payload parser pads) is not owned; one whose
+    table has ``max(n_rows, n_cols) < 2`` is owned and yields no table.
+    Each table's HTML is ``table_to_html``'s: every cell written as
+    ``<td colspan="k" rowspan="1">``, ``<th>`` as ``<td>``."""
     i32 = np.int32
     matched = np.flatnonzero(pc.match_substring_regex(payloads, COMPACT_TABLE_RE2).to_numpy(zero_copy_only=False))
     owned = np.zeros(len(payloads), bool)
-    # bare <td> cells (literal replaces: a regex replace costs ~3x). A value
-    # holds no ">", so the unit span's text followed by ">" is only a tag.
-    html = pc.replace_substring(payloads.take(pa.array(matched)), _UNIT_SPAN + ">", ">")
-    html = pc.replace_substring(html, "<th>", "<td>")
+    # one cell tag, <td colspan="k">, by literal replaces (a regex replace
+    # costs ~3x). Values hold no "<" or ">", so these texts are only tags.
+    html = pc.replace_substring(payloads.take(pa.array(matched)), "<th", "<td")
     html = pc.replace_substring(html, "</th>", "</td>")
-    # strip "<table><tr>" and "</tr></table>", then "<td>" and "</td>" per row
-    rows = pc.split_pattern(pc.utf8_slice_codeunits(html, 11, -13), "</tr><tr>")
-    cells = pc.split_pattern(pc.utf8_slice_codeunits(rows.flatten(), 4, -5), "</td><td>")
+    html = pc.replace_substring(html, ' rowspan="1">', ">")
+    html = pc.replace_substring(html, "<td>", '<td colspan="1">')
+    # strip '<table><tr><td colspan="' and '</td></tr></table>', split rows
+    # and cells on what is between them, then each cell 'k">value' on '">'
+    rows = pc.split_pattern(pc.utf8_slice_codeunits(html, 24, -18), '</td></tr><tr><td colspan="')
+    cells = pc.split_pattern(rows.flatten(), '</td><td colspan="')
+    span_value = pc.split_pattern(cells.flatten(), '">', max_splits=1)
+    spans = pc.list_element(span_value, 0).cast(pa.int32()).to_numpy()
     n_rows = pc.list_value_length(rows).to_numpy().astype(i32)
-    width = pc.list_value_length(cells).to_numpy().astype(i32)
+    width = pc.list_value_length(cells).to_numpy().astype(i32)  # cells in each row
+    before = np.cumsum(spans, dtype=i32) - spans  # columns before each cell, all rows
+    row_first = np.cumsum(width) - width
+    start = before - np.repeat(before[row_first], width)  # each cell's column
     if len(matched):
         first = np.cumsum(n_rows) - n_rows
-        n_cols = width[first]
-        uniform = np.minimum.reduceat(width, first) == np.maximum.reduceat(width, first)
+        row_cols = np.add.reduceat(spans, row_first, dtype=i32)
+        n_cols = row_cols[first]
+        uniform = np.minimum.reduceat(row_cols, first) == np.maximum.reduceat(row_cols, first)
         n_cells = np.add.reduceat(width, first)
     else:
         n_cols = n_cells = width
         uniform = np.zeros(0, bool)
     owned[matched[uniform]] = True
     keep = uniform & (np.maximum(n_rows, n_cols) >= 2)
-    values = cells.flatten().filter(pa.array(np.repeat(keep, n_cells)))
-    values = pc.if_else(pc.equal(values, ""), pa.scalar(None, values.type), values)
+    kept = np.repeat(keep, n_cells)
+    spans, start = spans[kept], start[kept]
+    values = pc.list_element(span_value, 1).filter(pa.array(kept))
+    lines = pc.replace_substring(values, "<br>", "\n")
+    values = pc.if_else(pc.equal(values, ""), pa.scalar(None, values.type), lines)
     n_rows, n_cols = n_rows[keep], n_cols[keep]
     size = n_rows * n_cols
     offsets = np.zeros(len(size) + 1, i32)
     np.cumsum(size, out=offsets[1:])
     row, col = np.divmod(np.arange(offsets[-1], dtype=i32) - np.repeat(offsets[:-1], size), np.repeat(n_cols, size))
-    html = pc.replace_substring(html.filter(pa.array(keep)), "<td>", f"<td{_UNIT_SPAN}>")
+    # each position's cell: the rows of a kept table cover n_cols columns each
+    cell = np.repeat(np.arange(len(spans), dtype=i32), spans)
+    html = pc.replace_substring(html.filter(pa.array(keep)), '">', '" rowspan="1">')
     return CompactTables(
         owned=owned,
         src=matched[keep],
@@ -551,10 +573,10 @@ def compact_html_tables(payloads: pa.Array) -> CompactTables:
         offsets=offsets,
         row=row,
         col=col,
-        cell_x1=col * HTML_COL_W,
+        cell_x1=start[cell] * HTML_COL_W,
         cell_y1=row * HTML_ROW_H,
-        cell_x2=(col + 1) * HTML_COL_W,
+        cell_x2=(start + spans)[cell] * HTML_COL_W,
         cell_y2=(row + 1) * HTML_ROW_H,
-        values=values,
+        values=values.take(pa.array(cell)),
         html=html,
     )

@@ -810,7 +810,7 @@ def _raster_page(
 
 
 def extract_pdf_tables_auto(
-    data: bytes,
+    data: "bytes | PdfDocument",
     implicit_rows: bool = False,
     implicit_columns: bool = False,
     borderless_tables: bool = False,
@@ -831,9 +831,10 @@ def extract_pdf_tables_auto(
     ``pages`` selects 0-based page indices (out-of-range ones are dropped,
     duplicates kept); output pages are in ascending page order (reference
     sorts pages in Document.__post_init__). ``words_by_page`` holds OCR
-    words per page index for scanned and rotation-corrected pages. Returns
-    (per-page tables, any_page_rotated)."""
-    doc = PdfDocument(data)
+    words per page index for scanned and rotation-corrected pages. ``data``
+    is the PDF's bytes or a ``PdfDocument`` already parsed from them.
+    Returns (per-page tables, any_page_rotated)."""
+    doc = PdfDocument(data) if isinstance(data, (bytes, bytearray)) else data
     all_pages = doc.pages()
     n = len(all_pages)
     req = sorted(p for p in (pages if pages is not None else range(n)) if 0 <= p < n)

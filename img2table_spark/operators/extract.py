@@ -9,12 +9,14 @@ Payload dispatch by the ``tool`` column (FIXTURES.md §1):
   - text/html        → HTML-table grammar parser (kernels.html_io). A batch's
                        HTML turns that fully match the compact grammar
                        (``html_io.COMPACT_TABLE_RE2``: one ``<table>`` of
-                       equal-length rows of ``<td>``/``<th>`` cells, bare or
-                       with ``table_to_html``'s ``colspan="1" rowspan="1"``,
-                       whitespace-normalized text without ``<>&``) are
-                       parsed together by ``compact_html_tables``, in Arrow
-                       and NumPy; the rest one at a time by
-                       ``parse_html_tables``. The rows are the same.
+                       rows of ``<td>``/``<th>`` cells, bare or with
+                       ``colspan="k"`` and an optional ``rowspan="1"``,
+                       every row covering the same columns; whitespace-
+                       normalized text without ``<>&``, ``<br>`` runs
+                       between words) are parsed together by
+                       ``compact_html_tables``, in Arrow and NumPy; the rest
+                       (rowspans, entities, prettified markup) one at a
+                       time by ``parse_html_tables``. The rows are the same.
   - image/*          → decode + bordered/borderless CV pipeline
                        (kernels.image — pure NumPy; PNG via stdlib zlib)
   - application/pdf  → native-text path (kernels.pdf) when available

@@ -35,14 +35,24 @@ WORDS = ["a", "Bq", "42", "é", "ß", "日本", "\U0001F600", '"q"', "'s'", "a/b
 HTML_TOOLS = ["text/html", "text/html", "html", "HTML", "Text/Html", " text/html", "text/html; charset=utf-8"]
 MUTATIONS = [
     "space", "double_space", "edge_space", "amp", "entity", "lt", "gt", "br", "upper_td", "colspan",
-    "span_attrs", "ragged", "trailing_tr", "two_tables", "leading_text", "table_attr", "one_cell",
+    "span_attrs", "span_sums", "ragged", "trailing_tr", "two_tables", "leading_text", "table_attr", "one_cell",
 ]
-# the attributes table_to_html writes on an unmerged cell, and near misses
+# the attributes table_to_html writes on an unmerged cell
 UNIT_SPAN = ' colspan="1" rowspan="1"'
-NOT_UNIT_SPANS = [
-    ' colspan="1"', ' rowspan="1" colspan="1"', " colspan='1' rowspan='1'", ' colspan="1"  rowspan="1"',
-    ' colspan="1" rowspan="2"', ' COLSPAN="1" ROWSPAN="1"', ' colspan="1" rowspan="1" ',
+# the span attributes the compact grammar takes, by colspan
+SPANS = {
+    1: ["", "", "", UNIT_SPAN, ' colspan="1"'],
+    2: [' colspan="2"', ' colspan="2" rowspan="1"'],
+    3: [' colspan="3"', ' colspan="3" rowspan="1"'],
+}
+# near misses of them
+NOT_SPANS = [
+    ' rowspan="1" colspan="1"', " colspan='1' rowspan='1'", ' colspan="1"  rowspan="1"', ' colspan="1" rowspan="2"',
+    ' COLSPAN="1" ROWSPAN="1"', ' colspan="1" rowspan="1" ', ' colspan="0"', ' colspan="02"', " colspan=2",
+    ' rowspan="1" colspan="2"', ' colspan="2" rowspan="2"', ' rowspan="2"', ' rowspan="1"',
 ]
+# near misses of <br> between words
+NOT_BRS = ["a<br/>b", "a<br >b", "a<BR>b", "<br>a", "a<br>", "<br>", "a <br>b", "a<br> b", "a <br> b"]
 
 
 def _reference_extract(emit_errors: bool):
@@ -81,16 +91,27 @@ class _Gen:
         self._space = 0
 
     def value(self) -> str:
-        return " ".join(self.rng.choice(WORDS) for _ in range(self.rng.choice([0, 1, 1, 2, 3])))
+        """Words split by single spaces or by runs of <br>."""
+        rng = self.rng
+        words = [rng.choice(WORDS) for _ in range(rng.choice([0, 1, 1, 2, 3]))]
+        seps = [rng.choice([" ", " ", " ", "<br>", "<br><br>"]) for _ in words[1:]] + [""]
+        return "".join(w + sep for w, sep in zip(words, seps))
 
     def grid(self, n_rows=None, n_cols=None) -> list[list[tuple[str, str]]]:
+        """Rows of (tag and attributes, value), each row's colspans summing
+        to ``n_cols``."""
         rng = self.rng
         n_rows = n_rows or rng.randint(1, 4)
         n_cols = n_cols or rng.randint(1, 4)
-        return [
-            [(rng.choice("dddh") + rng.choice(["", "", UNIT_SPAN]), self.value()) for _ in range(n_cols)]
-            for _ in range(n_rows)
-        ]
+        grid = []
+        for _ in range(n_rows):
+            row, left = [], n_cols
+            while left:
+                k = min(left, rng.choice([1, 1, 1, 1, 2, 3]))
+                row.append((rng.choice("dddh") + rng.choice(SPANS[k]), self.value()))
+                left -= k
+            grid.append(row)
+        return grid
 
     @staticmethod
     def html(grid, td=("<t{}>", "</t{}>"), attr="") -> str:
@@ -128,7 +149,7 @@ class _Gen:
         elif kind == "gt":
             self.set_value(grid, lambda v: rng.choice(["a > b", "->", ">"]))
         elif kind == "br":
-            self.set_value(grid, lambda v: f"{v}<br>tail")
+            self.set_value(grid, lambda v: rng.choice(NOT_BRS))
         elif kind == "upper_td":
             return self.html(grid, td=("<T{}>", "</T{}>")).replace("<Th>", "<TH>").replace("<Td>", "<TD>")
         elif kind == "colspan":
@@ -138,7 +159,15 @@ class _Gen:
             r = rng.randrange(len(grid))
             c = rng.randrange(len(grid[r]))
             k, v = grid[r][c]
-            grid[r][c] = (k[0] + rng.choice(NOT_UNIT_SPANS), v)
+            grid[r][c] = (k[0] + rng.choice(NOT_SPANS), v)
+        elif kind == "span_sums":
+            # one cell a column wider: its row covers more columns than the others
+            grid = self.grid(n_rows=rng.randint(2, 4))
+            r = rng.randrange(len(grid))
+            c = rng.randrange(len(grid[r]))
+            k, v = grid[r][c]
+            span = int(k.split('"')[1]) if "colspan" in k else 1
+            grid[r][c] = (k[0] + rng.choice(SPANS[span + 1] if span < 3 else [' colspan="4"']), v)
         elif kind == "ragged":
             grid = self.grid(n_rows=rng.randint(2, 4))
             r = rng.randrange(len(grid))
@@ -213,9 +242,17 @@ def _assert_same(batches, emit_errors) -> None:
         assert g.equals(w), (i, batches[i].to_pylist(), g.to_pylist(), w.to_pylist())
 
 
-def _n_batch_path(b: pa.RecordBatch) -> int:
+def _batch_path_texts(b: pa.RecordBatch) -> list[str]:
+    """The payloads of ``b`` whose rows the batch path builds."""
     html = _html_turns(b.column("text"), b.column("tool"))
-    return int(compact_html_tables(b.column("text").take(pa.array(html))).owned.sum()) if len(html) else 0
+    if not len(html):
+        return []
+    owned = compact_html_tables(b.column("text").take(pa.array(html))).owned
+    return b.column("text").take(pa.array(html[owned])).to_pylist()
+
+
+def _n_batch_path(b: pa.RecordBatch) -> int:
+    return len(_batch_path_texts(b))
 
 
 @pytest.mark.parametrize("emit_errors", [False, True])
@@ -228,7 +265,11 @@ def test_batch_path_equals_per_turn_reference(emit_errors):
     assert gen.spaces_used == set(SPACES)
     assert gen.mutations_used == set(MUTATIONS)
     n_rows = sum(b.num_rows for b in batches)
-    assert sum(_n_batch_path(b) for b in batches) >= 0.3 * n_rows
+    owned = [text for b in batches for text in _batch_path_texts(b)]
+    assert len(owned) >= 0.35 * n_rows
+    # merged cells and line breaks of every kind take the batch path
+    for part in ('<td colspan="2">', '<th colspan="3" rowspan="1">', ' colspan="1">', UNIT_SPAN, "<br><br>"):
+        assert any(part in text for text in owned), part
     assert any(b.num_rows == 0 for b in batches)
 
 

@@ -83,6 +83,21 @@ def test_parse_spans_and_br():
     assert [c.content for c in t.rows[1]] == ["c", "d"]
 
 
+def test_parse_spans_gives_equal_texts_their_own_boxes():
+    """In a table with a span, two cells with the same text (or two empty
+    cells) each get the box of the positions they cover."""
+    [t] = parse_html_tables(
+        '<table><tr><td colspan="2">a</td><td>a</td></tr>'
+        '<tr><td></td><td rowspan="2"></td><td>z</td></tr><tr><td></td><td></td></tr></table>'
+    )
+    boxes = [[(c.x1, c.y1, c.x2, c.y2, c.content) for c in row] for row in t.rows]
+    assert boxes == [
+        [(0, 0, 200, 20, "a"), (0, 0, 200, 20, "a"), (200, 0, 300, 20, "a")],
+        [(0, 20, 100, 40, None), (100, 20, 200, 60, None), (200, 20, 300, 40, "z")],
+        [(0, 40, 100, 60, None), (100, 20, 200, 60, None), (200, 40, 300, 60, None)],
+    ]
+
+
 def test_parse_ragged_and_empty():
     [t] = parse_html_tables("<table><tr><td>x</td><td></td></tr><tr><td>y</td></tr></table>")
     assert t.nb_rows == 2 and t.nb_columns == 2

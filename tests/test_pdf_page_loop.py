@@ -273,6 +273,22 @@ def test_planted_pdf_routes(planted_pdf):
     assert any(t.borderless and (t.nb_rows, t.nb_columns) == (7, 4) for t in pages[0])
 
 
+@pytest.mark.parametrize("pages", [None, [2, 0], [5, 1]])
+def test_compat_pdf_parses_once(planted_pdf, monkeypatch, pages):
+    """``compat.PDF.extract_tables`` counts the pages of the document it
+    hands to the page loop: one parse a call, with the loop's tables."""
+    import img2table_spark.kernels.pdf_native as pdf_native
+    from img2table_spark.compat import PDF
+
+    want, _ = extract_pdf_tables_auto(planted_pdf, pages=pages)
+    _CountingPdfDocument.inits = 0
+    monkeypatch.setattr(pdf_doc, "PdfDocument", _CountingPdfDocument)
+    monkeypatch.setattr(pdf_native, "PdfDocument", _CountingPdfDocument)
+    got = PDF(src=planted_pdf, pages=pages).extract_tables()
+    assert _CountingPdfDocument.inits == 1
+    assert _summary([[t._table for t in got[i]] for i in sorted(got)]) == _summary(want)
+
+
 def test_oversized_vector_page_yields_no_tables(monkeypatch):
     """A text page whose 200-DPI canvas exceeds the guard yields no tables on
     the vector route too, and never reaches the line mask (a 200000-pt page
