@@ -296,64 +296,3 @@ def get_image_elements(thresh: np.ndarray, char_length: float) -> list[Cell]:
             elements.append(Cell(x1=x, y1=y, x2=x + w, y2=y + h))
     return elements
 
-
-# --------------------------------------------------------------- BMP reader
-
-def decode_bmp_gray(data: bytes) -> np.ndarray:
-    """Minimal BMP reader for the reference's .bmp golden fixtures
-    (uncompressed 8/24/32-bit), returned as grayscale uint8 like
-    cv2.imread(..., IMREAD_GRAYSCALE)."""
-    import struct
-
-    if data[:2] != b"BM":
-        raise ValueError("not a BMP")
-    offset = struct.unpack("<I", data[10:14])[0]
-    hdr_size = struct.unpack("<I", data[14:18])[0]
-    width, height = struct.unpack("<ii", data[18:26])
-    bpp = struct.unpack("<H", data[28:30])[0]
-    compression = struct.unpack("<I", data[30:34])[0]
-    if compression != 0:
-        raise ValueError("compressed BMP unsupported")
-    flip = height > 0
-    height = abs(height)
-    row_size = (width * bpp // 8 + 3) & ~3
-    rows = np.frombuffer(data, dtype=np.uint8, count=row_size * height, offset=offset)
-    rows = rows.reshape(height, row_size)
-    if bpp == 8:
-        # palette lookup → gray via cv2 BGR coefficients
-        pal_off = 14 + hdr_size
-        n_colors = struct.unpack("<I", data[46:50])[0] or 256
-        pal = np.frombuffer(data, dtype=np.uint8, count=n_colors * 4, offset=pal_off).reshape(-1, 4)
-        idxs = rows[:, :width]
-        b = pal[idxs, 0].astype(np.int64)
-        g = pal[idxs, 1].astype(np.int64)
-        r = pal[idxs, 2].astype(np.int64)
-        gray = ((r * 4899 + g * 9617 + b * 1868 + (1 << 13)) >> 14).astype(np.uint8)
-    elif bpp in (24, 32):
-        step = bpp // 8
-        px = rows[:, : width * step].reshape(height, width, step)
-        b = px[:, :, 0].astype(np.int64)
-        g = px[:, :, 1].astype(np.int64)
-        r = px[:, :, 2].astype(np.int64)
-        gray = ((r * 4899 + g * 9617 + b * 1868 + (1 << 13)) >> 14).astype(np.uint8)
-    else:
-        raise ValueError(f"unsupported bpp {bpp}")
-    return gray[::-1] if flip else gray
-
-
-def decode_bmp_rgb(data: bytes) -> np.ndarray:
-    """BMP → RGB uint8 (24/32-bit uncompressed)."""
-    import struct
-
-    offset = struct.unpack("<I", data[10:14])[0]
-    width, height = struct.unpack("<ii", data[18:26])
-    bpp = struct.unpack("<H", data[28:30])[0]
-    flip = height > 0
-    height = abs(height)
-    row_size = (width * bpp // 8 + 3) & ~3
-    rows = np.frombuffer(data, dtype=np.uint8, count=row_size * height, offset=offset)
-    rows = rows.reshape(height, row_size)
-    step = bpp // 8
-    px = rows[:, : width * step].reshape(height, width, step)
-    rgb = px[:, :, [2, 1, 0]]
-    return np.ascontiguousarray(rgb[::-1] if flip else rgb)

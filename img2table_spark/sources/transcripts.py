@@ -25,10 +25,6 @@ from img2table_spark.session import session_artifact
 REF_TESTS = Path("/root/reference/tests")
 
 
-def read_transcripts(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.parquet(path)
-
-
 # ------------------------------------------------------- golden local corpus
 
 

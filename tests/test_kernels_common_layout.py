@@ -6,6 +6,7 @@ import json
 
 import pytest
 
+from img2table_spark.kernels.bmp import decode_bmp
 from img2table_spark.kernels.borderless.layout import segment_image_columns
 from img2table_spark.kernels.borderless.model import ImageSegment
 from img2table_spark.kernels.borderless.table_segments import get_table_segments
@@ -14,7 +15,7 @@ from img2table_spark.kernels.contours import get_contours_cell
 from img2table_spark.kernels.metrics import threshold_dark_areas
 from img2table_spark.kernels.objects import Cell, Line
 from img2table_spark.kernels.png import decode_png
-from img2table_spark.kernels.rlsa import decode_bmp_rgb, get_image_elements, identify_text_mask
+from img2table_spark.kernels.rlsa import get_image_elements, identify_text_mask
 
 
 def _key(c):
@@ -58,7 +59,7 @@ def test_segment_image(ref_tests):
     counts through L1→L5."""
     base = ref_tests / "tables/processing/borderless_tables/layout/test_data"
     with open(base / "test.bmp", "rb") as f:
-        img = decode_bmp_rgb(f.read())
+        img = decode_bmp(f.read())
     thresh = threshold_dark_areas(img, char_length=6)
     with open(base / "lines.json") as f:
         data = json.load(f)

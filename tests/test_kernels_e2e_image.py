@@ -8,16 +8,13 @@ import json
 import numpy as np
 import pytest
 
+from img2table_spark.kernels.bmp import decode_bmp
 from img2table_spark.kernels.borderless.build import identify_borderless_tables_from_elements
+from img2table_spark.kernels.imageops import rgb2gray
 from img2table_spark.kernels.metrics import threshold_dark_areas
 from img2table_spark.kernels.objects import Cell, Line
 from img2table_spark.kernels.png import decode_png
-from img2table_spark.kernels.rlsa import (
-    decode_bmp_gray,
-    decode_bmp_rgb,
-    get_image_elements,
-    identify_text_mask,
-)
+from img2table_spark.kernels.rlsa import get_image_elements, identify_text_mask
 from img2table_spark.kernels.table_image import TableImage
 
 
@@ -58,12 +55,12 @@ def test_extract_tables_blank(ref_tests):
 def rlsa_inputs(ref_tests):
     base = ref_tests / "tables/processing/borderless_tables/layout/test_data"
     with open(base / "test.bmp", "rb") as f:
-        img = decode_bmp_rgb(f.read())
+        img = decode_bmp(f.read())
     with open(base / "lines.json") as f:
         data = json.load(f)
     lines = [Line(**el) for el in data["h_lines"] + data["v_lines"]]
     with open(base / "text_thresh.bmp", "rb") as f:
-        expected_mask = decode_bmp_gray(f.read())
+        expected_mask = rgb2gray(decode_bmp(f.read()))
     return img, lines, expected_mask, base
 
 

@@ -8,10 +8,13 @@ from hypothesis import given, settings, strategies as st
 from img2table_spark.kernels.bmp import decode_bmp
 from img2table_spark.kernels.encoders import (
     encode_bmp24,
+    encode_jpeg_progressive,
+    encode_png,
     encode_tiff,
     packbits_encode,
     tiff_lzw_encode,
 )
+from img2table_spark.kernels.image_doc import decode_image_bytes
 from img2table_spark.kernels.tiff import _lzw_decode, _packbits_decode, decode_tiff
 
 
@@ -28,6 +31,33 @@ def _img(h, w, seed):
 def test_bmp24_any_shape(h, w, seed):
     img = _img(h, w, seed)
     assert np.array_equal(decode_bmp(encode_bmp24(img)), img)
+
+
+@settings(max_examples=25, deadline=None)
+@given(
+    h=st.integers(1, 40),
+    w=st.integers(1, 40),
+    seed=st.integers(0, 10_000),
+)
+def test_png_any_shape(h, w, seed):
+    img = _img(h, w, seed)
+    assert np.array_equal(decode_image_bytes(encode_png(img)), img)
+
+
+@settings(max_examples=25, deadline=None)
+@given(
+    bh=st.integers(1, 5),
+    bw=st.integers(1, 5),
+    seed=st.integers(0, 10_000),
+)
+def test_progressive_jpeg_blocky_any_shape(bh, bw, seed):
+    # one flat colour per 8x8 block: DC-only blocks, so the only loss left
+    # is the colour conversion's rounding
+    small = _img(bh, bw, seed)
+    img = np.repeat(np.repeat(small, 8, axis=0), 8, axis=1)
+    got = decode_image_bytes(encode_jpeg_progressive(img, qval=2))
+    assert got.shape == img.shape
+    assert int(np.abs(got.astype(np.int16) - img).max()) <= 2
 
 
 @settings(max_examples=20, deadline=None)

@@ -34,6 +34,6 @@ def test_no_stream_entry_point_takes_available_now():
                 entry_points[f"{p.stem}.{node.name}"] = {
                     x.arg for x in (*a.posonlyargs, *a.args, *a.kwonlyargs)
                 }
-    assert len(entry_points) == 19, sorted(entry_points)
+    assert len(entry_points) == 18, sorted(entry_points)
     flagged = sorted(name for name, args in entry_points.items() if "available_now" in args)
     assert not flagged, flagged

@@ -72,74 +72,6 @@ def test_stream_quality_filter_matches_batch(spark, tmp_path):
     assert spark.read.parquet(out).count() == 2
 
 
-def test_stream_image_dedup(spark, tmp_path):
-    import numpy as np
-
-    from img2table_spark.kernels.encoders import encode_bmp24, encode_png
-    from img2table_spark.streaming.sessions import stream_image_dedup
-
-    base = dt.datetime(2026, 1, 1)
-
-    def img(seed):
-        small = np.random.RandomState(seed).randint(0, 256, (8, 8, 3))
-        return np.repeat(np.repeat(small, 8, 0), 8, 1).astype(np.uint8)
-
-    rows = [
-        (0, base, bytearray(encode_png(img(1)))),
-        (1, base + dt.timedelta(minutes=1), bytearray(encode_bmp24(img(1)))),  # re-encode dup
-        (2, base + dt.timedelta(minutes=2), bytearray(encode_png(img(2)))),
-        (3, base + dt.timedelta(minutes=3), bytearray(b"not an image at all")),  # null hash
-    ]
-    df = spark.createDataFrame(rows, "media_id long, ts timestamp, payload binary")
-    inp, out, ckpt = (str(tmp_path / d) for d in ("min", "mout", "mckpt"))
-    df.write.parquet(inp)
-    q = stream_image_dedup(spark, inp, out, ckpt)
-    q.awaitTermination(300)
-    got = spark.read.parquet(out)
-    ids = {r.media_id for r in got.collect()}
-    assert 2 in ids
-    assert len(ids & {0, 1}) == 1  # the re-encoded twin collapsed
-    assert 3 not in ids
-
-
-def test_stream_media_dedup_accepts_audio_rows(spark, tmp_path):
-    """WAV payloads flow through the same dedup stream as images (r3
-    verdict #5): non-re-quantizing re-encodes collapse, distinct audio
-    survives, and audio/image fingerprints coexist in one stream."""
-    import numpy as np
-
-    from img2table_spark.kernels.encoders import encode_png
-    from img2table_spark.kernels.wav import decode_wav, encode_wav
-    from img2table_spark.streaming.sessions import stream_image_dedup
-
-    base = dt.datetime(2026, 1, 1)
-    t = np.arange(4000) / 8000.0
-    tone_a = 0.5 * np.sin(2 * np.pi * 440.0 * t)[:, None]
-    tone_b = 0.25 * np.sin(2 * np.pi * 2200.0 * t)[:, None]
-    src = encode_wav(tone_a, 8000, bits=16)
-    widened = encode_wav(decode_wav(src)[2], 8000, float_fmt=True)  # lossless re-encode
-    img = np.repeat(
-        np.repeat(np.random.RandomState(5).randint(0, 256, (8, 8, 3)), 8, 0), 8, 1
-    ).astype(np.uint8)
-
-    rows = [
-        (0, base, bytearray(src)),
-        (1, base + dt.timedelta(minutes=1), bytearray(widened)),  # dup of 0
-        (2, base + dt.timedelta(minutes=2), bytearray(encode_wav(tone_b, 8000, bits=16))),
-        (3, base + dt.timedelta(minutes=3), bytearray(encode_png(img))),
-        (4, base + dt.timedelta(minutes=4), bytearray(b"RIFF\x04\x00\x00\x00WAVE")),  # corrupt
-    ]
-    df = spark.createDataFrame(rows, "media_id long, ts timestamp, payload binary")
-    inp, out, ckpt = (str(tmp_path / d) for d in ("ain", "aout", "ackpt"))
-    df.write.parquet(inp)
-    q = stream_image_dedup(spark, inp, out, ckpt)
-    q.awaitTermination(300)
-    ids = {r.media_id for r in spark.read.parquet(out).collect()}
-    assert len(ids & {0, 1}) == 1  # widened re-encode collapsed
-    assert {2, 3} <= ids           # distinct audio + the image both survive
-    assert 4 not in ids            # corrupt WAV -> null hash, filtered
-
-
 def test_stream_sessionize_file_sink_bounded_batches(spark, tmp_path):
     """The file-sink + maxFilesPerTrigger variant (r3 verdict #7): same
     sessions as the memory sink, ingested one source file per micro-batch
@@ -187,42 +119,3 @@ def test_stream_sessionize_file_sink_bounded_batches(spark, tmp_path):
     for c in range(2):
         assert (f"c{c}", 4, 0, 3) in got, got
         assert (f"c{c}", 3, 10, 12) in got, got
-
-
-def test_stream_media_dedup_accepts_video_rows(spark, tmp_path):
-    """AVI payloads flow through the same dedup stream as images and audio:
-    pixel-preserving re-encodes (32-bit BI_RGB rewrite of a 24-bit source)
-    collapse via kernels/avi.video_fingerprint, distinct videos survive,
-    compressed video yields a null hash (filtered, not fatal)."""
-    import struct
-
-    import numpy as np
-
-    from img2table_spark.kernels.avi import encode_avi
-    from img2table_spark.streaming.sessions import stream_image_dedup
-
-    base = dt.datetime(2026, 1, 1)
-    rng = np.random.default_rng(11)
-    clip_a = rng.integers(0, 256, size=(4, 6, 8, 3), dtype=np.uint8)
-    clip_b = rng.integers(0, 256, size=(4, 6, 8, 3), dtype=np.uint8)
-    src = encode_avi(clip_a, rate=10)
-    rewrapped = encode_avi(clip_a, rate=10, bitcount=32, with_idx1=False)
-    compressed = bytearray(encode_avi(clip_a, rate=10))
-    i = compressed.index(b"strf")
-    struct.pack_into("<4s", compressed, i + 8 + 16, b"MJPG")
-
-    rows = [
-        (0, base, bytearray(src)),
-        (1, base + dt.timedelta(minutes=1), bytearray(rewrapped)),   # dup of 0
-        (2, base + dt.timedelta(minutes=2), bytearray(encode_avi(clip_b, rate=10))),
-        (3, base + dt.timedelta(minutes=3), bytearray(bytes(compressed))),  # null hash
-    ]
-    df = spark.createDataFrame(rows, "media_id long, ts timestamp, payload binary")
-    inp, out, ckpt = (str(tmp_path / d) for d in ("vin", "vout", "vckpt"))
-    df.write.parquet(inp)
-    q = stream_image_dedup(spark, inp, out, ckpt)
-    q.awaitTermination(300)
-    ids = {r.media_id for r in spark.read.parquet(out).collect()}
-    assert len(ids & {0, 1}) == 1  # pixel-preserving rewrite collapsed
-    assert 2 in ids                # distinct clip survives
-    assert 3 not in ids            # compressed AVI -> null hash, filtered
