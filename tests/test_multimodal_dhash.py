@@ -1,5 +1,11 @@
-"""Perceptual image dedup: dHash kernel invariance across codecs and the
-banded-LSH near-dup pair operator end-to-end."""
+"""Perceptual checks of the image codecs through a test-side dHash.
+
+`decode_image_bytes` must give the same picture for PNG, BMP, HDR and EXR
+payloads of one image, and a picture close to it for a lossy progressive
+JPEG. A 64-bit difference hash (grayscale, area-mean resize to 9x8, sign of
+the horizontal gradient) compares them; its separation of unrelated images
+is checked too, so that an agreement of hashes means something.
+"""
 
 import numpy as np
 
@@ -10,8 +16,27 @@ from img2table_spark.kernels.encoders import (
 )
 from img2table_spark.kernels.exr import encode_exr
 from img2table_spark.kernels.hdr import encode_hdr
-from img2table_spark.kernels.phash import dhash64, hamming64
-from img2table_spark.operators.multimodal import dhash_neardup_pairs, image_dhash
+from img2table_spark.kernels.image_doc import decode_image_bytes
+
+_LUMA = np.array([0.299, 0.587, 0.114])
+
+
+def dhash64(img):
+    g = img.astype(np.float64) @ _LUMA
+    h, w = g.shape
+    ys = np.linspace(0, h, 9).astype(int)
+    xs = np.linspace(0, w, 10).astype(int)
+    grid = np.array(
+        [[g[ys[i] : ys[i + 1], xs[j] : xs[j + 1]].mean() for j in range(9)] for i in range(8)]
+    )
+    v = 0
+    for b in (grid[:, 1:] > grid[:, :-1]).flatten():
+        v = (v << 1) | int(b)
+    return v
+
+
+def hamming64(a, b):
+    return bin(a ^ b).count("1")
 
 
 def _img(seed, h=64, w=96):
@@ -25,15 +50,11 @@ def test_dhash_invariant_across_codecs():
     img = _img(1)
     base = dhash64(img)
     for enc in (encode_png, encode_bmp24, encode_hdr, encode_exr):
-        from img2table_spark.kernels.image_doc import decode_image_bytes
-
         assert hamming64(dhash64(decode_image_bytes(enc(img))), base) == 0, enc
 
 
 def test_dhash_robust_to_lossy_and_scale():
     img = _img(2)
-    from img2table_spark.kernels.image_doc import decode_image_bytes
-
     lossy = decode_image_bytes(encode_jpeg_progressive(img, qval=2))
     assert hamming64(dhash64(lossy), dhash64(img)) <= 6
     # 2x downscale (area mean) keeps the fingerprint
@@ -43,30 +64,3 @@ def test_dhash_robust_to_lossy_and_scale():
 
 def test_dhash_separates_unrelated_images():
     assert hamming64(dhash64(_img(3)), dhash64(_img(4))) > 10
-
-
-def test_dhash_neardup_pairs_spark(spark):
-    rows = []
-    # group A: 0 = PNG, 1 = BMP twin, 2 = lossy JPEG twin
-    a = _img(10)
-    rows.append((0, bytearray(encode_png(a))))
-    rows.append((1, bytearray(encode_bmp24(a))))
-    rows.append((2, bytearray(encode_jpeg_progressive(a, qval=2))))
-    # group B: 3 = HDR, 4 = EXR of a different image
-    b = _img(11)
-    rows.append((3, bytearray(encode_hdr(b))))
-    rows.append((4, bytearray(encode_exr(b))))
-    # unrelated
-    rows.append((5, bytearray(encode_png(_img(12)))))
-    # corrupt payload -> error row, excluded from pairs
-    rows.append((6, bytearray(b"\x89PNG\r\n\x1a\nnot really a png")))
-    df = spark.createDataFrame(rows, "media_id long, payload binary")
-
-    hashes = image_dhash(df, num_partitions=4)
-    rows_h = {r.media_id: (r.dhash, r.error) for r in hashes.collect()}
-    assert rows_h[6][0] is None and rows_h[6][1] is not None
-    assert all(rows_h[i][0] is not None for i in range(6))
-
-    pairs = {(r.id_a, r.id_b) for r in dhash_neardup_pairs(hashes, max_dist=6).collect()}
-    assert {(0, 1), (0, 2), (1, 2), (3, 4)} <= pairs
-    assert not any(5 in p or 6 in p for p in pairs)
