@@ -1,4 +1,4 @@
-"""HTML table render (K2) and its inverse parser (the HTML-payload fast path).
+"""HTML table render (K2) and its inverse parser (the HTML-payload path).
 
 Render parity target: ``ExtractedTable.html``
 (reference: src/img2table/tables/objects/extraction.py:144-174) including the
@@ -9,7 +9,8 @@ newlines — so HTML payloads embedded in transcript turns land in the same
 output schema as image/PDF payloads.
 
 Two parse routes give the same tables. ``parse_html_tables`` parses one
-payload. ``compact_html_tables`` takes a whole Arrow array of payloads at
+payload with the stdlib ``HTMLParser``; it is the one per-payload parser.
+``compact_html_tables`` takes a whole Arrow array of payloads at
 once with ``pyarrow.compute`` and NumPy, but answers only for the compact
 grammar (``COMPACT_TABLE_RE2``): one ``<table>`` of ``<tr>`` rows of
 ``<td>``/``<th>`` cells, each bare or carrying ``colspan="k"`` (k from 1
@@ -24,8 +25,6 @@ is left to ``parse_html_tables``.
 
 from __future__ import annotations
 
-import re
-from html import unescape
 from html.parser import HTMLParser
 from typing import NamedTuple
 
@@ -62,34 +61,6 @@ def _group_spans(table: Table) -> list[CellSpan]:
 def table_to_html(table: Table) -> str:
     """Compact single-line HTML (reference: extraction.py:162-172 before
     prettify)."""
-    # Fast path: no two grid positions share a value-identity key → every
-    # span is a 1×1 rectangle at its own position, so the general grouping /
-    # rectangle decomposition / per-row sort below reduces to emitting the
-    # grid row-major. Identical output by construction (each group of size
-    # one yields CellSpan(r, r, c, c, value); sorting by col_left preserves
-    # column order). Merged cells (repeated keys) take the general path.
-    seen: set = set()
-    fast = True
-    for row in table.rows:
-        for cell in row:
-            k = (cell.x1, cell.y1, cell.x2, cell.y2, cell.content)
-            if k in seen:
-                fast = False
-                break
-            seen.add(k)
-        if not fast:
-            break
-    if fast:
-        parts = ["<table>"]
-        for row in table.rows:
-            parts.append("<tr>")
-            for cell in row:
-                val = cell.content
-                val = "" if val is None else val.replace("\n", "<br>")
-                parts.append(f'<td colspan="1" rowspan="1">{val}</td>')
-            parts.append("</tr>")
-        parts.append("</table>")
-        return "".join(parts)
     spans = _group_spans(table)
     rows_html = []
     for r in range(table.nb_rows):
@@ -155,34 +126,24 @@ class _TableParser(HTMLParser):
         self._rowspan = 1
 
     def handle_starttag(self, tag, attrs):
-        # tag-frequency order (td ≫ tr ≫ table) — this is the per-turn hot
-        # loop; semantics identical to the original table-first chain.
-        if self._depth == 1:
-            if tag == "td" or tag == "th":
-                cs = rs = 1
-                for k, v in attrs:
-                    if k == "colspan":
-                        cs = _span_val(v)
-                    elif k == "rowspan":
-                        rs = _span_val(v)
-                self._colspan = cs
-                self._rowspan = rs
-                self._cell_parts = []
-                return
-            if tag == "tr":
-                self._row = []
-                return
-            if tag == "br":
-                if self._cell_parts is not None:
-                    self._cell_parts.append(_BR)
-                return
-            if tag != "table":
-                return
-            self._depth = 2
-        elif tag == "table":
+        if tag == "table":
             self._depth += 1
             if self._depth == 1:
                 self._rows = []
+        elif self._depth != 1:
+            return
+        elif tag == "td" or tag == "th":
+            self._colspan = self._rowspan = 1
+            for k, v in attrs:
+                if k == "colspan":
+                    self._colspan = _span_val(v)
+                elif k == "rowspan":
+                    self._rowspan = _span_val(v)
+            self._cell_parts = []
+        elif tag == "tr":
+            self._row = []
+        elif tag == "br" and self._cell_parts is not None:
+            self._cell_parts.append(_BR)
 
     def handle_endtag(self, tag):
         if self._depth != 1:
@@ -222,10 +183,6 @@ def _span_val(v) -> int:
 
 def _assemble_value(parts: list) -> str | None:
     """Collapse whitespace within each line; ``<br>`` separates lines."""
-    if len(parts) == 1 and parts[0] is not _BR:
-        # common case: one data chunk, no <br> — same normalization,
-        # no line assembly (" ".join(split) has no edge whitespace)
-        return " ".join(parts[0].split()) or None
     lines: list[list[str]] = [[]]
     for p in parts:
         if p is _BR:
@@ -237,144 +194,6 @@ def _assemble_value(parts: list) -> str | None:
     return value or None
 
 
-# Fast path: a single regex pass over tags driving the SAME handler object —
-# identical state-machine semantics to HTMLParser.feed without goahead()'s
-# per-character scanning (the UDF hot path: ~60% of per-turn CPU was inside
-# html.parser). Inputs with constructs the scanner does not model fall back
-# to HTMLParser: comments/doctype/PI are sniffed up front (_NEEDS_SLOW);
-# anything the scanner leaves unmatched mid-stream — a '<' + letter-or-slash
-# sequence surviving into character data (e.g. '</ td>', unterminated tags)
-# or a <script>/<style> CDATA element whose raw content must not be
-# tag-parsed — aborts the fast pass (_FastFallback) and the caller replays
-# the input through a FRESH HTMLParser.
-_FAST_TAG_RE = re.compile(
-    r"<(/?)([a-zA-Z][-.a-zA-Z0-9:_]*)\s*((?:[^>\"']|\"[^\"]*\"|'[^']*')*?)(/?)>"
-)
-_ATTR_RE = re.compile(
-    r"([a-zA-Z_:][-a-zA-Z0-9_:.]*)\s*(?:=\s*(\"[^\"]*\"|'[^']*'|[^\s\"'=<>`]+))?"
-)
-_NEEDS_SLOW = ("<!", "<?")
-_UNMATCHED_LT_RE = re.compile(r"<[a-zA-Z/]")
-
-
-class _FastFallback(Exception):
-    """Fast scanner met a construct only HTMLParser models; replay slow."""
-
-
-def _feed_fast(parser: "_TableParser", html: str) -> None:
-    """One regex pass with the _TableParser state machine INLINED into local
-    variables — the per-tag handler method dispatch was the dominant
-    remaining cost of the UDF hot path. Semantics are identical to driving
-    parser.handle_* per match: same fallback triggers, same state
-    transitions, same completed tables. Results land in parser.tables only
-    at the very end, so an aborted pass leaves the caller's fresh-parser
-    replay untouched (data outside an open cell is discarded unexamined,
-    exactly as handle_data would)."""
-    tables: list = []
-    depth = 0
-    rows = row = cell_parts = None
-    colspan = rowspan = 1
-    pos = 0
-    for m in _FAST_TAG_RE.finditer(html):
-        start = m.start()
-        if start > pos:
-            data = html[pos:start]
-            if "<" in data and _UNMATCHED_LT_RE.search(data):
-                raise _FastFallback
-            if cell_parts is not None and depth == 1:
-                if "&" in data:
-                    data = unescape(data)
-                cell_parts.append(data)
-        pos = m.end()
-        closing, name, attrtext, selfclose = m.groups()
-        name = name.lower()
-        if name == "script" or name == "style":
-            # HTMLParser switches to CDATA mode here (raw content up to the
-            # matching end tag); the regex scanner cannot
-            raise _FastFallback
-        if closing:
-            if depth != 1:
-                if name == "table" and depth > 0:
-                    depth -= 1
-            elif name == "td" or name == "th":
-                if cell_parts is not None:
-                    value = _assemble_value(cell_parts)
-                    if row is None:
-                        row = []
-                    row.append((value, colspan, rowspan))
-                    cell_parts = None
-            elif name == "tr":
-                if row is not None:
-                    rows.append(row)
-                    row = None
-            elif name == "table":
-                if rows is not None:
-                    tables.append(rows)
-                    rows = None
-                depth = 0
-            continue
-        # start tag
-        if depth == 1:
-            if name == "td" or name == "th":
-                cs = rs = 1
-                if attrtext:
-                    for am in _ATTR_RE.finditer(attrtext):
-                        k = am.group(1).lower()
-                        if k == "colspan" or k == "rowspan":
-                            v = am.group(2)
-                            if v is not None:
-                                if v[0] in "\"'":
-                                    v = v[1:-1]
-                                if "&" in v:
-                                    v = unescape(v)
-                            if k == "colspan":
-                                cs = _span_val(v)
-                            else:
-                                rs = _span_val(v)
-                colspan = cs
-                rowspan = rs
-                cell_parts = []
-            elif name == "tr":
-                row = []
-            elif name == "br":
-                if cell_parts is not None:
-                    cell_parts.append(_BR)
-            elif name == "table":
-                depth = 2
-        elif name == "table":
-            depth += 1
-            if depth == 1:
-                rows = []
-        if selfclose and (
-            name == "td" or name == "th" or name == "tr" or name == "table"
-        ):
-            # replay the end-tag transition for self-closed structural tags
-            if depth != 1:
-                if name == "table" and depth > 0:
-                    depth -= 1
-            elif name == "td" or name == "th":
-                if cell_parts is not None:
-                    value = _assemble_value(cell_parts)
-                    if row is None:
-                        row = []
-                    row.append((value, colspan, rowspan))
-                    cell_parts = None
-            elif name == "tr":
-                if row is not None:
-                    rows.append(row)
-                    row = None
-            elif name == "table":
-                if rows is not None:
-                    tables.append(rows)
-                    rows = None
-                depth = 0
-    if pos < len(html):
-        data = html[pos:]
-        if "<" in data and _UNMATCHED_LT_RE.search(data):
-            raise _FastFallback
-    parser.tables.extend(tables)
-
-
 def parse_html_tables(html: str) -> list[Table]:
     """Parse every top-level ``<table>`` into a Table grid.
 
@@ -384,48 +203,12 @@ def parse_html_tables(html: str) -> list[Table]:
     (col width 100, row height 20) since HTML has no pixel space.
     """
     parser = _TableParser()
-    if any(tok in html for tok in _NEEDS_SLOW):
-        parser.feed(html)
-        parser.close()
-    else:
-        try:
-            _feed_fast(parser, html)
-        except _FastFallback:
-            # the aborted fast pass mutated parser state — replay fresh
-            parser = _TableParser()
-            parser.feed(html)
-            parser.close()
+    parser.feed(html)
+    parser.close()
 
     out: list[Table] = []
     for raw_rows in parser.tables:
         if not raw_rows:
-            continue
-        # Fast path: every cell is 1×1 (no colspan/rowspan) — the occupied/
-        # pending bookkeeping below degenerates to "cell c of raw row r sits
-        # at grid (r, c)". Replicates the general path exactly: trailing
-        # all-empty raw rows are dropped (they contribute no occupied
-        # position), interior empty rows become filler rows, short rows are
-        # right-padded with None-content filler cells.
-        if all(cs == 1 and rs == 1 for raw_row in raw_rows for (_v, cs, rs) in raw_row):
-            n_rows = len(raw_rows)
-            while n_rows and not raw_rows[n_rows - 1]:
-                n_rows -= 1
-            if n_rows == 0:
-                continue
-            n_cols = max(len(raw_row) for raw_row in raw_rows[:n_rows])
-            rows = []
-            for r in range(n_rows):
-                raw_row = raw_rows[r]
-                y1 = r * HTML_ROW_H
-                y2 = y1 + HTML_ROW_H
-                row = [
-                    Cell(c * HTML_COL_W, y1, (c + 1) * HTML_COL_W, y2, content=v)
-                    for c, (v, _cs, _rs) in enumerate(raw_row)
-                ]
-                for c in range(len(raw_row), n_cols):
-                    row.append(Cell(c * HTML_COL_W, y1, (c + 1) * HTML_COL_W, y2, None))
-                rows.append(row)
-            out.append(Table(rows=rows))
             continue
         occupied: dict[tuple[int, int], Cell] = {}
         # (cell, (r1, c1, r2, c2)) — a list, not a dict keyed by Cell: until

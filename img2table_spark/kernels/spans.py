@@ -52,14 +52,13 @@ def create_all_rectangles(positions: list[tuple[int, int]], value: str | None) -
     Scan order and the strict improvement test replicate the reference so
     that tie-breaks are identical.
     """
-    if len(positions) == 1:  # unmerged cell — the overwhelmingly common case
-        r, c = positions[0]
-        return [CellSpan(r, r, c, c, value)]
     pos_set = set(positions)
-    min_col = min(p[1] for p in positions)
-    max_col = max(p[1] for p in positions)
-    min_row = min(p[0] for p in positions)
-    max_row = max(p[0] for p in positions)
+    rows, cols = zip(*positions)
+    min_row, max_row, min_col, max_col = min(rows), max(rows), min(cols), max(cols)
+    if len(pos_set) == (max_col - min_col + 1) * (max_row - min_row + 1):
+        # positions that fill their bounding box: the box is the one largest
+        # covered rectangle, so the scan below would pick it and stop
+        return [CellSpan(min_row, max_row, min_col, max_col, value)]
 
     largest_area = 0
     best_span: CellSpan | None = None

@@ -16,7 +16,8 @@ Payload dispatch by the ``tool`` column (FIXTURES.md §1):
                        between words) are parsed together by
                        ``compact_html_tables``, in Arrow and NumPy; the rest
                        (rowspans, entities, prettified markup) one at a
-                       time by ``parse_html_tables``. The rows are the same.
+                       time by ``parse_html_tables``, on the stdlib
+                       ``HTMLParser``. The two routes give the same rows.
   - image/*          → decode + bordered/borderless CV pipeline
                        (kernels.image — pure NumPy; PNG via stdlib zlib)
   - application/pdf  → native-text path (kernels.pdf) when available

@@ -9,6 +9,7 @@ filter that ``salted`` puts below the exchange."""
 
 import base64
 import random
+import signal
 from collections.abc import Iterator
 
 import numpy as np
@@ -294,6 +295,31 @@ def test_edge_batches_equal_the_reference():
     assert _n_batch_path(edge[-2]) == 2 and _n_batch_path(edge[-1]) == 2
 
 
+def test_large_merged_cell_extracts_in_bounded_time():
+    """One cell spanning 60 rows and 60 columns leaves the compact grammar;
+    its 3600 positions fill their box, so the renderer takes that box as the
+    cell's one rectangle instead of scanning every sub-rectangle of it
+    (O(R²C²·n), minutes at this size)."""
+    html = '<table><tr><td colspan="60" rowspan="60">x</td></tr></table>'
+
+    def timeout(signum, frame):
+        raise TimeoutError("a 60x60 merged cell took over 5 s")
+
+    previous = signal.signal(signal.SIGALRM, timeout)
+    signal.alarm(5)
+    try:
+        rows = extract_mod._extract_batch(_batch(["c0"], [0], [html], ["text/html"]), emit_errors=True)
+    finally:
+        signal.alarm(0)
+        signal.signal(signal.SIGALRM, previous)
+    [row] = rows.to_pylist()
+    assert (row["table_idx"], row["n_rows"], row["n_cols"]) == (0, 60, 60)
+    # HTML splits a span over both axes into columns
+    columns = '<td colspan="1" rowspan="60">x</td>' * 60
+    assert row["html"] == f"<table><tr>{columns}</tr>{'<tr></tr>' * 59}</table>"
+    assert {(c["x1"], c["y1"], c["x2"], c["y2"], c["value"]) for c in row["cells"]} == {(0, 0, 6000, 1200, "x")}
+
+
 # the dispatch rule extract_payload applies, and the cases it turns on
 TOOLS = ["text/html", "html", "HTML", "Text/Html", " text/html", "text/html; charset=utf-8", "html\n", "htm", "", None]
 
@@ -363,3 +389,29 @@ def test_salted_filters_non_payload_turns_below_the_exchange(spark):
     got = sorted(ext.collect(), key=key)
     assert got == sorted(unfiltered.collect(), key=key)
     assert [key(r) for r in got] == [("m1", 0, 0), ("m1", 1, 0), ("m1", 2, -1)]
+
+
+def test_document_transcripts_take_the_batch_path(spark, tmp_path):
+    """Every HTML turn ``transcripts_from_documents`` writes (the turns of
+    q01 and of the ``html_turns`` benchmark) is owned by
+    ``compact_html_tables``, so none of them reaches the per-turn parser."""
+    import pyarrow.parquet as pq
+
+    from img2table_spark.sources.transcripts import transcripts_from_documents
+
+    rng = random.Random(7)
+    vocab = "batch part spark line column order small sort fast value scan hash the a of".split()
+    # 330 documents reach every (rows, cols, merged, plain-text) combination
+    docs = [(d, " ".join(rng.choice(vocab) for _ in range(rng.randint(1, 30)))) for d in range(330)]
+    pq.write_table(
+        pa.table({"doc_id": pa.array([d for d, _ in docs], pa.int64()), "text": [t for _, t in docs]}),
+        tmp_path / "documents.parquet",
+    )
+    turns = transcripts_from_documents(spark, str(tmp_path)).select("text", "tool").collect()
+    text = pa.array([r["text"] for r in turns], pa.string())
+    html = _html_turns(text, pa.array([r["tool"] for r in turns], pa.string()))
+    assert len(html) == sum(1 for d, _ in docs if d % 11 != 3)
+    assert any('<td colspan="2">' in text[int(k)].as_py() for k in html)
+    compact = compact_html_tables(text.take(pa.array(html)))
+    assert compact.owned.all()
+    assert len(compact.src) == len(html)

@@ -112,36 +112,29 @@ def test_parse_prettified_whitespace():
     assert t.rows[0][0].content == "Test 1"
 
 
-def test_fast_path_matches_htmlparser_on_nonstandard_markup(monkeypatch):
-    """Constructs the regex scanner does not model must FALL BACK and end up
-    byte-identical to the HTMLParser path (ADVICE r2: hyphenated custom
-    elements, namespaced tags, bogus '</ td>' end tags, <script> CDATA whose
-    raw content must not be tag-parsed, stray unterminated '<')."""
-    import img2table_spark.kernels.html_io as H
+# markup outside the renderer's grammar, each with the tables it parses to
+NONSTANDARD_MARKUP = [
+    # a hyphenated custom element: its text joins the cell's
+    ("<table><tr><td><x-y>q</x-y>a</td></tr></table>", [[["qa"]]]),
+    # '</ td>' reads as the end tag td
+    ("<table><tr><td>v</ td><td>w</td></tr></table>", [[["v", "w"]]]),
+    # <script> content is CDATA: its tags are text, not cells
+    (
+        '<table><tr><td><script>var t = "<tr><td>fake</td></tr>";</script>x</td></tr></table>',
+        [[['var t = "<tr><td>fake</td></tr>";x']]],
+    ),
+    # after a stray '<', '<b < c</td>' is one start tag: the cell never
+    # closes, so the table holds no cell
+    ("<table><tr><td>a <b < c</td></tr></table>", []),
+    # a namespaced tag after the table
+    ("<table><tr><td>ns</td></tr></table><ns:tag>t</ns:tag>", [[["ns"]]]),
+    # a truncated payload: the table never closes
+    ("<table><tr><td>A</td><td", []),
+]
 
-    cases = [
-        "<table><tr><td><x-y>q</x-y>a</td></tr></table>",
-        "<table><tr><td>v</ td><td>w</td></tr></table>",
-        '<table><tr><td><script>var t = "<tr><td>fake</td></tr>";</script>x'
-        "</td></tr></table>",
-        "<table><tr><td>a <b < c</td></tr></table>",
-        "<table><tr><td>ns</td></tr></table><ns:tag>t</ns:tag>",
-        "<table><tr><td>A</td><td",  # truncated payload
-    ]
 
-    def flat(html):
-        return [
-            [[c.content for c in row] for row in t.rows]
-            for t in H.parse_html_tables(html)
-        ]
-
-    for html in cases:
-        got = flat(html)
-
-        def force_slow(parser, data):
-            raise H._FastFallback
-
-        monkeypatch.setattr(H, "_feed_fast", force_slow)
-        want = flat(html)
-        monkeypatch.undo()
-        assert got == want, html
+def test_nonstandard_markup():
+    """Nonstandard markup parses as ``html.parser`` reads it."""
+    for html, grids in NONSTANDARD_MARKUP:
+        got = [[[c.content for c in row] for row in t.rows] for t in parse_html_tables(html)]
+        assert got == grids, html
