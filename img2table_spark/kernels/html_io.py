@@ -61,12 +61,13 @@ def _group_spans(table: Table) -> list[CellSpan]:
 def table_to_html(table: Table) -> str:
     """Compact single-line HTML (reference: extraction.py:162-172 before
     prettify)."""
-    spans = _group_spans(table)
+    by_row: dict[int, list[CellSpan]] = {}
+    for s in _group_spans(table):
+        by_row.setdefault(s.top_row, []).append(s)
     rows_html = []
     for r in range(table.nb_rows):
-        row_spans = sorted((s for s in spans if s.top_row == r), key=lambda s: s.col_left)
         tds = []
-        for s in row_spans:
+        for s in sorted(by_row.get(r, ()), key=lambda s: s.col_left):
             val = "" if s.value is None else s.value.replace("\n", "<br>")
             tds.append(f'<td colspan="{s.colspan}" rowspan="{s.rowspan}">{val}</td>')
         rows_html.append("<tr>" + "".join(tds) + "</tr>")

@@ -19,7 +19,9 @@ import hashlib as _hashlib
 import math as _math
 from pathlib import Path
 
+import numpy as np
 import pandas as pd  # noqa: F401 — pandas_udf type hints resolve at module scope
+import pyarrow as pa  # arrow_udf type hints resolve at module scope too
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 from pyspark.storagelevel import StorageLevel
@@ -803,6 +805,8 @@ _IVF_SUB_SHIFT = 1 << 20  # split id = (bucket+1)·2^20 + sub + 1
 _IVF_MAX_LEVELS = 3  # 1 coarse level + up to 2 split rounds
 
 _QUANT_EXPR = "transform(embedding, x -> cast(floor(cast(x AS DOUBLE) * 1000000D + 0.5D) AS bigint))"
+# the same quantization over the IVF index's already-double `v` column
+_QUANT_V_EXPR = "transform(v, x -> cast(floor(x * 1000000D + 0.5D) AS bigint))"
 
 
 def _quantized_emb(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -833,8 +837,6 @@ def _sq_dists(pts, cents):
     integer-representable. Quantized embeddings are ±~6e5 here (10× margin);
     anything larger falls back to the O(m·k·d) int64 broadcast form, which
     is exact unconditionally."""
-    import numpy as np
-
     hi = max(
         int(np.abs(pts).max(initial=0)), int(np.abs(cents).max(initial=0))
     )
@@ -883,8 +885,6 @@ def train_ivf_centroids(spark: SparkSession, sf_dir: str) -> list:
     (int64 sums < 2^53), so numpy here and DuckDB's unrolled CTE replay in
     Q15/Q18's oracles produce identical centroids and buckets.
     """
-    import numpy as np
-
     emb = _quantized_emb(spark, sf_dir)
     n = emb.count()
     k = ivf_k_for(n)
@@ -899,28 +899,136 @@ def train_ivf_centroids(spark: SparkSession, sf_dir: str) -> list:
     return [[int(x) for x in c] for c in cents]
 
 
-def _sub_bucket_udf(bcb):
-    """Arrow UDF re-assigning rows of split buckets against their broadcast
-    sub-codebooks. A separate factory so each split round's UDF closes over
-    ITS OWN broadcast (a loop-local closure would rebind to the last round's
-    codebooks when Spark serializes the plan lazily)."""
-    import numpy as np
+# --------------------------------------------------------------------------
+# The vector-quantizer core of IVF, k-means (q87/q93), multi-probe (q96/q97)
+# and PQ (q102/q106): one Arrow UDF over a broadcast codebook running a NumPy
+# kernel, and one per-subspace Lloyd's trainer (k-means is its m = 1 case).
+# --------------------------------------------------------------------------
 
-    @F.pandas_udf("long")
-    def sub_bucket(bucket: pd.Series, qv: pd.Series) -> pd.Series:
-        out = bucket.to_numpy(dtype=np.int64).copy()
-        books = bcb.value
-        for b in np.unique(out):
-            book = books.get(int(b))
-            if book is None:
-                continue
-            m = out == b
-            pts = np.array(qv[m].tolist(), dtype=np.int64)
-            sub = _sq_dists(pts, book).argmin(axis=1).astype(np.int64)
-            out[m] = (b + 1) * _IVF_SUB_SHIFT + sub + 1
-        return pd.Series(out)
+def _nearest(pts, book):
+    """Nearest centroid id per row; ties → lowest id (np.argmin returns
+    the first minimum)."""
+    return _sq_dists(pts, book).argmin(axis=1).astype(np.int64)
 
-    return sub_bucket
+
+def _nearest_d2(pts, book):
+    """Squared distance to the nearest centroid per row."""
+    return _sq_dists(pts, book).min(axis=1).astype(np.int64)
+
+
+def _sub_bucket(pts, books, bucket):
+    """Re-assign rows of split buckets against their parent's sub-codebook
+    ({parent bucket: sub-centroid matrix}); other rows keep their bucket.
+    Split id = (bucket+1)·2^20 + sub + 1."""
+    out = bucket.astype(np.int64)
+    for b in np.unique(bucket):
+        book = books.get(int(b))
+        if book is not None:
+            m = bucket == b
+            out[m] = (b + 1) * _IVF_SUB_SHIFT + _nearest(pts[m], book) + 1
+    return out
+
+
+def _pq_codes(pts, book):
+    """(n, m) PQ codes: the per-subspace nearest code against an (m, k,
+    d/m) codebook."""
+    m, _, ds = book.shape
+    sub = pts.reshape(len(pts), m, ds)
+    return np.stack([_nearest(sub[:, s], book[s]) for s in range(m)], axis=1)
+
+
+def _pq_recon(pts, book):
+    """PQ reconstruction: each subvector replaced by its nearest code's
+    sub-centroid, book[s][codes[:, s]]."""
+    codes = _pq_codes(pts, book)
+    return book[np.arange(len(book)), codes].reshape(len(pts), -1)
+
+
+def _top_probes(pts, book):
+    """The _NPROBE nearest leaf ids per row against book = (ids, matrix):
+    one row-wise lexsort by distance, then bucket id."""
+    ids, mat = book
+    d2 = _sq_dists(pts, mat)
+    order = np.lexsort((np.broadcast_to(ids, d2.shape), d2), axis=1)
+    return ids[order[:, :_NPROBE]]
+
+
+def _vq_udf(book, kernel, return_type: str = "long"):
+    """Arrow UDF of ``kernel(pts, book, *extra)`` over a broadcast codebook:
+    pts is the (n, d) int64 view of a ``list<long>`` column, extra are
+    further long columns as NumPy arrays. The kernel's int64 result comes
+    back as ``long`` when 1-D, as ``list<long>`` when 2-D (return_type
+    "array<long>").
+
+    A factory so each UDF closes over ITS OWN broadcast (a loop-local
+    closure would rebind to the last round's codebooks when Spark
+    serializes the plan lazily)."""
+    bc = SparkSession.active().sparkContext.broadcast(book)
+
+    @F.arrow_udf(return_type)
+    def vq(qv: pa.Array, *extra: pa.Array) -> pa.Array:
+        import pyarrow.compute as pc
+
+        # list_flatten honors slice offsets (ListArray.values does not);
+        # Spark sends no empty batch, which reshape(0, -1) could not take
+        pts = pc.list_flatten(qv).to_numpy().reshape(len(qv), -1)
+        out = kernel(pts, bc.value, *(e.to_numpy() for e in extra))
+        if out.ndim == 1:
+            return pa.array(out)
+        offsets = np.arange(0, out.size + 1, out.shape[1], dtype=np.int32)
+        return pa.ListArray.from_arrays(offsets, out.ravel())
+
+    return vq
+
+
+def _lloyd_pq(emb: DataFrame, k: int, m: int, iters: int):
+    """Distributed fixed-point Lloyd's per subspace over emb's (vec_id, qv)
+    → the (m, k, d/m) int64 codebook. Seeds = the k rows with smallest
+    vec_id (split into m subvectors); each iteration assigns codes through
+    _pq_codes and sets every (subspace, code) centroid cell to
+    floor(sum/count) over one (sub, code, dim) aggregate (≤ k·d rows
+    collected); an empty cell keeps its centroid. m = 1 is plain k-means
+    (q87); the q87/q102 oracles replay it as unrolled CTEs. The training
+    projection is persisted for the loop and released once the codebook
+    is final."""
+    import math
+
+    emb = emb.select("vec_id", "qv").persist(StorageLevel.MEMORY_AND_DISK)
+    # bounded: exactly k rows (the q60/q61 driver-scalar contract)
+    seeds = emb.orderBy("vec_id").limit(k).collect()
+    S = np.array(
+        [r["qv"] for r in sorted(seeds, key=lambda r: r["vec_id"])],
+        dtype=np.int64,
+    )
+    d = S.shape[1]
+    if d % m:
+        raise ValueError(f"embedding dim {d} not divisible by m={m}")
+    dsub = d // m
+    # cents[s][c] = subvector s of seed vector c
+    cents = S.reshape(k, m, dsub).transpose(1, 0, 2).copy()
+    for _ in range(iters):
+        asg = emb.withColumn(
+            "codes", _vq_udf(cents, _pq_codes, "array<long>")(F.col("qv"))
+        )
+        cells = (
+            asg.select("codes", F.posexplode("qv").alias("dim", "x"))
+            .withColumn("code", F.expr(f"codes[cast(dim div {dsub} as int)]"))
+            .withColumn("sub", F.expr(f"dim div {dsub}"))
+            .groupBy("sub", "code", "dim")
+            .agg(F.sum("x").alias("sm"), F.count("*").alias("cnt"))
+            .collect()  # bounded: ≤ m·k·dsub = d·k rows
+        )
+        nxt = cents.copy()  # empty code cell keeps its centroid
+        for r in cells:
+            s, c = int(r["sub"]), int(r["code"])
+            # float-division floor — bit-identical to the oracles'
+            # FLOOR(CAST(sm AS DOUBLE) / cnt)
+            nxt[s][c][int(r["dim"]) - s * dsub] = int(
+                math.floor(int(r["sm"]) / int(r["cnt"]))
+            )
+        cents = nxt
+    emb.unpersist()
+    return cents
 
 
 def _ivf_split_oversized(spark: SparkSession, df: DataFrame) -> tuple[DataFrame, list]:
@@ -935,8 +1043,6 @@ def _ivf_split_oversized(spark: SparkSession, df: DataFrame) -> tuple[DataFrame,
     the codebooks (≤ Σk₂ rows ≈ MBs) and re-assign via a broadcast-codebook
     Arrow UDF — a pure map, zero shuffle. Returns the re-assigned frame and
     the per-round codebooks ({parent bucket: sub-centroid matrix} each)."""
-    import numpy as np
-
     levels: list = []
     for _ in range(_IVF_MAX_LEVELS - 1):
         sizes = (
@@ -984,9 +1090,8 @@ def _ivf_split_oversized(spark: SparkSession, df: DataFrame) -> tuple[DataFrame,
             for b, v in grouped.items()
         }
         levels.append(books)
-        bcb = spark.sparkContext.broadcast(books)
         df = df.withColumn(
-            "bucket", _sub_bucket_udf(bcb)(F.col("bucket"), F.col("qv"))
+            "bucket", _vq_udf(books, _sub_bucket)(F.col("qv"), F.col("bucket"))
         )
     return df, levels
 
@@ -1018,19 +1123,9 @@ def _ivf_index(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, list]:
     assignment UDF chain per plan arm; q18 alone pays it twice. At cluster
     scale this table is written once per index build (it IS the index)
     and read many times."""
-    import numpy as np
-
-    cents = train_ivf_centroids(spark, sf_dir)
-    bc = spark.sparkContext.broadcast(np.array(cents, dtype=np.int64))
-
-    @F.pandas_udf("long")
-    def nearest_cid(qv: pd.Series) -> pd.Series:
-        P = np.array(qv.tolist(), dtype=np.int64)  # (batch, d)
-        d2 = _sq_dists(P, bc.value)
-        return pd.Series(d2.argmin(axis=1).astype(np.int64))
-
+    cents = np.array(train_ivf_centroids(spark, sf_dir), dtype=np.int64)
     assigned = _quantized_emb(spark, sf_dir).withColumn(
-        "bucket", nearest_cid(F.col("qv"))
+        "bucket", _vq_udf(cents, _nearest)(F.col("qv"))
     )
     split, levels = _ivf_split_oversized(spark, assigned)
     out = (
@@ -6745,61 +6840,11 @@ def _km_final(spark: SparkSession, sf_dir: str):
     final assignment (vec_id, cid, d2) plus the trained centroid matrix,
     cached per (session, sf_dir) — the IVF-index discipline: q87's
     stats and q93's purity audit share one training pass."""
-    import math
-
-    import numpy as np
-
-    emb = (
-        _quantized_emb(spark, sf_dir)
-        .select("vec_id", "qv")
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    # bounded: exactly k rows (the q60/q61 driver-scalar contract)
-    seeds = emb.orderBy("vec_id").limit(_KM_K).collect()
-    cents = np.array(
-        [r["qv"] for r in sorted(seeds, key=lambda r: r["vec_id"])],
-        dtype=np.int64,
-    )
-
-    def _cid_udf(book):
-        bc = spark.sparkContext.broadcast(book)
-
-        @F.pandas_udf("long")
-        def cid_of(qv: pd.Series) -> pd.Series:
-            P = np.array(qv.tolist(), dtype=np.int64)
-            return pd.Series(
-                _sq_dists(P, bc.value).argmin(axis=1).astype(np.int64)
-            )
-
-        return cid_of
-
-    for _ in range(_KM_ITERS):
-        assigned = emb.withColumn("cid", _cid_udf(cents)(F.col("qv")))
-        cells = (
-            assigned.select("cid", F.posexplode("qv").alias("dim", "x"))
-            .groupBy("cid", "dim")
-            .agg(F.sum("x").alias("sm"), F.count("*").alias("cnt"))
-            .collect()  # bounded: ≤ k·d rows
-        )
-        nxt = cents.copy()  # empty cluster keeps its centroid
-        for r in cells:
-            nxt[int(r["cid"])][int(r["dim"])] = int(
-                math.floor(int(r["sm"]) / int(r["cnt"]))
-            )
-        cents = nxt
-
-    bcf = spark.sparkContext.broadcast(cents)
-
-    @F.pandas_udf("long")
-    def min_d2(qv: pd.Series) -> pd.Series:
-        P = np.array(qv.tolist(), dtype=np.int64)
-        return pd.Series(
-            _sq_dists(P, bcf.value).min(axis=1).astype(np.int64)
-        )
-
+    emb = _quantized_emb(spark, sf_dir)
+    cents = _lloyd_pq(emb, _KM_K, 1, _KM_ITERS)[0]
     final = (
-        emb.withColumn("cid", _cid_udf(cents)(F.col("qv")))
-        .withColumn("d2", min_d2(F.col("qv")))
+        emb.withColumn("cid", _vq_udf(cents, _nearest)(F.col("qv")))
+        .withColumn("d2", _vq_udf(cents, _nearest_d2)(F.col("qv")))
         .select("vec_id", "cid", "d2")
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
@@ -7804,8 +7849,6 @@ def _ivf_leaf_codebook(spark: SparkSession, sf_dir: str):
     whose buckets were never split + each split round's sub-centroids
     under their composite ids. Parents of split buckets hold no members
     (every row re-assigns to a child), so leaves partition the corpus."""
-    import numpy as np
-
     cents = train_ivf_centroids(spark, sf_dir)
     leaves = {cid: np.array(c, dtype=np.int64) for cid, c in enumerate(cents)}
     for books in _ivf_index(spark, sf_dir)[1]:
@@ -7826,33 +7869,16 @@ def _multiprobe_query_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     leaf-codebook Arrow argsort (top-p by exact integer distance, ties →
     lowest bucket id) — q96 scores candidates full-precision, q97 through
     the SQ8-reconstructed store; both fan each query to ≤ _NPROBE cells."""
-    import numpy as np
-
-    ids, mat = _ivf_leaf_codebook(spark, sf_dir)
-    bc = spark.sparkContext.broadcast((ids, mat))
-
-    @F.pandas_udf("array<long>")
-    def probe_buckets(qiv: pd.Series) -> pd.Series:
-        lids, lmat = bc.value
-        P = np.array(qiv.tolist(), dtype=np.int64)
-        d2 = _sq_dists(P, lmat)
-        out = []
-        for r in range(P.shape[0]):
-            order = np.lexsort((lids, d2[r]))  # dist asc, bucket id asc
-            out.append([int(x) for x in lids[order[: _NPROBE]]])
-        return pd.Series(out)
-
+    probes = _vq_udf(_ivf_leaf_codebook(spark, sf_dir), _top_probes, "array<long>")
     return (
         _ivf_assigned(spark, sf_dir)
         .filter(F.pmod("vec_id", F.lit(50)) == 0)
         .select(
             F.col("vec_id").alias("query_id"),
             F.col("vn").alias("qn"),
-            F.expr(
-                "transform(v, x -> cast(floor(x * 1000000D + 0.5D) AS bigint))"
-            ).alias("qiv"),
+            F.expr(_QUANT_V_EXPR).alias("qiv"),
         )
-        .withColumn("qb", F.explode(probe_buckets(F.col("qiv"))))
+        .withColumn("qb", F.explode(probes(F.col("qiv"))))
     )
 
 
@@ -7989,9 +8015,7 @@ def _sq8_store(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "vec_id",
             "bucket",
-            F.expr(
-                "transform(v, x -> cast(floor(x * 1000000D + 0.5D) AS bigint))"
-            ).alias("qv"),
+            F.expr(_QUANT_V_EXPR).alias("qv"),
         )
         .withColumn("mn_a", F.array(*[F.lit(v) for v in mn]))
         .withColumn("mx_a", F.array(*[F.lit(v) for v in mx]))
@@ -8509,8 +8533,6 @@ def _lid_fold_batches(batches):
     trigram-explode entirely — the q25 0-exchange class (VERDICT r5 #4)."""
     import hashlib
 
-    import numpy as np
-
     cache = _LID_TRI_CACHE
     md5 = hashlib.md5
     for pdf in batches:
@@ -8739,7 +8761,8 @@ FROM scored GROUP BY 1, 2, 3
 # (query full-precision) in the shared _adc_topk_hist frame, so recall
 # vs q96/q97 isolates pure PQ loss — q96 ≥ q97 ≥/≈ q102 is the
 # documented ladder (q96's full-precision re-rank is provably maximal
-# for the shared candidate set; see tests/test_ann_ladder.py).
+# for the shared candidate set; see
+# tests/test_query_edge_cases.py::test_ann_recall_ladder).
 # Cross-engine exactness: same int64 dot / IEEE-double cos expression
 # as q97; the oracle replays every Lloyd iteration as unrolled
 # MATERIALIZED CTEs (the q87 replay, per subspace).
@@ -8756,96 +8779,15 @@ def _pq_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     by its PQ reconstruction (concatenated nearest sub-centroids) + the
     reconstruction's squared norm. Codebooks trained on the quantized
     integer embeddings; cached per (session, sf_dir)."""
-    import math
-
-    import numpy as np
-
-    emb = (
-        _quantized_emb(spark, sf_dir)
-        .select("vec_id", "qv")
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    # bounded: exactly _PQ_K rows (the q87 seeding contract)
-    seeds = emb.orderBy("vec_id").limit(_PQ_K).collect()
-    S = np.array(
-        [r["qv"] for r in sorted(seeds, key=lambda r: r["vec_id"])],
-        dtype=np.int64,
-    )
-    d = S.shape[1]
-    if d % _PQ_M:
-        raise ValueError(f"embedding dim {d} not divisible by m={_PQ_M}")
-    dsub = d // _PQ_M
-    # cents[s][c] = subvector s of seed vector c
-    cents = S.reshape(_PQ_K, _PQ_M, dsub).transpose(1, 0, 2).copy()
-
-    def _codes_udf(book):
-        bc = spark.sparkContext.broadcast(book)
-
-        @F.pandas_udf("array<long>")
-        def codes_of(qv: pd.Series) -> pd.Series:
-            B = bc.value
-            P = np.array(qv.tolist(), dtype=np.int64)
-            m, _, ds = B.shape
-            out = np.empty((P.shape[0], m), dtype=np.int64)
-            for s in range(m):
-                out[:, s] = _sq_dists(
-                    P[:, s * ds : (s + 1) * ds], B[s]
-                ).argmin(axis=1)
-            return pd.Series(out.tolist())
-
-        return codes_of
-
-    for _ in range(_PQ_ITERS):
-        asg = emb.withColumn("codes", _codes_udf(cents)(F.col("qv")))
-        cells = (
-            asg.select("codes", F.posexplode("qv").alias("dim", "x"))
-            .withColumn(
-                "code", F.expr(f"codes[cast(dim div {dsub} as int)]")
-            )
-            .withColumn("sub", F.expr(f"dim div {dsub}"))
-            .groupBy("sub", "code", "dim")
-            .agg(F.sum("x").alias("sm"), F.count("*").alias("cnt"))
-            .collect()  # bounded: ≤ m·k·dsub = d·k rows
-        )
-        nxt = cents.copy()  # empty code cell keeps its centroid
-        for r in cells:
-            s, c = int(r["sub"]), int(r["code"])
-            # float-division floor — bit-identical to the oracle's
-            # FLOOR(CAST(sm AS DOUBLE) / cnt) (the q87 centroid rule)
-            nxt[s][c][int(r["dim"]) - s * dsub] = int(
-                math.floor(int(r["sm"]) / int(r["cnt"]))
-            )
-        cents = nxt
-
-    # the training-side projection is dead once the codebooks are final —
-    # release it instead of pinning it for the session (ADVICE r5)
-    emb.unpersist()
-
-    bcf = spark.sparkContext.broadcast(cents)
-
-    @F.pandas_udf("array<long>")
-    def recon_of(qv: pd.Series) -> pd.Series:
-        B = bcf.value
-        P = np.array(qv.tolist(), dtype=np.int64)
-        m, _, ds = B.shape
-        out = np.empty((P.shape[0], m * ds), dtype=np.int64)
-        for s in range(m):
-            codes = _sq_dists(P[:, s * ds : (s + 1) * ds], B[s]).argmin(
-                axis=1
-            )
-            out[:, s * ds : (s + 1) * ds] = B[s][codes]
-        return pd.Series(out.tolist())
-
+    cents = _lloyd_pq(_quantized_emb(spark, sf_dir), _PQ_K, _PQ_M, _PQ_ITERS)
     return (
         _ivf_assigned(spark, sf_dir)
         .select(
             "vec_id",
             "bucket",
-            F.expr(
-                "transform(v, x -> cast(floor(x * 1000000D + 0.5D) AS bigint))"
-            ).alias("qv"),
+            F.expr(_QUANT_V_EXPR).alias("qv"),
         )
-        .withColumn("rv", recon_of(F.col("qv")))
+        .withColumn("rv", _vq_udf(cents, _pq_recon, "array<long>")(F.col("qv")))
         .withColumn(
             "nb",
             F.expr(

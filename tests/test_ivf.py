@@ -12,13 +12,24 @@ n ≈ 32k. These tests pin the contract:
 - coarse buckets past _IVF_SPLIT_THRESHOLD are re-split by a second trained
   codebook until bounded, the DuckDB oracle CTE chain replays the split
   bit-exactly, and the gate-scale corpora provably never trigger it (so the
-  r3 oracle values are unchanged by construction).
+  r3 oracle values are unchanged by construction);
+- every nearest-centroid kernel of the Arrow VQ core returns what the
+  pandas_udf body it replaced returned, and the shared Lloyd's trainer at
+  one subspace is the former k-means loop.
 """
 
+import sys
+
 import numpy as np
+import pandas as pd
 import pytest
+from pyspark import cloudpickle
 
 from img2table_spark import queries as Q
+
+# Python workers cannot import a test module: the reference UDFs below
+# ship this module's functions whole
+cloudpickle.register_pickle_by_value(sys.modules[__name__])
 
 SF001 = "/root/testdata/sf0.001"
 SF01 = "/root/testdata/sf0.01"
@@ -142,3 +153,180 @@ def test_split_keeps_buckets_bounded_past_k_cap(spark, tmp_path):
         .collect()[0][0]
     )
     assert sizes <= Q._IVF_SPLIT_THRESHOLD
+
+
+# --------------------------------------------------------------------------
+# The Arrow VQ core (_vq_udf + NumPy kernels, _lloyd_pq) against the
+# pandas_udf bodies it replaced, kept here as references (same bodies, the
+# broadcast codebook passed in as an argument).
+# --------------------------------------------------------------------------
+
+
+def _ref_nearest(qv, bucket, book):
+    P = np.array(qv.tolist(), dtype=np.int64)
+    return pd.Series(Q._sq_dists(P, book).argmin(axis=1).astype(np.int64))
+
+
+def _ref_nearest_d2(qv, bucket, book):
+    P = np.array(qv.tolist(), dtype=np.int64)
+    return pd.Series(Q._sq_dists(P, book).min(axis=1).astype(np.int64))
+
+
+def _ref_sub_bucket(qv, bucket, books):
+    out = bucket.to_numpy(dtype=np.int64).copy()
+    for b in np.unique(out):
+        book = books.get(int(b))
+        if book is None:
+            continue
+        m = out == b
+        pts = np.array(qv[m].tolist(), dtype=np.int64)
+        sub = Q._sq_dists(pts, book).argmin(axis=1).astype(np.int64)
+        out[m] = (b + 1) * Q._IVF_SUB_SHIFT + sub + 1
+    return pd.Series(out)
+
+
+def _ref_top_probes(qv, bucket, book):
+    lids, lmat = book
+    P = np.array(qv.tolist(), dtype=np.int64)
+    d2 = Q._sq_dists(P, lmat)
+    out = []
+    for r in range(P.shape[0]):
+        order = np.lexsort((lids, d2[r]))  # dist asc, bucket id asc
+        out.append([int(x) for x in lids[order[: Q._NPROBE]]])
+    return pd.Series(out)
+
+
+def _ref_pq_codes(qv, bucket, B):
+    P = np.array(qv.tolist(), dtype=np.int64)
+    m, _, ds = B.shape
+    out = np.empty((P.shape[0], m), dtype=np.int64)
+    for s in range(m):
+        out[:, s] = Q._sq_dists(P[:, s * ds : (s + 1) * ds], B[s]).argmin(axis=1)
+    return pd.Series(out.tolist())
+
+
+def _ref_pq_recon(qv, bucket, B):
+    P = np.array(qv.tolist(), dtype=np.int64)
+    m, _, ds = B.shape
+    out = np.empty((P.shape[0], m * ds), dtype=np.int64)
+    for s in range(m):
+        codes = Q._sq_dists(P[:, s * ds : (s + 1) * ds], B[s]).argmin(axis=1)
+        out[:, s * ds : (s + 1) * ds] = B[s][codes]
+    return pd.Series(out.tolist())
+
+
+def _vq_case(name):
+    """(points, centroids) for one equivalence case; points are rows of a
+    Spark frame, centroids seed every kernel's codebook."""
+    rng = np.random.default_rng(sum(map(ord, name)))
+    if name == "random":
+        return rng.integers(-600_000, 600_000, (300, 8)), rng.integers(-600_000, 600_000, (12, 8))
+    if name == "duplicate_centroids":
+        # a small value range makes equal distances common; repeated
+        # centroid rows tie every point near them
+        cents = rng.integers(-3, 4, (6, 8))
+        return rng.integers(-3, 4, (300, 8)), np.vstack([cents, cents[::-1]])
+    if name == "d1":
+        return rng.integers(-50, 50, (200, 1)), rng.integers(-50, 50, (9, 1))
+    if name == "exact_int64":
+        # |x| >= 4e6 takes _sq_dists' exact int64 branch
+        return rng.integers(-9_000_000, 9_000_000, (200, 8)), rng.integers(-9_000_000, 9_000_000, (10, 8))
+    if name == "probe_past_leaves":
+        # 3 leaf cells < _NPROBE: every row gets all leaves, ordered
+        return rng.integers(-100, 100, (200, 4)), rng.integers(-100, 100, (3, 4))
+    assert name == "empty"
+    return np.zeros((0, 8), dtype=np.int64), rng.integers(-100, 100, (5, 8))
+
+
+def _ref_udf(ref, book, return_type):
+    from pyspark.sql import functions as F
+
+    @F.pandas_udf(return_type)
+    def body(qv: pd.Series, bucket: pd.Series) -> pd.Series:
+        return ref(qv, bucket, book)
+
+    return body
+
+
+@pytest.mark.parametrize(
+    "case", ["random", "duplicate_centroids", "d1", "exact_int64", "probe_past_leaves", "empty"]
+)
+def test_vq_kernels_match_pandas_bodies(spark, case):
+    """Every _vq_udf kernel, run through Spark, returns exactly what the
+    pandas_udf body it replaced returns on the same seeded int64 rows."""
+    from pyspark.sql import functions as F
+
+    pts, cents = _vq_case(case)
+    if case == "exact_int64":
+        assert np.abs(pts).max() >= 4_000_000
+    k, d = cents.shape
+    m = 4 if d % 4 == 0 else 1
+    pq_book = cents.reshape(k, m, d // m).transpose(1, 0, 2).copy()
+    ids = np.sort(np.random.default_rng(5).choice(1 << 22, k, replace=False)).astype(np.int64)
+    books = {0: cents[: max(1, k // 2)], 2: cents[k // 2 :]}
+    kernels = {
+        "nearest": (Q._nearest, _ref_nearest, cents, "long"),
+        "nearest_d2": (Q._nearest_d2, _ref_nearest_d2, cents, "long"),
+        "sub_bucket": (Q._sub_bucket, _ref_sub_bucket, books, "long"),
+        "top_probes": (Q._top_probes, _ref_top_probes, (ids, cents), "array<long>"),
+        "pq_codes": (Q._pq_codes, _ref_pq_codes, pq_book, "array<long>"),
+        "pq_recon": (Q._pq_recon, _ref_pq_recon, pq_book, "array<long>"),
+    }
+    df = spark.createDataFrame(
+        [(i, [int(x) for x in p], i % 3) for i, p in enumerate(pts)],
+        "id long, qv array<long>, bucket long",
+    )
+    cols = []
+    for name, (kernel, ref, book, rt) in kernels.items():
+        extra = [F.col("bucket")] if kernel is Q._sub_bucket else []
+        cols.append(_ref_udf(ref, book, rt)(F.col("qv"), F.col("bucket")).alias(f"want_{name}"))
+        cols.append(Q._vq_udf(book, kernel, rt)(F.col("qv"), *extra).alias(f"got_{name}"))
+    rows = df.select("id", *cols).orderBy("id").collect()
+    assert len(rows) == len(pts)
+    for name in kernels:
+        assert [r[f"got_{name}"] for r in rows] == [r[f"want_{name}"] for r in rows], name
+    if case == "probe_past_leaves":
+        assert all(len(r["got_top_probes"]) == k for r in rows)
+
+
+def _ref_kmeans(spark, emb, k, iters):
+    """q87's distributed Lloyd's loop as it stood before _lloyd_pq."""
+    import math
+
+    from pyspark.sql import functions as F
+
+    seeds = emb.orderBy("vec_id").limit(k).collect()
+    cents = np.array(
+        [r["qv"] for r in sorted(seeds, key=lambda r: r["vec_id"])],
+        dtype=np.int64,
+    )
+
+    def _cid_udf(book):
+        @F.pandas_udf("long")
+        def cid_of(qv: pd.Series) -> pd.Series:
+            return _ref_nearest(qv, None, book)
+
+        return cid_of
+
+    for _ in range(iters):
+        assigned = emb.withColumn("cid", _cid_udf(cents)(F.col("qv")))
+        cells = (
+            assigned.select("cid", F.posexplode("qv").alias("dim", "x"))
+            .groupBy("cid", "dim")
+            .agg(F.sum("x").alias("sm"), F.count("*").alias("cnt"))
+            .collect()
+        )
+        nxt = cents.copy()
+        for r in cells:
+            nxt[int(r["cid"])][int(r["dim"])] = int(math.floor(int(r["sm"]) / int(r["cnt"])))
+        cents = nxt
+    return cents
+
+
+def test_lloyd_pq_m1_is_the_kmeans_loop(spark):
+    """_lloyd_pq with one subspace reproduces q87's former k-means loop
+    bit for bit on the sf0.001 embeddings."""
+    emb = Q._quantized_emb(spark, SF001).select("vec_id", "qv")
+    book = Q._lloyd_pq(emb, Q._KM_K, 1, Q._KM_ITERS)
+    assert book.shape == (1, Q._KM_K, 64)
+    assert np.array_equal(book[0], _ref_kmeans(spark, emb, Q._KM_K, Q._KM_ITERS))

@@ -3,6 +3,7 @@
 tests/tables/objects/test_extraction.py), plus inverse-parser round trips."""
 
 import json
+import signal
 
 from img2table_spark.kernels.html_io import (
     extracted_table_html,
@@ -69,6 +70,31 @@ def test_html_round_trip_golden(ref_tests):
         assert got == want
         # Merged-cell identity is preserved: same span groups re-render equal.
         assert table_to_html(parsed) == html
+
+
+def test_render_is_linear_in_rows():
+    """A 4,000-row table renders in well under 2 s: each row takes the spans
+    bucketed under its top row instead of filtering every span (the
+    per-row filter took ~3 s at this size)."""
+    table = Table(
+        rows=[
+            [Cell(x1=c * 100, y1=r * 20, x2=c * 100 + 100, y2=r * 20 + 20, content=f"{r}-{c}") for c in range(10)]
+            for r in range(4000)
+        ]
+    )
+
+    def timeout(signum, frame):
+        raise TimeoutError("a 4,000-row table took over 2 s to render")
+
+    previous = signal.signal(signal.SIGALRM, timeout)
+    signal.alarm(2)
+    try:
+        html = table_to_html(table)
+    finally:
+        signal.alarm(0)
+        signal.signal(signal.SIGALRM, previous)
+    assert html.count("<tr>") == 4000
+    assert html.endswith('<td colspan="1" rowspan="1">3999-9</td></tr></table>')
 
 
 def test_parse_spans_and_br():
